@@ -42,7 +42,6 @@ churn cost.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -55,8 +54,10 @@ from ..functions.text import (
     spark_token_hashes,
     spark_tokens,
 )
+from ..manifest_log import ManifestLog
 from ..registry import register
-from ..sources.scans import atomic_json_dump, scratch_dir
+from ..sources.scans import scratch_dir
+from ..streaming.mor_cdc import ChangeFeedRetentionError, main_log
 from .incremental import BATCH_MOD, _bands
 from .minhash import BANDS, K, VERIFY_THRESHOLD, _band_key, _duck_sig
 
@@ -76,23 +77,11 @@ def _doc_sets(docs: DataFrame) -> DataFrame:
     )
 
 
-def _latest_ddcidx_version(index_dir: str) -> int:
-    vs = [
-        int(f[len("ddcidx-manifest-v"):-len(".json")])
-        for f in os.listdir(index_dir)
-        if f.startswith("ddcidx-manifest-v") and f.endswith(".json")
-    ] if os.path.isdir(index_dir) else []
-    return max(vs, default=0)
-
-
-def _load_ddcidx_manifest(
-    index_dir: str, version: int | None = None
-) -> dict:
-    v = version if version is not None else _latest_ddcidx_version(index_dir)
-    with open(
-        os.path.join(index_dir, f"ddcidx-manifest-v{v}.json")
-    ) as f:
-        return json.load(f)
+def ddcidx_log(index_dir: str) -> ManifestLog:
+    """The index's version chain (`ddcidx-manifest-v{N}.json`)."""
+    return ManifestLog(
+        index_dir, "ddcidx-manifest-v", ChangeFeedRetentionError
+    )
 
 
 def _write_index_files(
@@ -139,10 +128,7 @@ def build_dedup_cdc_index(
         "n_rows": corpus.count(),
         "n_tombstoned": 0,
     }
-    atomic_json_dump(
-        manifest,
-        os.path.join(index_dir, f"ddcidx-manifest-v{version}.json"),
-    )
+    ddcidx_log(index_dir).publish(version, manifest)
     return manifest
 
 
@@ -162,7 +148,7 @@ def maintain_dedup_index_from_feed(
         release_local_checkpoints,
     )
 
-    prev = _load_ddcidx_manifest(index_dir)
+    prev = ddcidx_log(index_dir).load()
     table_commit = int(prev["table_commit"]) + 1
     vnew = int(prev["version"]) + 1
     feed = mor_cdc_change_feed(spark, table_dir, table_commit)
@@ -187,9 +173,7 @@ def maintain_dedup_index_from_feed(
             table_commit=table_commit,
         )
         m["swapped"] = True
-        atomic_json_dump(
-            m, os.path.join(index_dir, f"ddcidx-manifest-v{vnew}.json")
-        )
+        ddcidx_log(index_dir).publish(vnew, m)
         return m
     vdir = os.path.join(index_dir, f"v{vnew}")
     bands = list(prev["bands"])
@@ -223,9 +207,7 @@ def maintain_dedup_index_from_feed(
         "n_rows": n_rows,
         "n_tombstoned": n_tomb,
     }
-    atomic_json_dump(
-        manifest, os.path.join(index_dir, f"ddcidx-manifest-v{vnew}.json")
-    )
+    ddcidx_log(index_dir).publish(vnew, manifest)
     release_local_checkpoints(getattr(feed, "_ckpt_intermediates", []))
     return manifest
 
@@ -240,7 +222,7 @@ def dedup_cdc_probe(
     (a row survives iff no strictly-later tombstone names its doc),
     batch bands broadcast onto the corpus band table, exact-Jaccard
     verify on the surviving token sets."""
-    m = _load_ddcidx_manifest(index_dir, version)
+    m = ddcidx_log(index_dir).load(version)
     corpus_bands = spark.read.parquet(*[e["path"] for e in m["bands"]])
     corpus_elems = spark.read.parquet(*[e["path"] for e in m["elems"]])
     if m["tombstones"]:
@@ -429,20 +411,18 @@ def dedup_index_cdc_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     final_commit = len(waves) + 1
     from ..streaming.mor_cdc import mor_cdc_commit, mor_cdc_init
 
-    if not os.path.exists(
-        os.path.join(table_dir, f"manifest-v{final_commit}.json")
-    ):
+    if not main_log(table_dir).exists(final_commit):
         mor_cdc_init(
             spark, corpus.withColumn("version", F.lit(0)), table_dir,
             "doc_id",
         )
         for i, wave in enumerate(waves):
             mor_cdc_commit(spark, wave, table_dir, 2 + i)
-    if _latest_ddcidx_version(index_dir) < final_commit:
-        if _latest_ddcidx_version(index_dir) < 1:
+    if ddcidx_log(index_dir).head() < final_commit:
+        if ddcidx_log(index_dir).head() < 1:
             build_dedup_cdc_index(spark, corpus, index_dir)
         while (
-            _load_ddcidx_manifest(index_dir)["table_commit"]
+            ddcidx_log(index_dir).load()["table_commit"]
             < final_commit
         ):
             maintain_dedup_index_from_feed(spark, table_dir, index_dir)

@@ -186,7 +186,6 @@ def dedup_incremental_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 def build_minhash_index(corpus_sets: DataFrame, table_dir: str) -> dict:
     """Commit the corpus dedup index: the banded signature table
     (band, bkey, doc_id) and the token-set table (doc_id, elems)."""
-    import json as _json
     import os as _os
 
     bands_path = _os.path.join(table_dir, "v1", "bands")
@@ -197,10 +196,10 @@ def build_minhash_index(corpus_sets: DataFrame, table_dir: str) -> dict:
     corpus_sets.selectExpr("doc_id AS idc", "elems AS ec").write.mode(
         "overwrite"
     ).parquet(elems_path)
-    from ..sources.scans import atomic_json_dump
+    from ..manifest_log import ManifestLog
 
     manifest = {"version": 1, "bands": bands_path, "elems": elems_path}
-    atomic_json_dump(manifest, _os.path.join(table_dir, "manifest-v1.json"))
+    ManifestLog(table_dir).publish(1, manifest)
     return manifest
 
 

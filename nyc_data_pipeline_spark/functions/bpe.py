@@ -45,15 +45,15 @@ text-pipeline coverage (SURVEY §2 extension), sibling of
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..manifest_log import ManifestLog
 from ..registry import register
-from ..sources.scans import atomic_json_dump, scratch_dir
+from ..sources.scans import scratch_dir
 from .text import duck_tokens, spark_tokens
 
 TOP_PAIRS = 10
@@ -426,9 +426,7 @@ def build_bpe_index(
         "merges": merges_path,
         "vocab": vocab_path,
     }
-    atomic_json_dump(
-        manifest, os.path.join(table_dir, f"manifest-v{version}.json")
-    )
+    ManifestLog(table_dir).publish(version, manifest)
     return manifest
 
 
@@ -437,10 +435,7 @@ def load_bpe_index(
 ) -> tuple[DataFrame, DataFrame]:
     """(merge table, tokenized vocabulary) from the manifest — parquet
     scans only; nothing is recomputed from the raw corpus."""
-    with open(
-        os.path.join(table_dir, f"manifest-v{version}.json")
-    ) as f:
-        manifest = json.load(f)
+    manifest = ManifestLog(table_dir).load(version)
     return (
         spark.read.parquet(manifest["merges"]),
         spark.read.parquet(manifest["vocab"]),
@@ -452,7 +447,7 @@ def _bpe_index_dir(spark: SparkSession, sf_dir: str) -> str:
     (each must be self-contained under the driver contract; whichever
     runs first pays the one training pass)."""
     table_dir = scratch_dir("bpe_index", sf_dir)
-    if not os.path.exists(os.path.join(table_dir, "manifest-v1.json")):
+    if not ManifestLog(table_dir).exists(1):
         build_bpe_index(load_table(spark, sf_dir, "documents"), table_dir)
     return table_dir
 

@@ -43,15 +43,16 @@ crawl stream without per-crawl df rebuilds.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table, persist_scoped
+from ..manifest_log import ManifestLog
 from ..registry import register
-from ..sources.scans import atomic_json_dump, scratch_dir
+from ..sources.scans import scratch_dir
+from ..streaming.mor_cdc import ChangeFeedRetentionError, main_log
 from .bm25 import _ALL_TERMS, _CONTRIB, _IDF, BM25_QUERIES, BM25_TOPK
 from .text import duck_tokens, spark_tokens
 
@@ -65,23 +66,9 @@ TIX_INS_SUFFIX = "stream join arrival"  # new docs carry query terms
 TIX_SWAP_FRACTION = 0.5
 
 
-def _latest_tidx_version(index_dir: str) -> int:
-    vs = [
-        int(f[len("tidx-manifest-v"):-len(".json")])
-        for f in os.listdir(index_dir)
-        if f.startswith("tidx-manifest-v") and f.endswith(".json")
-    ] if os.path.isdir(index_dir) else []
-    return max(vs, default=0)
-
-
-def _load_tidx_manifest(
-    index_dir: str, version: int | None = None
-) -> dict:
-    v = version if version is not None else _latest_tidx_version(index_dir)
-    with open(
-        os.path.join(index_dir, f"tidx-manifest-v{v}.json")
-    ) as f:
-        return json.load(f)
+def tidx_log(index_dir: str) -> ManifestLog:
+    """The index's version chain (`tidx-manifest-v{N}.json`)."""
+    return ManifestLog(index_dir, "tidx-manifest-v", ChangeFeedRetentionError)
 
 
 def _doc_terms(docs: DataFrame) -> DataFrame:
@@ -126,10 +113,7 @@ def build_text_index(
         "n_base_terms": int(n_terms),
         "n_delta_rows": 0,
     }
-    atomic_json_dump(
-        manifest,
-        os.path.join(index_dir, f"tidx-manifest-v{version}.json"),
-    )
+    tidx_log(index_dir).publish(version, manifest)
     return manifest
 
 
@@ -148,7 +132,7 @@ def maintain_text_index_from_feed(
         release_local_checkpoints,
     )
 
-    prev = _load_tidx_manifest(index_dir)
+    prev = tidx_log(index_dir).load()
     table_commit = int(prev["table_commit"]) + 1
     vnew = int(prev["version"]) + 1
     feed = mor_cdc_change_feed(spark, table_dir, table_commit)
@@ -201,9 +185,7 @@ def maintain_text_index_from_feed(
             table_commit=table_commit,
         )
         m["swapped"] = True
-        atomic_json_dump(
-            m, os.path.join(index_dir, f"tidx-manifest-v{vnew}.json")
-        )
+        tidx_log(index_dir).publish(vnew, m)
         return m
     manifest = {
         "version": vnew,
@@ -214,9 +196,7 @@ def maintain_text_index_from_feed(
         "n_base_terms": int(prev["n_base_terms"]),
         "n_delta_rows": n_delta,
     }
-    atomic_json_dump(
-        manifest, os.path.join(index_dir, f"tidx-manifest-v{vnew}.json")
-    )
+    tidx_log(index_dir).publish(vnew, manifest)
     return manifest
 
 
@@ -226,7 +206,7 @@ def text_index_df(
     """The maintained df table (t, df): one multi-path scan over the
     manifest-listed base+delta files, summed; terms whose df folded to
     zero (every holder deleted) leave the lexicon."""
-    m = _load_tidx_manifest(index_dir, version)
+    m = tidx_log(index_dir).load(version)
     return (
         spark.read.parquet(*[e["path"] for e in m["dfs"]])
         .groupBy("t")
@@ -252,7 +232,7 @@ def bm25_topk_from_index(
     index scan; stats are manifest integers.  Integer-exact micro
     scores — the same `_IDF`/`_CONTRIB` algebra as the corpus-pass
     build, so a stale df anywhere breaks the oracle hash."""
-    m = _load_tidx_manifest(index_dir)
+    m = tidx_log(index_dir).load()
     toks = docs.selectExpr("doc_id", f"{spark_tokens('text')} AS tk")
     # dl rides the explode (functionally dependent on doc_id, so the
     # extra grouping key changes nothing) — at 100 TB this removes
@@ -429,19 +409,17 @@ def text_index_cdc_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     index_dir = scratch_dir("text_idx_index", sf_dir)
     waves = _text_waves(d)
     final_commit = len(waves) + 1
-    if not os.path.exists(
-        os.path.join(table_dir, f"manifest-v{final_commit}.json")
-    ):
+    if not main_log(table_dir).exists(final_commit):
         mor_cdc_init(
             spark, d.withColumn("version", F.lit(0)), table_dir, "doc_id"
         )
         for i, wave in enumerate(waves):
             mor_cdc_commit(spark, wave, table_dir, 2 + i)
-    if _latest_tidx_version(index_dir) < final_commit:
-        if _latest_tidx_version(index_dir) < 1:
+    if tidx_log(index_dir).head() < final_commit:
+        if tidx_log(index_dir).head() < 1:
             build_text_index(spark, d, index_dir)
         while (
-            _load_tidx_manifest(index_dir)["table_commit"] < final_commit
+            tidx_log(index_dir).load()["table_commit"] < final_commit
         ):
             # the fixture corpus has a ~31-term vocabulary, so any
             # wave's delta clears the production 0.5 debt ratio; pin

@@ -30,7 +30,9 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_table
 from ..exprs import dec, sql_dsum
+from ..manifest_log import ManifestLog, RetentionError
 from ..registry import register
+from ..streaming.mor_cdc import main_log
 
 MICRO = 1_000_000
 
@@ -589,8 +591,6 @@ def build_join_view(
     from it with ONE dim join (never a second fact pass)."""
     import os as _os
 
-    from ..sources.scans import atomic_json_dump
-
     spark = a1.sparkSession
     vdir = _os.path.join(table_dir, f"v{version}")
     cust_path = _os.path.join(vdir, "cust_view")
@@ -613,9 +613,7 @@ def build_join_view(
     )
     manifest = {"version": version, "cust_view": cust_path,
                 "seg_view": seg_path}
-    atomic_json_dump(
-        manifest, _os.path.join(table_dir, f"manifest-v{version}.json")
-    )
+    view_log(table_dir).publish(version, manifest)
     return manifest
 
 
@@ -719,19 +717,15 @@ def ivm_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate one-shot — a hash match proves maintenance == recompute,
     including customer deletes cascading over that customer's orders
     and the ΔA⋈ΔB cross term (a deleted order of a moved customer)."""
-    import json as _json
-    import os as _os
-
     from ..sources.scans import scratch_dir
 
     table_dir = scratch_dir("ivm_join", sf_dir)
     a1 = _ivm_a1(spark, sf_dir)
     b1 = _ivm_b1(spark, sf_dir)
-    mpath = _os.path.join(table_dir, "manifest-v1.json")
-    if not _os.path.exists(mpath):
+    log = view_log(table_dir)
+    if not log.exists(1):
         build_join_view(a1, b1, table_dir)
-    with open(mpath) as f:
-        m = _json.load(f)
+    m = log.load(1)
     seg_v1 = spark.read.parquet(m["seg_view"])
     cust_v1 = spark.read.parquet(m["cust_view"])
     b2 = b1.filter(F.col("c") % IVM_B_DEL_MOD != 0).withColumn(
@@ -780,13 +774,7 @@ def _resolve_view_fields(
     the current name back to the canonical one.  Legacy chains (no
     field ids) return (None, identity): by-name behavior, unchanged.
     """
-    import json as _json
-    import os as _os
-
-    with open(
-        _os.path.join(table_dir, f"manifest-v{version}.json")
-    ) as f:
-        schema = _json.load(f).get("schema")
+    schema = main_log(table_dir).load(version).get("schema")
     if schema is None:
         return None, {c: c for c in canon}
     by_name = {f["name"]: f["id"] for f in schema}
@@ -955,10 +943,9 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads commit N-1's artifacts plus the epoch's feeds, never a fact
     table — the O(changes) refresh loop a 100 TB dashboard needs,
     measured flat under fact growth by scripts/ivm_probe.py."""
-    import json as _json
     import os as _os
 
-    from ..sources.scans import atomic_json_dump, scratch_dir
+    from ..sources.scans import scratch_dir
     from ..streaming.mor_cdc import (
         mor_cdc_change_feed,
         mor_cdc_commit,
@@ -973,12 +960,10 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     a1 = _ivm_a1(spark, sf_dir)
     b1 = _ivm_b1(spark, sf_dir)
 
-    final_manifest = _os.path.join(view_dir, "manifest-v3.json")
-    if not _os.path.exists(final_manifest):
+    view = view_log(view_dir)
+    if not view.exists(3):
         # --- the two CDC tables: base commits + change epochs
-        if not _os.path.exists(
-            _os.path.join(a_dir, "manifest-v3.json")
-        ):
+        if not main_log(a_dir).exists(3):
             mor_cdc_init(
                 spark, a1.withColumn("version", F.lit(0)), a_dir, "k"
             )
@@ -1008,9 +993,7 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             )
             mor_cdc_commit(spark, wave_a2, a_dir, 3)
-        if not _os.path.exists(
-            _os.path.join(b_dir, "manifest-v2.json")
-        ):
+        if not main_log(b_dir).exists(2):
             mor_cdc_init(
                 spark, b1.withColumn("version", F.lit(0)), b_dir, "c"
             )
@@ -1031,23 +1014,18 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             mor_cdc_commit(spark, wave_b, b_dir, 2)
 
         # --- view v1: built over the two v1 table reads
-        if not _os.path.exists(
-            _os.path.join(view_dir, "manifest-v1.json")
-        ):
+        if not view.exists(1):
             build_join_view(
                 mor_cdc_read(spark, a_dir, 1).select("k", "c", "cents"),
                 mor_cdc_read(spark, b_dir, 1).select("c", "segment"),
                 view_dir,
             )
-        with open(_os.path.join(view_dir, "manifest-v1.json")) as f:
-            m1 = _json.load(f)
+        m1 = view.load(1)
         if "a_version" not in m1:
             # cursor columns: which table commits this view reflects —
             # what catch_up_join_view advances from
             m1.update({"a_version": 1, "b_version": 1})
-            atomic_json_dump(
-                m1, _os.path.join(view_dir, "manifest-v1.json")
-            )
+            view.publish(1, m1)
 
         # --- refresh 1: ΔA₁ only (B unchanged); advance BOTH views.
         # The signed delta is O(changes): materialize it ONCE (it
@@ -1075,21 +1053,17 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust_v2.write.mode("overwrite").parquet(
             _os.path.join(v2, "cust_view")
         )
-        atomic_json_dump(
-            {
-                "version": 2,
-                "seg_view": _os.path.join(v2, "seg_view"),
-                "cust_view": _os.path.join(v2, "cust_view"),
-                "a_version": 2,
-                "b_version": 1,
-            },
-            _os.path.join(view_dir, "manifest-v2.json"),
-        )
+        view.publish(2, {
+            "version": 2,
+            "seg_view": _os.path.join(v2, "seg_view"),
+            "cust_view": _os.path.join(v2, "cust_view"),
+            "a_version": 2,
+            "b_version": 1,
+        })
 
         # --- refresh 2: ΔA₂ + ΔB, against the v2 ARTIFACTS (the
         # auxiliary maintained in refresh 1 is load-bearing here)
-        with open(_os.path.join(view_dir, "manifest-v2.json")) as f:
-            m2 = _json.load(f)
+        m2 = view.load(2)
         feed_a2 = mor_cdc_change_feed(spark, a_dir, 3)
         da2 = _feed_to_signed_a(feed_a2).localCheckpoint(eager=True)
         release_local_checkpoints(
@@ -1113,30 +1087,25 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         cust_v3.write.mode("overwrite").parquet(
             _os.path.join(v3, "cust_view")
         )
-        atomic_json_dump(
-            {
-                "version": 3,
-                "seg_view": _os.path.join(v3, "seg_view"),
-                "cust_view": _os.path.join(v3, "cust_view"),
-                "a_version": 3,
-                "b_version": 2,
-            },
-            final_manifest,
-        )
+        view.publish(3, {
+            "version": 3,
+            "seg_view": _os.path.join(v3, "seg_view"),
+            "cust_view": _os.path.join(v3, "cust_view"),
+            "a_version": 3,
+            "b_version": 2,
+        })
         # v3 artifacts written: the lazy B feed's sidecars and the
         # frozen signed deltas have no remaining consumers
         release_local_checkpoints(
             getattr(feed_b, "_ckpt_intermediates", [])
         )
         release_local_checkpoints([da1, da2])
-    with open(final_manifest) as f:
-        m3 = _json.load(f)
-    return spark.read.parquet(m3["seg_view"]).select(
+    return spark.read.parquet(view.load(3)["seg_view"]).select(
         "segment", "n_rows", "sum_cents"
     )
 
 
-class ViewRetentionError(RuntimeError):
+class ViewRetentionError(RetentionError):
     """Requested view refresh is outside the retained window: a
     `view_vacuum` reclaimed that refresh's manifest and artifacts, so
     neither its cursors nor its materialized pair exist any more.  The
@@ -1145,31 +1114,15 @@ class ViewRetentionError(RuntimeError):
     named, never a mid-plan missing-file failure."""
 
 
+def view_log(view_dir: str) -> ManifestLog:
+    """A view's refresh chain (`manifest-v{N}.json` in view_dir)."""
+    return ManifestLog(view_dir, "manifest-v", ViewRetentionError)
+
+
 def load_view_manifest(view_dir: str, version: int) -> dict:
-    """Read one view refresh's manifest, distinguishing 'vacuumed'
-    (below the retained floor → named retention error) from 'never
-    committed' (above the chain head → ValueError)."""
-    import json as _json
-    import os as _os
-
-    p = _os.path.join(view_dir, f"manifest-v{version}.json")
-    if _os.path.exists(p):
-        with open(p) as f:
-            return _json.load(f)
-    from ..streaming.mor_cdc import main_manifest_versions
-
-    retained = main_manifest_versions(view_dir)
-    if retained and version < min(retained):
-        raise ViewRetentionError(
-            f"view refresh v{version} of {view_dir} was reclaimed by "
-            f"view_vacuum (retained floor: v{min(retained)}); refresh "
-            "history is readable only within the retained window"
-        )
-    raise ValueError(
-        f"view refresh v{version} of {view_dir} was never committed "
-        f"(chain head: v{max(retained)})" if retained
-        else f"{view_dir} has no view manifests"
-    )
+    """Read one view refresh's manifest: a vacuumed refresh raises
+    `ViewRetentionError`, one never committed `ValueError`."""
+    return view_log(view_dir).load(version)
 
 
 def view_vacuum(view_dir: str, retain: int = 1) -> dict:
@@ -1182,18 +1135,14 @@ def view_vacuum(view_dir: str, retain: int = 1) -> dict:
     Reads of reclaimed refreshes afterwards raise the named
     `ViewRetentionError` (see load_view_manifest); the LATEST refresh
     — cursors included — is untouched, so catch-up keeps working."""
-    import json as _json
     import os as _os
     import shutil as _shutil
 
-    from ..streaming.mor_cdc import main_manifest_versions
-
-    versions = main_manifest_versions(view_dir)
-    keep = set(versions[-retain:])
+    log = view_log(view_dir)
+    keep = log.versions()[-retain:]
     reachable: set[str] = set()
     for v in keep:
-        with open(_os.path.join(view_dir, f"manifest-v{v}.json")) as f:
-            m = _json.load(f)
+        m = log.load(v)
         for k in ("seg_view", "cust_view"):
             reachable.add(_os.path.dirname(_os.path.abspath(m[k])))
     removed_dirs = 0
@@ -1206,14 +1155,10 @@ def view_vacuum(view_dir: str, retain: int = 1) -> dict:
         ):
             _shutil.rmtree(full)
             removed_dirs += 1
-    removed_manifests = 0
-    for v in versions:
-        if v not in keep:
-            _os.unlink(_os.path.join(view_dir, f"manifest-v{v}.json"))
-            removed_manifests += 1
+    removed = log.expire(keep[0]) if keep else []
     return {
-        "retained": sorted(keep),
-        "manifests_removed": removed_manifests,
+        "retained": keep,
+        "manifests_removed": len(removed),
         "dirs_removed": removed_dirs,
     }
 
@@ -1253,10 +1198,8 @@ def catch_up_join_view(
     widen of a projected column mid-catch-up folds exactly like any
     other span, with the renamed column aliased back to the view's
     canonical name.  Evolution commits contribute empty feeds."""
-    import json as _json
     import os as _os
 
-    from ..sources.scans import atomic_json_dump
     from ..streaming.mor_cdc import (
         mor_cdc_change_feed_span,
         mor_cdc_read,
@@ -1277,8 +1220,7 @@ def catch_up_join_view(
         return v
 
     cur = latest(view_dir)
-    with open(_os.path.join(view_dir, f"manifest-v{cur}.json")) as f:
-        m = _json.load(f)
+    m = view_log(view_dir).load(cur)
     a_from, b_from = int(m.get("a_version", 1)), int(m.get("b_version", 1))
     # catch up to an explicit bound when given (the CATALOG-visible
     # version — see catch_up_view_from_catalog) instead of whatever
@@ -1373,9 +1315,7 @@ def catch_up_join_view(
         manifest["a_fields"] = a_fields
     if b_fields is not None:
         manifest["b_fields"] = b_fields
-    atomic_json_dump(
-        manifest, _os.path.join(view_dir, f"manifest-v{cur + 1}.json")
-    )
+    view_log(view_dir).publish(cur + 1, manifest)
     # both view artifacts are written: the lazy B feeds' checkpointed
     # sidecars (and the frozen ΔA) have no remaining consumers —
     # release them now rather than at driver GC (ADVICE r11: a
@@ -1397,9 +1337,6 @@ def catch_up_view_from_catalog(
     manifest) instead of one per table.  A table commit that published
     but whose catalog flip is pending (the txn crash window) is
     invisible here exactly as it is to every catalog reader."""
-    import os as _os
-
-    from ..sources.scans import atomic_json_dump
     from ..streaming.txn import catalog_load
 
     cat = catalog_load(catalog_dir, version)
@@ -1413,10 +1350,7 @@ def catch_up_view_from_catalog(
         # the early-return path re-stamps the same manifest in place)
         m = dict(m)
         m["catalog_version"] = cat["version"]
-        atomic_json_dump(
-            m,
-            _os.path.join(view_dir, f"manifest-v{m['version']}.json"),
-        )
+        view_log(view_dir).publish(m["version"], m)
     return m
 
 
@@ -1454,9 +1388,9 @@ def catalog_read_view_as_of(
     read the view AT THAT SNAPSHOT — the dashboard state a reader saw
     at that instant, guaranteed consistent with the base tables the
     same catalog version pins."""
-    from ..sources.timetravel import resolve_version_as_of
+    from ..streaming.txn import catalog_log
 
-    v = resolve_version_as_of(catalog_dir, ts_us, prefix="catalog-v")
+    v = catalog_log(catalog_dir).as_of(ts_us)
     return catalog_read_view(spark, catalog_dir, view_name, v)
 
 
@@ -1548,9 +1482,6 @@ def ivm_catalog_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     (and a later flip delivers it through the same API, pytest-pinned).
     The oracle recomputes the join over the catalog-visible states
     only."""
-    import json as _json
-    import os as _os
-
     from ..sources.scans import scratch_dir
     from ..streaming.mor_cdc import (
         mor_cdc_commit,
@@ -1558,7 +1489,7 @@ def ivm_catalog_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         mor_cdc_read,
     )
     from ..streaming.txn import (
-        catalog_latest,
+        catalog_log,
         txn_catalog_init,
         txn_commit,
     )
@@ -1569,19 +1500,19 @@ def ivm_catalog_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     view_dir = scratch_dir("ivmcat_view", sf_dir)
     a1 = _ivm_a1(spark, sf_dir)
     b1 = _ivm_b1(spark, sf_dir)
-    if not _os.path.exists(_os.path.join(a_dir, "manifest-v1.json")):
+    if not main_log(a_dir).exists(1):
         mor_cdc_init(
             spark, a1.withColumn("version", F.lit(0)), a_dir, "k"
         )
-    if not _os.path.exists(_os.path.join(b_dir, "manifest-v1.json")):
+    if not main_log(b_dir).exists(1):
         mor_cdc_init(
             spark, b1.withColumn("version", F.lit(0)), b_dir, "c"
         )
-    if catalog_latest(cat_dir) < 1:
+    if catalog_log(cat_dir).head() < 1:
         txn_catalog_init(
             cat_dir, {"orders": (a_dir, 1), "customer": (b_dir, 1)}
         )
-    if not _os.path.exists(_os.path.join(a_dir, "manifest-v2.json")):
+    if not main_log(a_dir).exists(2):
         wave_a = (
             a1.filter(F.col("k") % IVMCAT_A_MOD == 0)
             .withColumn("cents", F.col("cents") + 7)
@@ -1589,7 +1520,7 @@ def ivm_catalog_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("op", F.lit("u"))
         )
         mor_cdc_commit(spark, wave_a, a_dir, 2)
-    if not _os.path.exists(_os.path.join(b_dir, "manifest-v2.json")):
+    if not main_log(b_dir).exists(2):
         wave_b = (
             b1.filter(F.col("c") % IVMCAT_B_MOD == 0)
             .withColumn("segment", F.lit("MOVEDX"))
@@ -1598,7 +1529,7 @@ def ivm_catalog_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         mor_cdc_commit(spark, wave_b, b_dir, 2)
     txn_commit(cat_dir, {"orders": 2, "customer": 2})
-    if not _os.path.exists(_os.path.join(a_dir, "manifest-v3.json")):
+    if not main_log(a_dir).exists(3):
         # the crash window: published at the table, NO catalog flip
         pend = (
             a1.filter(F.col("k") % IVMCAT_PEND_MOD == 0)
@@ -1607,22 +1538,15 @@ def ivm_catalog_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("op", F.lit("u"))
         )
         mor_cdc_commit(spark, pend, a_dir, 3)
-    if not _os.path.exists(_os.path.join(view_dir, "manifest-v1.json")):
+    if not view_log(view_dir).exists(1):
         build_join_view(
             mor_cdc_read(spark, a_dir, 1).select("k", "c", "cents"),
             mor_cdc_read(spark, b_dir, 1).select("c", "segment"),
             view_dir,
         )
-        with open(
-            _os.path.join(view_dir, "manifest-v1.json")
-        ) as f:
-            m1 = _json.load(f)
+        m1 = view_log(view_dir).load(1)
         m1.update({"a_version": 1, "b_version": 1})
-        from ..sources.scans import atomic_json_dump
-
-        atomic_json_dump(
-            m1, _os.path.join(view_dir, "manifest-v1.json")
-        )
+        view_log(view_dir).publish(1, m1)
     m = catch_up_view_from_catalog(
         spark, view_dir, cat_dir, "orders", "customer"
     )
@@ -1694,8 +1618,6 @@ def ivm_view_txn_flip(spark: SparkSession, sf_dir: str) -> DataFrame:
     historically consistent (base, view) snapshots, recomputed from
     scratch by the oracle.  The never-torn invariant across crash
     windows is pytest-pinned (tests/test_incremental.py)."""
-    import os as _os
-
     from ..sources.scans import scratch_dir
     from ..streaming.mor_cdc import (
         _latest_main_version,
@@ -1704,7 +1626,7 @@ def ivm_view_txn_flip(spark: SparkSession, sf_dir: str) -> DataFrame:
         mor_cdc_read,
     )
     from ..streaming.txn import (
-        catalog_latest,
+        catalog_log,
         txn_catalog_init,
     )
 
@@ -1714,18 +1636,16 @@ def ivm_view_txn_flip(spark: SparkSession, sf_dir: str) -> DataFrame:
     view_dir = scratch_dir("ivmtxn_view", sf_dir)
     a1 = _ivm_a1(spark, sf_dir)
     b1 = _ivm_b1(spark, sf_dir)
-    if catalog_latest(cat_dir) < 3:
-        if not _os.path.exists(_os.path.join(a_dir, "manifest-v1.json")):
+    if catalog_log(cat_dir).head() < 3:
+        if not main_log(a_dir).exists(1):
             mor_cdc_init(
                 spark, a1.withColumn("version", F.lit(0)), a_dir, "k"
             )
-        if not _os.path.exists(_os.path.join(b_dir, "manifest-v1.json")):
+        if not main_log(b_dir).exists(1):
             mor_cdc_init(
                 spark, b1.withColumn("version", F.lit(0)), b_dir, "c"
             )
-        if not _os.path.exists(
-            _os.path.join(view_dir, "manifest-v1.json")
-        ):
+        if not view_log(view_dir).exists(1):
             build_join_view(
                 mor_cdc_read(spark, a_dir, 1).select("k", "c", "cents"),
                 mor_cdc_read(spark, b_dir, 1).select("c", "segment"),
@@ -1733,12 +1653,8 @@ def ivm_view_txn_flip(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             m1 = load_view_manifest(view_dir, 1)
             m1.update({"a_version": 1, "b_version": 1})
-            from ..sources.scans import atomic_json_dump
-
-            atomic_json_dump(
-                m1, _os.path.join(view_dir, "manifest-v1.json")
-            )
-        if catalog_latest(cat_dir) < 1:
+            view_log(view_dir).publish(1, m1)
+        if catalog_log(cat_dir).head() < 1:
             txn_catalog_init(
                 cat_dir,
                 {
@@ -1862,10 +1778,7 @@ def ivm_catch_up_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     and at-least-once redelivery hygiene — the reference's consumer →
     dashboard loop (spark_consumer.py:106 → streamlit rerun) as an
     O(changes) refresh instead of a per-refresh rescan."""
-    import json as _json
-    import os as _os
-
-    from ..sources.scans import atomic_json_dump, scratch_dir
+    from ..sources.scans import scratch_dir
     from ..streaming.mor_cdc import (
         mor_cdc_commit,
         mor_cdc_init,
@@ -1878,18 +1791,7 @@ def ivm_catch_up_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     a1 = _ivm_a1(spark, sf_dir)
     b1 = _ivm_b1(spark, sf_dir)
 
-    def _latest_view_manifest() -> dict | None:
-        if not _os.path.isdir(view_dir):
-            return None
-        from ..streaming.mor_cdc import main_manifest_versions
-
-        vs = main_manifest_versions(view_dir)
-        if not vs:
-            return None
-        with open(
-            _os.path.join(view_dir, f"manifest-v{max(vs)}.json")
-        ) as f:
-            return _json.load(f)
+    view = view_log(view_dir)
 
     # Completion is decided by CURSOR VALUES on the latest view
     # manifest, never a hardcoded version number: a crash anywhere in
@@ -1898,7 +1800,7 @@ def ivm_catch_up_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     # intermediate the view chain stopped at (ADVICE r11).  Every
     # table-build step is guarded on ITS OWN last manifest (the
     # ivm_stream_join_view pattern), so reruns never re-commit.
-    m_final = _latest_view_manifest()
+    m_final = (view.load() if view.head() else None)
     if m_final is None or (
         int(m_final.get("a_version", 0)),
         int(m_final.get("b_version", 0)),
@@ -1913,9 +1815,7 @@ def ivm_catch_up_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("op", F.lit("u"))
         )
         # --- table A: base + two change epochs
-        if not _os.path.exists(
-            _os.path.join(a_dir, "manifest-v3.json")
-        ):
+        if not main_log(a_dir).exists(3):
             mor_cdc_init(
                 spark, a1.withColumn("version", F.lit(0)), a_dir, "k"
             )
@@ -1937,9 +1837,7 @@ def ivm_catch_up_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             mor_cdc_commit(spark, wave_a2, a_dir, 3)
         # --- table B: base + churn/move epoch
-        if not _os.path.exists(
-            _os.path.join(b_dir, "manifest-v2.json")
-        ):
+        if not main_log(b_dir).exists(2):
             mor_cdc_init(
                 spark, b1.withColumn("version", F.lit(0)), b_dir, "c"
             )
@@ -1963,24 +1861,18 @@ def ivm_catch_up_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         # fold; after a mid-build crash the tables may already be
         # further ahead and the fold simply absorbs more (the cursor
         # check at the end is what certifies convergence).
-        if not _os.path.exists(
-            _os.path.join(view_dir, "manifest-v1.json")
-        ):
+        if not view_log(view_dir).exists(1):
             m1 = build_join_view(
                 mor_cdc_read(spark, a_dir, 1).select("k", "c", "cents"),
                 mor_cdc_read(spark, b_dir, 1).select("c", "segment"),
                 view_dir,
             )
             m1.update({"a_version": 1, "b_version": 1})
-            atomic_json_dump(
-                m1, _os.path.join(view_dir, "manifest-v1.json")
-            )
+            view_log(view_dir).publish(1, m1)
         catch_up_join_view(spark, view_dir, a_dir, b_dir)
         # --- more commits land while the view sleeps: a re-score
         # wave, a STALE redelivery of wave 1, a second move wave
-        if not _os.path.exists(
-            _os.path.join(a_dir, "manifest-v4.json")
-        ):
+        if not main_log(a_dir).exists(4):
             wave_a3 = (
                 a1.filter(
                     (F.col("k") % 9 == 0)
@@ -1998,13 +1890,9 @@ def ivm_catch_up_view(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .withColumn("op", F.lit("u"))
             )
             mor_cdc_commit(spark, wave_a3, a_dir, 4)
-        if not _os.path.exists(
-            _os.path.join(a_dir, "manifest-v5.json")
-        ):
+        if not main_log(a_dir).exists(5):
             mor_cdc_commit(spark, wave_a1, a_dir, 5)  # stale redelivery
-        if not _os.path.exists(
-            _os.path.join(b_dir, "manifest-v3.json")
-        ):
+        if not main_log(b_dir).exists(3):
             wave_b2 = (
                 mor_cdc_read(spark, b_dir, 2)
                 .select("c", "segment")
@@ -2016,7 +1904,7 @@ def ivm_catch_up_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             mor_cdc_commit(spark, wave_b2, b_dir, 3)
         # --- catch-up #2: folds A 4-5 (5 contributes nothing) + B 3
         catch_up_join_view(spark, view_dir, a_dir, b_dir)
-        m_final = _latest_view_manifest()
+        m_final = (view.load() if view.head() else None)
     assert (m_final["a_version"], m_final["b_version"]) == (5, 3)
     return spark.read.parquet(m_final["seg_view"]).select(
         "segment", "n_rows", "sum_cents"

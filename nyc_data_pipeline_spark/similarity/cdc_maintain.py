@@ -44,15 +44,16 @@ extension (SURVEY §2) composed with the CDC lane.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..manifest_log import ManifestLog
 from ..registry import register
-from ..sources.scans import atomic_json_dump, scratch_dir
+from ..sources.scans import scratch_dir
+from ..streaming.mor_cdc import ChangeFeedRetentionError, main_log
 from .adc import N_CODES, N_SUB, SEED_SPLIT, _codebook, _micro_rows, pq_assign
 from .brute_force import N_QUERIES, TOP_K
 from .centroids import MICRO, PQ_SUB_DIMS
@@ -111,21 +112,11 @@ def _emb_cdc_wave(emb: DataFrame) -> DataFrame:
     return upd.unionByName(dele).unionByName(ins)
 
 
-def _latest_cdcidx_version(index_dir: str) -> int:
-    vs = [
-        int(f[len("cdcidx-manifest-v"):-len(".json")])
-        for f in os.listdir(index_dir)
-        if f.startswith("cdcidx-manifest-v") and f.endswith(".json")
-    ] if os.path.isdir(index_dir) else []
-    return max(vs, default=0)
-
-
-def _load_cdcidx_manifest(index_dir: str, version: int | None = None) -> dict:
-    v = version if version is not None else _latest_cdcidx_version(index_dir)
-    with open(
-        os.path.join(index_dir, f"cdcidx-manifest-v{v}.json")
-    ) as f:
-        return json.load(f)
+def cdcidx_log(index_dir: str) -> ManifestLog:
+    """The index's version chain (`cdcidx-manifest-v{N}.json`)."""
+    return ManifestLog(
+        index_dir, "cdcidx-manifest-v", ChangeFeedRetentionError
+    )
 
 
 def build_cdc_index(
@@ -175,9 +166,7 @@ def build_cdc_index(
             "micro": MICRO,
         },
     }
-    atomic_json_dump(
-        manifest, os.path.join(index_dir, f"cdcidx-manifest-v{version}.json")
-    )
+    cdcidx_log(index_dir).publish(version, manifest)
     return manifest
 
 
@@ -198,7 +187,7 @@ def maintain_ivf_pq_from_feed(
         release_local_checkpoints,
     )
 
-    prev = _load_cdcidx_manifest(index_dir)
+    prev = cdcidx_log(index_dir).load()
     table_commit = int(prev["table_commit"]) + 1
     vnew = int(prev["version"]) + 1
     feed = mor_cdc_change_feed(spark, emb_dir, table_commit)
@@ -228,9 +217,7 @@ def maintain_ivf_pq_from_feed(
             table_commit=table_commit,
         )
         m["swapped"] = True
-        atomic_json_dump(
-            m, os.path.join(index_dir, f"cdcidx-manifest-v{vnew}.json")
-        )
+        cdcidx_log(index_dir).publish(vnew, m)
         return m
     cent = spark.read.parquet(prev["centroids"])
     cmicro = spark.read.parquet(prev["codebook"])
@@ -276,9 +263,7 @@ def maintain_ivf_pq_from_feed(
         "n_appended": n_ins + n_upd,
         "params": prev["params"],
     }
-    atomic_json_dump(
-        manifest, os.path.join(index_dir, f"cdcidx-manifest-v{vnew}.json")
-    )
+    cdcidx_log(index_dir).publish(vnew, manifest)
     release_local_checkpoints(getattr(feed, "_ckpt_intermediates", []))
     return manifest
 
@@ -294,7 +279,7 @@ def cdc_index_search(
     the standard cell-pruned ADC search.  `corpus` is the table's
     CURRENT state — the exact rerank reads live vectors, as
     production does."""
-    m = _load_cdcidx_manifest(index_dir, version)
+    m = cdcidx_log(index_dir).load(version)
     cent = spark.read.parquet(m["centroids"])
     cmicro = spark.read.parquet(m["codebook"])
     codes = None
@@ -495,13 +480,11 @@ def sim_index_cdc_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     emb_dir = scratch_dir("embcdc_table", sf_dir)
     index_dir = scratch_dir("embcdc_index", sf_dir)
-    if not os.path.exists(os.path.join(emb_dir, "manifest-v1.json")):
+    if not main_log(emb_dir).exists(1):
         mor_cdc_init(
             spark, emb.withColumn("version", F.lit(0)), emb_dir, "vec_id"
         )
-    if not os.path.exists(
-        os.path.join(index_dir, "cdcidx-manifest-v1.json")
-    ):
+    if not cdcidx_log(index_dir).exists(1):
         build_cdc_index(
             spark,
             mor_cdc_read(spark, emb_dir, 1).select(
@@ -511,13 +494,11 @@ def sim_index_cdc_maintain(spark: SparkSession, sf_dir: str) -> DataFrame:
             version=1,
             table_commit=1,
         )
-    if not os.path.exists(os.path.join(emb_dir, "manifest-v2.json")):
+    if not main_log(emb_dir).exists(2):
         mor_cdc_commit(spark, _emb_cdc_wave(emb), emb_dir, 2)
-    if not os.path.exists(
-        os.path.join(index_dir, "cdcidx-manifest-v2.json")
-    ):
+    if not cdcidx_log(index_dir).exists(2):
         maintain_ivf_pq_from_feed(spark, emb_dir, index_dir)
-    m = _load_cdcidx_manifest(index_dir, 2)
+    m = cdcidx_log(index_dir).load(2)
     cur = mor_cdc_read(spark, emb_dir, 2).select(
         "vec_id", "embedding", "label"
     )

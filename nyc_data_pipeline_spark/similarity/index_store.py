@@ -31,15 +31,15 @@ extension (SURVEY §2).
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..manifest_log import ManifestLog
 from ..registry import register
-from ..sources.scans import atomic_json_dump, scratch_dir
+from ..sources.scans import scratch_dir
 from .adc import (
     N_CODES,
     N_SUB,
@@ -85,9 +85,7 @@ def build_pq_index(emb: DataFrame, table_dir: str, version: int = 1) -> dict:
             "micro": MICRO,
         },
     }
-    atomic_json_dump(
-        manifest, os.path.join(table_dir, f"manifest-v{version}.json")
-    )
+    ManifestLog(table_dir).publish(version, manifest)
     return manifest
 
 
@@ -96,8 +94,7 @@ def load_pq_index(
 ) -> tuple[DataFrame, DataFrame]:
     """Load (codebook, codes) from the manifest — parquet scans only;
     nothing is recomputed from the raw corpus."""
-    with open(os.path.join(table_dir, f"manifest-v{version}.json")) as f:
-        manifest = json.load(f)
+    manifest = ManifestLog(table_dir).load(version)
     return (
         spark.read.parquet(manifest["codebook"]),
         spark.read.parquet(manifest["codes"]),
@@ -332,6 +329,11 @@ def _nearest_cells(rows: DataFrame, cent: DataFrame, id_col: str, n: int) -> Dat
     return ranked.where(F.col("rk") <= n).select(id_col, "cid")
 
 
+def _ivfpq_log(table_dir: str) -> ManifestLog:
+    """The IVF-PQ index chain (`ivfpq-manifest-v{N}.json`)."""
+    return ManifestLog(table_dir, "ivfpq-manifest-v")
+
+
 def build_ivf_pq_index(emb: DataFrame, table_dir: str, version: int = 1) -> dict:
     """One corpus pass commits the composed index: coarse centroids
     (K_CELLS x dims micro rows), PQ codebook, and the code table WITH
@@ -370,9 +372,7 @@ def build_ivf_pq_index(emb: DataFrame, table_dir: str, version: int = 1) -> dict
             "micro": MICRO,
         },
     }
-    atomic_json_dump(
-        manifest, os.path.join(table_dir, f"ivfpq-manifest-v{version}.json")
-    )
+    _ivfpq_log(table_dir).publish(version, manifest)
     return manifest
 
 
@@ -381,10 +381,7 @@ def load_ivf_pq_index(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(centroids, codebook, codes) from the manifest — parquet scans
     only; nothing is recomputed from the raw corpus."""
-    with open(
-        os.path.join(table_dir, f"ivfpq-manifest-v{version}.json")
-    ) as f:
-        manifest = json.load(f)
+    manifest = _ivfpq_log(table_dir).load(version)
     return (
         spark.read.parquet(manifest["centroids"]),
         spark.read.parquet(manifest["codebook"]),
@@ -585,10 +582,7 @@ def append_ivf_pq(
 ) -> dict:
     """APPEND commit on a built IVF-PQ index: frozen-artifact cell
     assignment + PQ encoding of `batch`, new files only."""
-    with open(
-        os.path.join(table_dir, f"ivfpq-manifest-v{version - 1}.json")
-    ) as f:
-        prev = json.load(f)
+    prev = _ivfpq_log(table_dir).load(version - 1)
     cent = spark.read.parquet(prev["centroids"])
     cmicro = spark.read.parquet(prev["codebook"])
     vb = _micro_rows(batch)
@@ -613,9 +607,7 @@ def append_ivf_pq(
         + [codes_path],
         "params": prev["params"],
     }
-    atomic_json_dump(
-        manifest, os.path.join(table_dir, f"ivfpq-manifest-v{version}.json")
-    )
+    _ivfpq_log(table_dir).publish(version, manifest)
     return manifest
 
 
@@ -751,19 +743,12 @@ def sim_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     table_dir = scratch_dir("ivfpq_append", sf_dir)
     corpus = emb.filter(~F.expr(BATCH_PRED))
     batch = emb.filter(F.expr(BATCH_PRED))
-    if not os.path.exists(
-        os.path.join(table_dir, "ivfpq-manifest-v1.json")
-    ):
+    if not _ivfpq_log(table_dir).exists(1):
         build_ivf_pq_index(corpus, table_dir, version=1)
-    if not os.path.exists(
-        os.path.join(table_dir, "ivfpq-manifest-v2.json")
-    ):
+    if not _ivfpq_log(table_dir).exists(2):
         m2 = append_ivf_pq(spark, batch, table_dir, version=2)
     else:
-        with open(
-            os.path.join(table_dir, "ivfpq-manifest-v2.json")
-        ) as f:
-            m2 = json.load(f)
+        m2 = _ivfpq_log(table_dir).load(2)
     cent = spark.read.parquet(m2["centroids"])
     cmicro = spark.read.parquet(m2["codebook"])
     codes = None
@@ -942,25 +927,16 @@ def sim_index_rebuild_swap(spark: SparkSession, sf_dir: str) -> DataFrame:
     table_dir = scratch_dir("ivfpq_rebuild", sf_dir)
     corpus = emb.filter(~F.expr(BATCH_PRED))
     batch = emb.filter(F.expr(BATCH_PRED))
-    if not os.path.exists(
-        os.path.join(table_dir, "ivfpq-manifest-v1.json")
-    ):
+    if not _ivfpq_log(table_dir).exists(1):
         build_ivf_pq_index(corpus, table_dir, version=1)
-    if not os.path.exists(
-        os.path.join(table_dir, "ivfpq-manifest-v2.json")
-    ):
+    if not _ivfpq_log(table_dir).exists(2):
         append_ivf_pq(spark, batch, table_dir, version=2)
-    if not os.path.exists(
-        os.path.join(table_dir, "ivfpq-manifest-v3.json")
-    ):
+    if not _ivfpq_log(table_dir).exists(3):
         build_ivf_pq_index(emb, table_dir, version=3)
     queries = _micro_rows(emb.filter(F.col("vec_id") < N_QUERIES)).select(
         F.col("vec_id").alias("query_id"), "dim", F.col("vi").alias("qi")
     )
-    with open(
-        os.path.join(table_dir, "ivfpq-manifest-v2.json")
-    ) as f:
-        m2 = json.load(f)
+    m2 = _ivfpq_log(table_dir).load(2)
     cent2 = spark.read.parquet(m2["centroids"])
     cb2 = spark.read.parquet(m2["codebook"])
     codes2 = None

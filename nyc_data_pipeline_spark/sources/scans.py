@@ -72,61 +72,6 @@ def scratch_dir(kind: str, sf_dir: str) -> str:
     )
 
 
-def atomic_json_dump(obj, path: str) -> None:
-    """Commit a JSON metadata file atomically: write to a temp file in
-    the SAME directory, fsync, then os.replace() into place.  Every
-    manifest/ledger pointer in the storage layer routes through this —
-    a crash mid-write must never leave a torn manifest visible to
-    readers or an unparseable ledger that bricks future commits (the
-    lakehouse commit protocol's one filesystem assumption: same-dir
-    rename is atomic on POSIX)."""
-    import json as _json
-    import tempfile as _tempfile
-
-    d = os.path.dirname(path) or "."
-    os.makedirs(d, exist_ok=True)
-    fd, tmp = _tempfile.mkstemp(dir=d, suffix=".tmp")
-    try:
-        with os.fdopen(fd, "w") as f:
-            _json.dump(obj, f, sort_keys=True)
-            f.flush()
-            os.fsync(f.fileno())
-        os.replace(tmp, path)
-    except BaseException:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-        raise
-
-
-def atomic_json_publish_once(obj, path: str) -> None:
-    """Compare-and-swap publish: like `atomic_json_dump` but the final
-    step is link(2) from a writer-unique temp name, which is atomic
-    AND fails with FileExistsError if `path` already exists — the
-    Iceberg snapshot-CAS analog on plain files.  Exactly one of any
-    number of concurrent publishers of the same path succeeds; the
-    losers get a loud FileExistsError to translate into their commit-
-    conflict protocol, never a silent last-write-wins overwrite."""
-    import json as _json
-    import tempfile as _tempfile
-
-    d = os.path.dirname(path) or "."
-    os.makedirs(d, exist_ok=True)
-    fd, tmp = _tempfile.mkstemp(dir=d, suffix=".tmp")
-    try:
-        with os.fdopen(fd, "w") as f:
-            _json.dump(obj, f, sort_keys=True)
-            f.flush()
-            os.fsync(f.fileno())
-        os.link(tmp, path)  # atomic; EEXIST if another writer won
-    finally:
-        try:
-            os.unlink(tmp)
-        except OSError:
-            pass
-
-
 def field_id_hwm(manifest: dict) -> int:
     """Highest field id a manifest chain has EVER issued — Iceberg's
     `last-column-id` rule (iceberg spec §Schemas), shared by both

@@ -34,13 +34,13 @@ surface the reference lacks; SURVEY §2 S8 family.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..manifest_log import ManifestLog, TimeTravelRetentionError
 from ..registry import register
 from .scans import scratch_dir
 
@@ -57,14 +57,6 @@ TT_UPLIFT_CENTS = 100  # v2 adds $1.00 to surviving bucket-0 rows
 COMMITTED_AT_KEY = "_committed_at_us"
 
 
-class TimeTravelRetentionError(RuntimeError):
-    """`TIMESTAMP AS OF` landed outside the retained window: the
-    requested timestamp precedes every RETAINED commit (either it
-    predates the table, or vacuum reclaimed the manifests that owned
-    it).  Delta/Iceberg raise for both; an un-resolvable timestamp
-    must never silently serve a nearby version."""
-
-
 def commit_wallclock_us(prev_ts_us: int | None) -> int:
     """Wall-clock stamp for a new commit, strictly after `prev_ts_us`."""
     import time
@@ -73,61 +65,16 @@ def commit_wallclock_us(prev_ts_us: int | None) -> int:
     return now if prev_ts_us is None or now > prev_ts_us else prev_ts_us + 1
 
 
-def resolve_version_as_of(
-    table_dir: str, ts_us: int, prefix: str = "manifest-v"
-) -> int:
-    """`TIMESTAMP AS OF` → version: the LATEST retained commit whose
-    wall-clock is <= `ts_us` (ties broken toward the higher version;
-    impossible under the strictly-increasing stamp, kept for
-    robustness).  O(#retained manifests) driver-side JSON reads —
-    metadata scale, like every manifest operation here.  Raises
-    `TimeTravelRetentionError` when no retained commit is old enough
-    (pre-table timestamps and vacuumed history both land here).
-    Works over any manifest family that stamps its commits:
-    timetravel (`_committed_at_us`), mor_cdc / zonemap
-    (`committed_at_us`)."""
-    entries = []
-    for f in os.listdir(table_dir):
-        if not (f.startswith(prefix) and f.endswith(".json")):
-            continue
-        try:
-            v = int(f[len(prefix):-len(".json")])
-        except ValueError:
-            continue
-        with open(os.path.join(table_dir, f)) as fh:
-            m = json.load(fh)
-        ts = None
-        if isinstance(m, dict):
-            if m.get("pending_head") is not None and not os.path.exists(
-                os.path.join(
-                    table_dir, f"{prefix}{int(m['pending_head'])}.json"
-                )
-            ):
-                # a crashed/in-flight wap_publish intermediate: not a
-                # reader-visible commit until its head lands
-                continue
-            ts = m.get(COMMITTED_AT_KEY, m.get("committed_at_us"))
-        if ts is not None:
-            entries.append((int(ts), v))
-    if not entries:
-        raise TimeTravelRetentionError(
-            f"{table_dir} has no retained timestamped commits; "
-            "TIMESTAMP AS OF cannot resolve"
-        )
-    eligible = [(t, v) for t, v in entries if t <= ts_us]
-    if not eligible:
-        earliest = min(entries)
-        raise TimeTravelRetentionError(
-            f"TIMESTAMP AS OF {ts_us} precedes every retained commit "
-            f"of {table_dir} (earliest retained: version "
-            f"{earliest[1]} at {earliest[0]}); the history before it "
-            "was never committed or was reclaimed by vacuum"
-        )
-    return max(eligible)[1]
+def tt_log(table_dir: str) -> ManifestLog:
+    """The table's version chain (`manifest-v{N}.json`)."""
+    return ManifestLog(table_dir, "manifest-v", TimeTravelRetentionError)
 
 
-def _manifest_path(table_dir: str, version: int) -> str:
-    return os.path.join(table_dir, f"manifest-v{version}.json")
+def resolve_version_as_of(table_dir: str, ts_us: int) -> int:
+    """`TIMESTAMP AS OF` → version over any `manifest-v` chain that
+    stamps its commits (timetravel, mor_cdc, zonemap): the latest
+    retained commit at or before `ts_us` (`ManifestLog.as_of`)."""
+    return tt_log(table_dir).as_of(ts_us)
 
 
 def write_version(df: DataFrame, table_dir: str, version: int,
@@ -153,17 +100,14 @@ def write_version(df: DataFrame, table_dir: str, version: int,
     manifest[COMMITTED_AT_KEY] = commit_wallclock_us(
         int(prev_ts) if prev_ts is not None else None
     )
-    os.makedirs(table_dir, exist_ok=True)
-    with open(_manifest_path(table_dir, version), "w") as f:
-        json.dump(manifest, f, sort_keys=True)
+    tt_log(table_dir).publish(version, manifest)
     return manifest
 
 
 def read_version(spark: SparkSession, table_dir: str, version: int) -> DataFrame:
     """Time-travel read: union exactly the files the version's manifest
     names (each path carries its partition id back as a column)."""
-    with open(_manifest_path(table_dir, version)) as f:
-        manifest = json.load(f)
+    manifest = tt_log(table_dir).load(version)
     parts = None
     for p, path in sorted(manifest.items()):
         if not p.isdigit():
@@ -289,7 +233,8 @@ def src_time_travel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
     `src_time_travel`; timestamps before the earliest retained commit
     raise `TimeTravelRetentionError` (property-tested)."""
     table_dir = scratch_dir("timetravel_ts", sf_dir)
-    if not os.path.exists(_manifest_path(table_dir, 2)):
+    log = tt_log(table_dir)
+    if not log.exists(2):
         base = load_table(spark, sf_dir, "orders").selectExpr(
             "o_orderkey",
             "CAST(floor(o_totalprice * 100) AS BIGINT) AS cents",
@@ -304,10 +249,8 @@ def src_time_travel_ts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("cents", F.col("cents") + TT_UPLIFT_CENTS)
         )
         write_version(v2_part0, table_dir, 2, [0], m1)
-    with open(_manifest_path(table_dir, 1)) as f:
-        ts1 = int(json.load(f)[COMMITTED_AT_KEY])
-    with open(_manifest_path(table_dir, 2)) as f:
-        ts2 = int(json.load(f)[COMMITTED_AT_KEY])
+    ts1 = int(log.load(1)[COMMITTED_AT_KEY])
+    ts2 = int(log.load(2)[COMMITTED_AT_KEY])
     # strictly between: ts2 > ts1 is guaranteed by the monotonic stamp
     probes = [(1, ts1), (2, (ts1 + ts2) // 2), (3, ts2)]
 

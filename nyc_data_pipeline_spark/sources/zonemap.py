@@ -48,13 +48,20 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..manifest_log import (
+    CommitConflictError,
+    ManifestLog,
+    TimeTravelRetentionError,
+    atomic_json_dump,
+)
 from ..plans.two_phase import bucket_expr, range_buckets
 from ..registry import register
-# the CAS publish resolves through the MODULE at call time —
-# tests patch scans.atomic_json_publish_once as the deterministic
-# race-window seam, so never bind it at import
-from . import scans as _scans
-from .scans import atomic_json_dump, field_id_hwm, scratch_dir
+from .scans import field_id_hwm, scratch_dir
+
+
+def cow_log(table_dir: str) -> ManifestLog:
+    """A COW table's version chain (`manifest-v{N}.json`)."""
+    return ManifestLog(table_dir, "manifest-v", TimeTravelRetentionError)
 
 
 def _read_json_table(path: str) -> list[dict]:
@@ -680,9 +687,7 @@ def _zm_versioned_write(
             for z, path in files.items()
             for p in (path if isinstance(path, list) else [path])
         }
-    atomic_json_dump(
-        manifest, os.path.join(table_dir, f"manifest-v{version}.json")
-    )
+    cow_log(table_dir).publish(version, manifest)
     return manifest
 
 
@@ -769,10 +774,7 @@ def _grouped_manifest_scan(
 def _zm_read_version(
     spark: SparkSession, table_dir: str, version: int
 ) -> DataFrame:
-    with open(
-        os.path.join(table_dir, f"manifest-v{version}.json")
-    ) as f:
-        manifest = json.load(f)
+    manifest = cow_log(table_dir).load(version)
     return _grouped_manifest_scan(spark, manifest["files"], manifest)
 
 
@@ -968,7 +970,7 @@ def src_cow_change_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
     # already committed (scratch is pid-scoped, so an existing v2 was
     # written by this process with this code — a change-feed consumer
     # reads committed history, it never re-runs the producer's merge).
-    if not os.path.exists(os.path.join(table_dir, "manifest-v2.json")):
+    if not cow_log(table_dir).exists(2):
         merge_zone_map_cow(spark, sf_dir).collect()
     return change_feed_from(spark, table_dir)
 
@@ -991,14 +993,8 @@ def change_feed_from(
     diffable.  Value columns are the TO-schema's non-key, non-cluster
     fields; legacy chains (no field ids) keep the original k/cents
     shape."""
-    with open(
-        os.path.join(table_dir, f"manifest-v{from_version}.json")
-    ) as f:
-        m1 = json.load(f)
-    with open(
-        os.path.join(table_dir, f"manifest-v{to_version}.json")
-    ) as f:
-        m2 = json.load(f)
+    m1 = cow_log(table_dir).load(from_version)
+    m2 = cow_log(table_dir).load(to_version)
     # normalize entries before comparing (ADVICE r14): _zm_append
     # rewrites every bucket's entry from a path STRING to a LIST, so
     # a raw != across an append commit would mark ALL buckets
@@ -1155,26 +1151,21 @@ def _zm_append(
 
     `exclusive=True` is the CONCURRENT-writer mode (the mor_cdc_commit
     rule on this lane, VERDICT r14 ask #5): files stage under a
-    writer-unique directory and the manifest publishes through the
-    link(2) CAS, so an append racing an evolution or compaction for
-    the same next version resolves to ONE winner — the loser removes
-    its staged directory and raises the named CommitConflictError,
-    never a silent clobber.  The default non-exclusive path keeps
-    overwrite-idempotent publishes for single-writer lifecycle
-    rebuilds (crash-recovery contract: rerun rewrites the same
-    version)."""
-    mpath = os.path.join(table_dir, f"manifest-v{version}.json")
-    if exclusive and os.path.exists(mpath):
-        from ..streaming.mor_cdc import CommitConflictError
-
+    writer-unique directory and the manifest publishes through the log's
+    CAS (`ManifestLog.publish_once`), so an append racing an evolution
+    or compaction for the same next version resolves to ONE winner — the
+    loser removes its staged directory and raises the named
+    CommitConflictError, never a silent clobber. The default
+    non-exclusive path keeps overwrite-idempotent publishes for
+    single-writer lifecycle rebuilds (crash-recovery contract: rerun
+    rewrites the same version)."""
+    log = cow_log(table_dir)
+    if exclusive and log.exists(version):
         raise CommitConflictError(
             f"manifest v{version} of {table_dir} already published by "
             "another writer; retry from a fresh read"
         )
-    with open(
-        os.path.join(table_dir, f"manifest-v{version - 1}.json")
-    ) as f:
-        prev = json.load(f)
+    prev = log.load(version - 1)
     lo, hi = prev["bounds"]
     if exclusive:
         import uuid
@@ -1275,20 +1266,13 @@ def _zm_append(
     if exclusive:
         import shutil
 
-
         try:
-            _scans.atomic_json_publish_once(manifest, mpath)
-        except FileExistsError:
-            from ..streaming.mor_cdc import CommitConflictError
-
+            log.publish_once(version, manifest)
+        except CommitConflictError:
             shutil.rmtree(vdir, ignore_errors=True)
-            raise CommitConflictError(
-                f"manifest v{version} of {table_dir} was published by "
-                "a concurrent writer between stage and publish; retry "
-                "from a fresh read"
-            ) from None
+            raise
     else:
-        atomic_json_dump(manifest, mpath)
+        log.publish(version, manifest)
     return manifest
 
 
@@ -1325,7 +1309,7 @@ def src_zone_map_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     inheritance (no v2 row lost, none changed) and the frozen-bounds
     file routing are both hash-checked."""
     table_dir = scratch_dir("zm_merge", sf_dir)
-    if not os.path.exists(os.path.join(table_dir, "manifest-v2.json")):
+    if not cow_log(table_dir).exists(2):
         merge_zone_map_cow(spark, sf_dir).collect()
     batch = (
         _orders_kcd(spark, sf_dir)
@@ -1501,11 +1485,11 @@ def manifest_vacuum(table_dir: str, latest: int) -> dict:
     import re as _re
     import shutil
 
+    log = cow_log(table_dir)
     retained = range(latest - RETAIN_VERSIONS + 1, latest + 1)
     reachable: set[str] = set()
     for v in retained:
-        with open(os.path.join(table_dir, f"manifest-v{v}.json")) as f:
-            m = json.load(f)
+        m = log.load(v)
         for paths in m["files"].values():
             reachable.update(
                 paths if isinstance(paths, list) else [paths]
@@ -1522,10 +1506,7 @@ def manifest_vacuum(table_dir: str, latest: int) -> dict:
     removable = sorted(present - reachable)
     for path in removable:
         shutil.rmtree(path)
-    for v in range(1, latest - RETAIN_VERSIONS + 1):
-        mp = os.path.join(table_dir, f"manifest-v{v}.json")
-        if os.path.exists(mp):
-            os.remove(mp)
+    log.expire(latest - RETAIN_VERSIONS + 1)
     return {
         "dirs_before": len(present),
         "dirs_removed": len(removable),
@@ -1582,10 +1563,8 @@ def src_manifest_vacuum(spark: SparkSession, sf_dir: str) -> DataFrame:
     after) from the raw rows alone."""
     table_dir = scratch_dir("zm_vacuum", sf_dir)
     base = _orders_kcd(spark, sf_dir)
-    if not os.path.exists(os.path.join(table_dir, "manifest-v3.json")):
-        if not os.path.exists(
-            os.path.join(table_dir, "manifest-v2.json")
-        ):
+    if not cow_log(table_dir).exists(3):
+        if not cow_log(table_dir).exists(2):
             cow_merge(spark, base, table_dir).collect()
         batch = base.filter(F.col("k") % MRG_APP_MOD == 0).select(
             (F.col("k") + MRG_APP_KEY).alias("k"),
@@ -1811,7 +1790,7 @@ def _mor_delete_commit(
             m1.get("committed_at_us")
         ),
     }
-    atomic_json_dump(manifest, os.path.join(table_dir, "manifest-v2.json"))
+    cow_log(table_dir).publish(2, manifest)
     return manifest
 
 
@@ -1825,10 +1804,7 @@ def _mor_read(spark: SparkSession, table_dir: str, version: int) -> DataFrame:
     O(#files) — the `mor_cdc_read` shape (streaming/mor_cdc.py),
     converged here per VERDICT r9 ask #1 after SCALE.md §22 measured
     the per-bucket form 3.5× slower at 80 files."""
-    with open(
-        os.path.join(table_dir, f"manifest-v{version}.json")
-    ) as f:
-        m = json.load(f)
+    m = cow_log(table_dir).load(version)
     dv_buckets = (
         set(m.get("dv_buckets", [])) if m.get("delete_vectors") else set()
     )
@@ -1889,7 +1865,7 @@ def src_mor_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     vector contents, and both versions' totals."""
     table_dir = scratch_dir("zm_mor", sf_dir)
     base = _orders_kcd(spark, sf_dir)
-    if not os.path.exists(os.path.join(table_dir, "manifest-v1.json")):
+    if not cow_log(table_dir).exists(1):
         lo, hi = base.agg(F.min("day"), F.max("day")).collect()[0]
         b1 = range_buckets(base, "day", ZM_FILES).withColumnRenamed(
             "bucket", "zb"
@@ -1899,13 +1875,11 @@ def src_mor_delete_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
             [str(z) for z in range(ZM_FILES)], None, (lo, hi),
         )
     else:
-        with open(os.path.join(table_dir, "manifest-v1.json")) as f:
-            m1 = json.load(f)
-    if not os.path.exists(os.path.join(table_dir, "manifest-v2.json")):
+        m1 = cow_log(table_dir).load(1)
+    if not cow_log(table_dir).exists(2):
         m2 = _mor_delete_commit(spark, table_dir, m1)
     else:
-        with open(os.path.join(table_dir, "manifest-v2.json")) as f:
-            m2 = json.load(f)
+        m2 = cow_log(table_dir).load(2)
     dv_rows = len(_read_json_table(m2["delete_vectors"]))
     out = None
     for version in (1, 2):
@@ -1969,11 +1943,10 @@ def src_mor_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     full churn story: cheap O(keys) delete commits, deferred
     O(touched-files) rewrite, reachability reclaim."""
     table_dir = scratch_dir("zm_mor", sf_dir)
-    if not os.path.exists(os.path.join(table_dir, "manifest-v2.json")):
+    if not cow_log(table_dir).exists(2):
         src_mor_delete_vectors(spark, sf_dir).collect()
-    with open(os.path.join(table_dir, "manifest-v2.json")) as f:
-        m2 = json.load(f)
-    if not os.path.exists(os.path.join(table_dir, "manifest-v3.json")):
+    m2 = cow_log(table_dir).load(2)
+    if not cow_log(table_dir).exists(3):
         compacted = None
         for z in m2["dv_buckets"]:
             piece = _mor_read_bucket(spark, m2, z)
@@ -2002,10 +1975,9 @@ def src_mor_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
                 m2.get("committed_at_us")
             ),
         }
-        atomic_json_dump(m3, os.path.join(table_dir, "manifest-v3.json"))
+        cow_log(table_dir).publish(3, m3)
     else:
-        with open(os.path.join(table_dir, "manifest-v3.json")) as f:
-            m3 = json.load(f)
+        m3 = cow_log(table_dir).load(3)
     return (
         _zm_read_version(spark, table_dir, 3)
         .agg(
@@ -2076,7 +2048,7 @@ def ivm_change_feed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     `merge_zone_map_cow` (the commits) + `change_feed_from` (the
     deltas, rewritten-files-only) into the IVM pattern."""
     table_dir = scratch_dir("zm_merge", sf_dir)
-    if not os.path.exists(os.path.join(table_dir, "manifest-v2.json")):
+    if not cow_log(table_dir).exists(2):
         merge_zone_map_cow(spark, sf_dir).collect()
     grp = lambda c: (F.col(c) % IVM_GRP_MOD).cast("bigint")  # noqa: E731
     view1 = (
@@ -2146,33 +2118,17 @@ def ivm_change_feed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 _COW_WIDENINGS = {("int", "bigint"), ("float", "double")}
 
 
-def _cow_latest_version(table_dir: str) -> int:
-    import re as _re
-
-    pat = _re.compile(r"manifest-v(\d+)\.json")
-    vs = [
-        int(m.group(1))
-        for f in os.listdir(table_dir)
-        if (m := pat.fullmatch(f))
-    ]
-    if not vs:
-        raise ValueError(f"{table_dir} has no manifests")
-    return max(vs)
-
-
 def _cow_evolve(table_dir: str, mutate, evolution: dict) -> dict:
     """Shared metadata-commit shell for the COW lane (the
     `_evolve_schema_commit` twin): load the head manifest, let
     `mutate(schema, manifest)` edit the schema in place, publish the
     next version with files/bounds/file_stats carried untouched.
-    The publish is a link(2) CAS (VERDICT r13 ask #6): a concurrent
+    The publish is the log's CAS (VERDICT r13 ask #6): a concurrent
     evolution/compaction targeting the same next version loses with
     the named `CommitConflictError`, never a silent clobber."""
-    version = _cow_latest_version(table_dir)
-    with open(
-        os.path.join(table_dir, f"manifest-v{version}.json")
-    ) as f:
-        m = json.load(f)
+    log = cow_log(table_dir)
+    version = log.head()
+    m = log.load(version)
     if m.get("schema") is None:
         raise ValueError(
             f"{table_dir} predates field-id schemas; rename/widen "
@@ -2207,19 +2163,7 @@ def _cow_evolve(table_dir: str, mutate, evolution: dict) -> dict:
         max((int(f["id"]) for f in schema), default=0),
     )
 
-    try:
-        _scans.atomic_json_publish_once(
-            manifest, os.path.join(table_dir, f"manifest-v{vnew}.json")
-        )
-    except FileExistsError:
-        from ..streaming.mor_cdc import CommitConflictError
-
-        raise CommitConflictError(
-            f"manifest v{vnew} of {table_dir} was published by a "
-            "concurrent writer while this evolution "
-            f"({evolution.get('op')}) was in flight; re-run against "
-            "the new head"
-        ) from None
+    log.publish_once(vnew, manifest)
     return manifest
 
 
@@ -2282,11 +2226,9 @@ def cow_compact(
     import shutil
     import uuid
 
-    version = _cow_latest_version(table_dir)
-    with open(
-        os.path.join(table_dir, f"manifest-v{version}.json")
-    ) as f:
-        m = json.load(f)
+    log = cow_log(table_dir)
+    version = log.head()
+    m = log.load(version)
     live = _zm_read_version(spark, table_dir, version)
     vnew = version + 1
     # writer-unique staged name + CAS publish (VERDICT r13 ask #6,
@@ -2358,17 +2300,10 @@ def cow_compact(
         }
 
     try:
-        _scans.atomic_json_publish_once(
-            manifest, os.path.join(table_dir, f"manifest-v{vnew}.json")
-        )
-    except FileExistsError:
-        from ..streaming.mor_cdc import CommitConflictError
-
+        log.publish_once(vnew, manifest)
+    except CommitConflictError:
         shutil.rmtree(vdir, ignore_errors=True)
-        with open(
-            os.path.join(table_dir, f"manifest-v{vnew}.json")
-        ) as f:
-            winner = json.load(f)
+        winner = log.load(vnew)
         # EQUIVALENCE, not just same source version (ADVICE r14, the
         # mor_cdc_compact rule): the winner must have produced the
         # same occupied-bucket count AND the same cluster_field — a
@@ -2381,11 +2316,7 @@ def cow_compact(
             == manifest.get("cluster_field")
         ):
             return winner  # an equivalent compaction won the race
-        raise CommitConflictError(
-            f"manifest v{vnew} of {table_dir} was published by a "
-            "concurrent writer while this compaction was in flight; "
-            "re-run against the new head"
-        ) from None
+        raise
     return manifest
 
 
@@ -2398,10 +2329,7 @@ def cow_read_pruned(
     are keyed by FIELD ID through `cluster_field`, so pruning is
     unaffected by renaming the cluster column.  Returns
     (id-projected df or None, files_scanned, files_total)."""
-    with open(
-        os.path.join(table_dir, f"manifest-v{version}.json")
-    ) as f:
-        m = json.load(f)
+    m = cow_log(table_dir).load(version)
     fs = m.get("file_stats")
     if fs is None:
         raise ValueError(
@@ -2485,7 +2413,7 @@ def src_cow_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = _orders_kcd(spark, sf_dir).withColumn(
         "cents", F.col("cents").cast("int")
     )
-    if not os.path.exists(os.path.join(table_dir, "manifest-v4.json")):
+    if not cow_log(table_dir).exists(4):
         # rerun-safe (ADVICE r14): a crash between the v3 rename and
         # the v4 widen would otherwise leave partial state whose rerun
         # hits the evolution CAS (CommitConflictError) — scratch is
@@ -2577,7 +2505,7 @@ def src_cow_readd(spark: SparkSession, sf_dir: str) -> DataFrame:
     [GAP] build-out) and the stored values only on post-re-add rows."""
     table_dir = scratch_dir("cow_readd", sf_dir)
     base = _orders_kcd(spark, sf_dir)
-    if not os.path.exists(os.path.join(table_dir, "manifest-v6.json")):
+    if not cow_log(table_dir).exists(6):
         # rerun-safe: a crashed partial lifecycle rebuilds from v1
         # (scratch is pid-scoped; partial state means OUR earlier
         # attempt died mid-chain — evolution commits are CAS-once)

@@ -69,15 +69,12 @@ same redelivery commits nothing and the table converges to the exact
 one-shot merge (oracle-checked by the batch twin below).
 
 Concurrent-writer contract (r12): the production commit path
-(`MorCdcSink`) is a snapshot-CAS on plain files, Iceberg-style.  Each
-writer stages its epoch's artifacts under WRITER-UNIQUE directory
-names (`v{N}-{token}` / `dv-v{N}-{token}` — concurrent stagers never
-share a path), then publishes `manifest-v{N}.json` via link(2) from a
-writer-unique temp name: atomic, exactly one winner per version
-number, EEXIST for everyone else.  A loser raises the named
-`CommitConflictError` and retries from a FRESH read (new N, restage),
-so two concurrent writers serialize as N and N+1 — never a silent
-last-manifest-write-wins lost commit.  All artifact paths flow to
+(`MorCdcSink`) stages each epoch's artifacts under WRITER-UNIQUE
+directory names (`v{N}-{token}` / `dv-v{N}-{token}` — concurrent
+stagers never share a path), then publishes version N through the
+manifest log's compare-and-swap (`manifest_log.py` states the
+protocol); a loser retries from a FRESH read (new N, restage), so two
+concurrent writers serialize as N and N+1.  All artifact paths flow to
 readers through the manifest (never reconstructed from version
 arithmetic), staged-but-unpublished directories are invisible to every
 reader and reclaimed by vacuum's reachability sweep, and compaction
@@ -96,13 +93,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_table
+from ..manifest_log import (
+    CommitConflictError,
+    ManifestLog,
+    RetentionError,
+    atomic_json_dump,
+)
 from ..plans.two_phase import bucket_expr, range_buckets
 from ..registry import register
-# the CAS publish resolves through the MODULE at call time —
-# tests patch scans.atomic_json_publish_once as the deterministic
-# race-window seam, so never bind it at import
-from ..sources import scans as _scans
-from ..sources.scans import atomic_json_dump, field_id_hwm, scratch_dir
+from ..sources.scans import field_id_hwm, scratch_dir
 
 MOR_CDC_FILES = 8  # bucket fan-out of the fixture table
 
@@ -115,28 +114,7 @@ MOR_CDC_FILES = 8  # bucket fan-out of the fixture table
 DV_SIDECAR_SCHEMA = "zb bigint, k bigint, v bigint"
 
 
-class CommitConflictError(RuntimeError):
-    """Two writers raced the same manifest version and this one lost.
-
-    Concurrency contract (VERDICT r11 ask #3 — the Iceberg
-    snapshot-CAS analog on plain files): an EXCLUSIVE commit stages
-    its artifacts under writer-unique directory names
-    (`v{{N}}-{{token}}`, `dv-v{{N}}-{{token}}`) so concurrent stagers
-    never touch the same files, then publishes `manifest-v{{N}}.json`
-    via link(2) from a writer-unique temp name — atomic, and EEXIST if
-    another writer landed N first.  Exactly one writer per version
-    number wins; every loser gets this named error and must RETRY FROM
-    A FRESH READ (re-derive N from the advanced manifest chain /
-    ledger and restage — `MorCdcSink` does this automatically).  A
-    pre-check also raises this error when the target manifest or the
-    ledger is already past the expected version, saving the stage work
-    when the conflict is already visible.  Loser/crashed stage
-    directories are unreferenced by ANY manifest and are reclaimed by
-    `mor_cdc_vacuum`'s reachability sweep.  Compaction (`OPTIMIZE`) is
-    single-operator by contract and keeps the non-exclusive path."""
-
-
-class ChangeFeedRetentionError(RuntimeError):
+class ChangeFeedRetentionError(RetentionError):
     """Requested change feed is outside the retained window: VACUUM
     reclaimed the commit's artifacts (prior manifest, DV sidecar, or
     epoch files), so the row-level history for that commit no longer
@@ -144,6 +122,18 @@ class ChangeFeedRetentionError(RuntimeError):
     feeds are readable only for commits whose artifacts are retained;
     a reclaimed version raises this named error instead of surfacing
     an opaque missing-file failure mid-plan."""
+
+
+def main_log(table_dir: str) -> ManifestLog:
+    """The table's main manifest chain (`manifest-v{N}.json`)."""
+    return ManifestLog(table_dir, "manifest-v", ChangeFeedRetentionError)
+
+
+def _branch_log(table_dir: str, branch: str) -> ManifestLog:
+    """WAP branch `branch`'s staged chain (`manifest-{branch}-v{N}.json`)."""
+    return ManifestLog(
+        table_dir, f"manifest-{branch}-v", ChangeFeedRetentionError
+    )
 
 
 def release_local_checkpoints(frames) -> None:
@@ -244,7 +234,7 @@ def mor_cdc_init(
         "commit_cols": {"1": {str(f["id"]): f["name"] for f in schema}},
         "committed_at_us": commit_wallclock_us(None),
     }
-    atomic_json_dump(manifest, os.path.join(table_dir, "manifest-v1.json"))
+    main_log(table_dir).publish(1, manifest)
     return manifest
 
 
@@ -262,10 +252,11 @@ def mor_cdc_commit(
 
     `exclusive=True` is the CONCURRENT-writer mode (see
     `CommitConflictError`): artifacts land under writer-unique
-    directory names and the manifest publish is a link(2) CAS — a
-    lost race raises instead of silently overwriting, and the loser's
-    staged directories are removed here (a crashed loser's are swept
-    by vacuum's reachability rule).  The default non-exclusive path
+    directory names and the manifest publish is the log's CAS
+    (`ManifestLog.publish_once`) — a lost race raises instead of
+    silently overwriting, and the loser's staged directories are
+    removed here (a crashed loser's are swept by vacuum's reachability
+    rule).  The default non-exclusive path
     keeps overwrite-idempotent publishes for the scripted/guarded
     single-writer lifecycle rebuilds, whose crash-recovery contract
     is rerun-rewrites-the-same-version.  `_before_publish` is a test
@@ -285,12 +276,8 @@ def mor_cdc_commit(
     if branch is not None:
         _check_branch_name(branch)
         exclusive = True
-        mpath = os.path.join(
-            table_dir, f"manifest-{branch}-v{version}.json"
-        )
-        if os.path.exists(
-            os.path.join(table_dir, f"manifest-v{version}.json")
-        ):
+        log = _branch_log(table_dir, branch)
+        if main_log(table_dir).exists(version):
             # main advanced past the branch point: publishing this
             # staged commit could never fast-forward — fail early
             raise CommitConflictError(
@@ -298,26 +285,16 @@ def mor_cdc_commit(
                 f"branch {branch!r} is stale — discard and restage "
                 "from the new head"
             )
-        parent = os.path.join(
-            table_dir, f"manifest-{branch}-v{version - 1}.json"
-        )
-        if not os.path.exists(parent):
-            parent = os.path.join(
-                table_dir, f"manifest-v{version - 1}.json"
-            )
+        parent = log if log.exists(version - 1) else main_log(table_dir)
     else:
-        mpath = os.path.join(table_dir, f"manifest-v{version}.json")
-        parent = os.path.join(
-            table_dir, f"manifest-v{version - 1}.json"
-        )
-    if exclusive and os.path.exists(mpath):
+        log = parent = main_log(table_dir)
+    if exclusive and log.exists(version):
         # conflict already visible: fail before staging any artifacts
         raise CommitConflictError(
             f"manifest v{version} of {table_dir} already published by "
             "another writer; retry from a fresh read"
         )
-    with open(parent) as f:
-        prev = json.load(f)
+    prev = parent.load(version - 1)
     key = prev["key"]
     lo, hi = prev["bounds"]
     # The clustering spec travels IN the manifest chain: a commit
@@ -471,22 +448,17 @@ def mor_cdc_commit(
     if exclusive:
         import shutil
 
-
         try:
-            _scans.atomic_json_publish_once(manifest, mpath)
-        except FileExistsError:
+            log.publish_once(version, manifest)
+        except CommitConflictError:
             # lost the CAS: remove OUR staged dirs (they are writer-
             # unique, so this touches no winner artifacts) and raise
             for d in (dv_dir, vdir):
                 shutil.rmtree(d, ignore_errors=True)
             release_local_checkpoints([routed])
-            raise CommitConflictError(
-                f"manifest v{version} of {table_dir} was published by "
-                "a concurrent writer between stage and publish; retry "
-                "from a fresh read"
-            ) from None
+            raise
     else:
-        atomic_json_dump(manifest, mpath)
+        log.publish(version, manifest)
     # both consumers (DV sidecar + appended files) have written: the
     # routed batch's checkpoint blocks are dead weight from here
     release_local_checkpoints([routed])
@@ -532,10 +504,7 @@ def mor_cdc_read(
     contain it; entries written before stats existed are conservatively
     kept.  At 100 TB a point-ish lookup on the clustering key reads
     O(overlapping files), not the table."""
-    with open(
-        os.path.join(table_dir, f"manifest-v{version}.json")
-    ) as f:
-        m = json.load(f)
+    m = main_log(table_dir).load(version)
     return _read_manifest(spark, m, zb_filter, key_range)
 
 
@@ -747,19 +716,16 @@ def _evolve_schema_commit(
 
     Concurrency (VERDICT r13 ask #6 — the single-operator contract is
     now MECHANIZED, not a docstring): the publish routes through the
-    same link(2) CAS as exclusive data commits, so a concurrent
-    evolution, compaction, or exclusive writer targeting the same next
-    version loses with the named `CommitConflictError` instead of
-    silently clobbering.  An evolution is ONE atomic JSON publish (no
+    same `ManifestLog.publish_once` CAS as exclusive data commits, so a
+    concurrent evolution, compaction, or exclusive writer targeting the
+    same next version loses with the named `CommitConflictError` instead
+    of silently clobbering. An evolution is ONE atomic JSON publish (no
     data files), so there is no crash window between doing and
     publishing; a rerun after success targets the NEW head and fails
     loudly in the mutator (e.g. "no column <old>") rather than
     double-applying."""
     version = _latest_main_version(table_dir)
-    with open(
-        os.path.join(table_dir, f"manifest-v{version}.json")
-    ) as f:
-        m = json.load(f)
+    m = main_log(table_dir).load(version)
     if m.get("schema") is None:
         raise ValueError(
             f"{table_dir} predates field-id schemas; rename/drop/widen "
@@ -797,17 +763,7 @@ def _evolve_schema_commit(
         str(vnew): {str(f["id"]): f["name"] for f in schema},
     }
 
-    try:
-        _scans.atomic_json_publish_once(
-            manifest, os.path.join(table_dir, f"manifest-v{vnew}.json")
-        )
-    except FileExistsError:
-        raise CommitConflictError(
-            f"manifest v{vnew} of {table_dir} was published by a "
-            "concurrent writer while this evolution "
-            f"({evolution.get('op')}) was in flight; re-run against "
-            "the new head"
-        ) from None
+    main_log(table_dir).publish_once(vnew, manifest)
     return manifest
 
 
@@ -962,11 +918,11 @@ class MorCdcSink:
     def _latest_manifest_version(self) -> int:
         # fullmatch-parsed main versions (never a branch manifest's
         # name — ADVICE r12), via the shared visible-head rule
-        vs = [_latest_main_version(self.table_dir)]
+        v = _latest_main_version(self.table_dir)
         if self.branch is not None:
             # a branch sink stacks on its own staged head too
-            vs += _branch_versions(self.table_dir, self.branch)
-        return max(max(vs), 1)
+            v = max(v, _branch_log(self.table_dir, self.branch).head())
+        return max(v, 1)
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         if str(epoch_id) in self._read_ledger():
@@ -983,7 +939,7 @@ class MorCdcSink:
         #
         # Concurrency contract (VERDICT r11 ask #3): the commit runs
         # EXCLUSIVE — artifacts staged under writer-unique names, the
-        # manifest published by link(2) CAS — so two concurrent
+        # manifest published by the log's CAS — so two concurrent
         # writers can never both land the same version silently; the
         # loser gets CommitConflictError and retries here from a
         # FRESH read (re-derived N), which serializes them as N and
@@ -1048,37 +1004,14 @@ class MorCdcSink:
 
 _BRANCH_NAME_RE = r"[A-Za-z][A-Za-z0-9_]*"
 
-# Main-chain manifests are matched by FULL name, never by prefix: a
-# branch named 'verify' stages 'manifest-verify-v3.json', which
-# startswith('manifest-v') — prefix matching would feed 'erify-v3' to
-# int() and make the whole table unlistable while any such branch has
-# staged commits (ADVICE r12).  Every listing site goes through
-# `main_manifest_versions` / `_latest_main_version` below.
-import re as _re_mod
 
-_MAIN_MANIFEST_RE = _re_mod.compile(r"manifest-v(\d+)\.json")
-
-
-def main_manifest_versions(table_dir: str) -> list[int]:
-    """All main-chain manifest versions present on disk (ascending),
-    parsed with a fullmatch so WAP branch manifests of ANY legal
-    branch name — including ones starting with 'v' — never reach the
-    int() parse."""
-    if not os.path.isdir(table_dir):
-        return []
-    return sorted(
-        int(m.group(1))
-        for f in os.listdir(table_dir)
-        if (m := _MAIN_MANIFEST_RE.fullmatch(f))
-    )
-
-
-def _has_branch_manifests(table_dir: str) -> bool:
-    return any(
-        f.startswith("manifest-")
-        and f.endswith(".json")
-        and not _MAIN_MANIFEST_RE.fullmatch(f)
-        for f in os.listdir(table_dir)
+def _is_branch_manifest(name: str) -> bool:
+    """Any staged branch manifest: main names are excluded by the
+    log's fullmatch, so branch `verify`'s `manifest-verify-v3.json`
+    is never mistaken for a main version (ADVICE r12)."""
+    return (
+        name.startswith("manifest-") and name.endswith(".json")
+        and main_log("").parse(name) is None
     )
 
 
@@ -1114,46 +1047,23 @@ def _latest_main_version(table_dir: str) -> int:
     some instant — never a staged intermediate."""
     if not os.path.isdir(table_dir):
         return 0
+    log = main_log(table_dir)
     names = os.listdir(table_dir)
-    vs = sorted(
-        int(mm.group(1))
-        for f in names
-        if (mm := _MAIN_MANIFEST_RE.fullmatch(f))
-    )
+    vs = log.versions(names)
     if not vs:
         return 0
-    has_branch = any(
-        f.startswith("manifest-")
-        and f.endswith(".json")
-        and not _MAIN_MANIFEST_RE.fullmatch(f)
-        for f in names
-    )
-    if not has_branch:
+    if not any(_is_branch_manifest(f) for f in names):
         return vs[-1]
     for v in reversed(vs):
-        with open(
-            os.path.join(table_dir, f"manifest-v{v}.json")
-        ) as f:
-            head = json.load(f).get("pending_head")
+        head = log.load(v).get("pending_head")
         if head is None:
             return v
-        if os.path.exists(
-            os.path.join(table_dir, f"manifest-v{int(head)}.json")
-        ):
+        if log.exists(head):
             # the publish completed after our listing: its head is
             # the announced state, strictly newer than anything in
             # the (stale) snapshot
             return int(head)
     return 0
-
-
-def _branch_versions(table_dir: str, branch: str) -> list[int]:
-    pre = f"manifest-{branch}-v"
-    return sorted(
-        int(f[len(pre):-len(".json")])
-        for f in os.listdir(table_dir)
-        if f.startswith(pre) and f.endswith(".json")
-    )
 
 
 def wap_stage(
@@ -1166,8 +1076,10 @@ def wap_stage(
     published under the branch manifest name.  Main readers cannot
     see it; `wap_read` can."""
     _check_branch_name(branch)
-    staged = _branch_versions(table_dir, branch)
-    version = (staged[-1] if staged else _latest_main_version(table_dir)) + 1
+    version = (
+        _branch_log(table_dir, branch).head()
+        or _latest_main_version(table_dir)
+    ) + 1
     return mor_cdc_commit(
         spark, batch, table_dir, version, n_files=n_files, branch=branch
     )
@@ -1185,17 +1097,13 @@ def wap_read(
     same manifest-level file skipping as main reads (staged entries
     carry klo/khi stats exactly like main ones — same commit path)."""
     _check_branch_name(branch)
-    staged = _branch_versions(table_dir, branch)
-    if not staged:
+    log = _branch_log(table_dir, branch)
+    if not log.head():
         return mor_cdc_read(
             spark, table_dir, _latest_main_version(table_dir),
             zb_filter, key_range,
         )
-    with open(
-        os.path.join(table_dir, f"manifest-{branch}-v{staged[-1]}.json")
-    ) as f:
-        m = json.load(f)
-    return _read_manifest(spark, m, zb_filter, key_range)
+    return _read_manifest(spark, log.load(), zb_filter, key_range)
 
 
 def wap_publish(table_dir: str, branch: str) -> dict:
@@ -1227,16 +1135,13 @@ def wap_publish(table_dir: str, branch: str) -> dict:
     `wap_discard` can still abandon it cleanly."""
 
     _check_branch_name(branch)
-    staged = _branch_versions(table_dir, branch)
+    blog, main = _branch_log(table_dir, branch), main_log(table_dir)
+    staged = blog.versions()
     if not staged:
         raise ValueError(
             f"branch {branch!r} of {table_dir} has nothing staged"
         )
-    first = os.path.join(
-        table_dir, f"manifest-{branch}-v{staged[0]}.json"
-    )
-    with open(first) as f:
-        base = json.load(f)["branch_base"]
+    base = blog.load(staged[0])["branch_base"]
     main_head = _latest_main_version(table_dir)
     if main_head != base:
         raise CommitConflictError(
@@ -1246,21 +1151,17 @@ def wap_publish(table_dir: str, branch: str) -> dict:
     head = staged[-1]
     published: list[int] = []
     for v in staged:
-        bpath = os.path.join(table_dir, f"manifest-{branch}-v{v}.json")
-        with open(bpath) as f:
-            m = json.load(f)
+        m = blog.load(v)
         m.pop("branch", None)
         m.pop("branch_base", None)
         if v != head:
             # invisible to the reader-head rule until the head lands
             m["pending_head"] = head
             m["pending_branch"] = branch
-        mpath = os.path.join(table_dir, f"manifest-v{v}.json")
         try:
-            _scans.atomic_json_publish_once(m, mpath)
-        except FileExistsError:
-            with open(mpath) as f:
-                existing = json.load(f)
+            main.publish_once(v, m)
+        except CommitConflictError:
+            existing = main.load(v)
             if (
                 existing.get("pending_branch") == branch
                 or existing == m
@@ -1279,9 +1180,8 @@ def wap_publish(table_dir: str, branch: str) -> dict:
     # head is live: readers flipped base -> head in that one link(2).
     # Only now consume the branch manifests (crash-resume anchor).
     for v in staged:
-        bpath = os.path.join(table_dir, f"manifest-{branch}-v{v}.json")
         try:
-            os.unlink(bpath)
+            os.unlink(blog.path(v))
         except FileNotFoundError:
             pass  # a concurrent resume of the same publish beat us
     return {"branch": branch, "published": published, "head": head}
@@ -1306,32 +1206,28 @@ def wap_discard(table_dir: str, branch: str) -> dict:
     # unlink this branch's headless mid-publish intermediates FIRST:
     # once the branch manifests are gone the fast-path head rule would
     # otherwise resolve one of them as latest (an unaudited state)
-    for v in main_manifest_versions(table_dir):
-        mp = os.path.join(table_dir, f"manifest-v{v}.json")
-        with open(mp) as f:
-            m = json.load(f)
-        if m.get("pending_branch") == branch and not os.path.exists(
-            os.path.join(table_dir, f"manifest-v{m['pending_head']}.json")
+    main, blog = main_log(table_dir), _branch_log(table_dir, branch)
+    for v in main.versions():
+        m = main.load(v)
+        if m.get("pending_branch") == branch and not main.exists(
+            m["pending_head"]
         ):
-            os.unlink(mp)
+            os.unlink(main.path(v))
     main_reachable: set[str] = set()
-    for v in range(1, _latest_main_version(table_dir) + 1):
-        mp = os.path.join(table_dir, f"manifest-v{v}.json")
-        if not os.path.exists(mp):
-            continue  # vacuumed-away history
-        with open(mp) as f:
-            m = json.load(f)
+    head = _latest_main_version(table_dir)
+    for v in main.versions():
+        if v > head:
+            continue
+        m = main.load(v)
         for entries in m["files"].values():
             main_reachable.update(
                 os.path.dirname(e["path"]) for e in entries
             )
         main_reachable.update(d["path"] for d in m["dvs"])
-    staged = _branch_versions(table_dir, branch)
+    staged = blog.versions()
     removed: set[str] = set()
     for v in staged:
-        bpath = os.path.join(table_dir, f"manifest-{branch}-v{v}.json")
-        with open(bpath) as f:
-            m = json.load(f)
+        m = blog.load(v)
         base = m["branch_base"]
         for entries in m["files"].values():
             for e in entries:
@@ -1340,7 +1236,7 @@ def wap_discard(table_dir: str, branch: str) -> dict:
         for d in m["dvs"]:
             if int(d["v"]) > base:
                 removed.add(d["path"])
-        os.unlink(bpath)
+        os.unlink(blog.path(v))
     removed -= main_reachable
     for path in sorted(removed):
         shutil.rmtree(path, ignore_errors=True)
@@ -1419,7 +1315,7 @@ def stream_mor_cdc_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
     done = (
         os.path.isdir(table_dir)
         and _latest_main_version(table_dir) >= 4
-        and not _branch_versions(table_dir, "audit")
+        and not _branch_log(table_dir, "audit").head()
     )
     if not done:
         edit = (
@@ -1448,9 +1344,7 @@ def stream_mor_cdc_wap(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("version", F.lit(3))
             .withColumn("op", F.lit("u"))
         )
-        if not os.path.exists(
-            os.path.join(table_dir, "manifest-v1.json")
-        ):
+        if not main_log(table_dir).exists(1):
             mor_cdc_init(
                 spark, d.withColumn("version", F.lit(0)), table_dir,
                 "doc_id",
@@ -1575,9 +1469,7 @@ def stream_mor_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "n_chars"
     )
     final = len(_doc_waves(d)) + 1
-    if not os.path.exists(
-        os.path.join(table_dir, f"manifest-v{final}.json")
-    ):
+    if not main_log(table_dir).exists(final):
         base = d.withColumn("version", F.lit(0))
         mor_cdc_init(spark, base, table_dir, "doc_id")
         for i, wave in enumerate(_doc_waves(d)):
@@ -1648,8 +1540,7 @@ def stream_mor_cdc_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_streaming.py via inputFiles)."""
     stream_mor_cdc(spark, sf_dir)  # build-if-missing the shared table
     table_dir = scratch_dir("mor_cdc", sf_dir)
-    with open(os.path.join(table_dir, "manifest-v4.json")) as f:
-        lo, hi = json.load(f)["bounds"]
+    lo, hi = main_log(table_dir).load(4)["bounds"]
     span = int(hi) - int(lo) + 1
     key_range = (int(lo) + span // 4, int(lo) + span // 2)
     return mor_cdc_read(
@@ -1686,21 +1577,18 @@ def mor_cdc_compact(
     log retention) may vacuum it past that horizon.
 
     Concurrency (VERDICT r13 ask #6): artifacts stage under
-    writer-unique directory names and the manifest publishes through
-    the link(2) CAS, exactly like exclusive data commits — a
-    concurrent evolution/compaction/exclusive-writer race resolves to
-    ONE winner; the loser cleans up its staged directories and either
-    adopts the winner (when the winner is an equivalent compaction of
-    the same source version) or raises the named
+    writer-unique directory names and the manifest publishes through the
+    log's CAS (`ManifestLog.publish_once`), exactly like exclusive data
+    commits — a concurrent evolution/compaction/exclusive-writer race
+    resolves to ONE winner; the loser cleans up its staged directories
+    and either adopts the winner (when the winner is an equivalent
+    compaction of the same source version) or raises the named
     `CommitConflictError`.  A crash before the publish leaves only
     unreferenced staged dirs, which `mor_cdc_vacuum` reclaims."""
     import shutil
     import uuid
 
-    with open(
-        os.path.join(table_dir, f"manifest-v{version}.json")
-    ) as f:
-        m = json.load(f)
+    m = main_log(table_dir).load(version)
     key = m["key"]
     live = mor_cdc_read(spark, table_dir, version)
     if n_files is None:
@@ -1850,29 +1738,20 @@ def mor_cdc_compact(
         }
 
     try:
-        _scans.atomic_json_publish_once(
-            manifest, os.path.join(table_dir, f"manifest-v{vnew}.json")
-        )
-    except FileExistsError:
+        main_log(table_dir).publish_once(vnew, manifest)
+    except CommitConflictError:
         # lost the maintenance CAS: remove OUR staged dirs (writer-
         # unique, so this touches no winner artifacts), then either
         # adopt an equivalent winner or surface the named conflict
         shutil.rmtree(vdir, ignore_errors=True)
         if floor_path is not None:
             shutil.rmtree(floor_path, ignore_errors=True)
-        with open(
-            os.path.join(table_dir, f"manifest-v{vnew}.json")
-        ) as f:
-            winner = json.load(f)
+        winner = main_log(table_dir).load(vnew)
         if winner.get("compacted_from") == version and int(
             winner.get("n_files", -1)
         ) == int(n_files):
             return winner  # an equivalent compaction won the race
-        raise CommitConflictError(
-            f"manifest v{vnew} of {table_dir} was published by a "
-            "concurrent writer while this compaction was in flight; "
-            "re-run against the new head"
-        ) from None
+        raise
     return manifest
 
 
@@ -1952,19 +1831,12 @@ def stream_mor_cdc_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "n_chars"
     )
     final = len(_doc_waves(d)) + 1
-    if not os.path.exists(
-        os.path.join(table_dir, f"manifest-v{final}.json")
-    ):
+    if not main_log(table_dir).exists(final):
         stream_mor_cdc(spark, sf_dir).collect()
     vnew = final + 1
-    if not os.path.exists(
-        os.path.join(table_dir, f"manifest-v{vnew}.json")
-    ):
+    if not main_log(table_dir).exists(vnew):
         mor_cdc_compact(spark, table_dir, final)
-    with open(
-        os.path.join(table_dir, f"manifest-v{final}.json")
-    ) as f:
-        m_old = json.load(f)
+    m_old = main_log(table_dir).load(final)
     files_before = spark.createDataFrame(
         [(int(z), len(entries)) for z, entries in m_old["files"].items()],
         "zb bigint, n_files_before bigint",
@@ -1975,10 +1847,7 @@ def stream_mor_cdc_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     dv_rows = dv.groupBy(F.col("zb").cast("bigint").alias("zb")).agg(
         F.count("*").cast("bigint").alias("dv_rows_frozen")
     )
-    with open(
-        os.path.join(table_dir, f"manifest-v{vnew}.json")
-    ) as f:
-        m_new = json.load(f)
+    m_new = main_log(table_dir).load(vnew)
     from ..sources.zonemap import _grouped_manifest_scan
 
     out = _grouped_manifest_scan(
@@ -2087,9 +1956,7 @@ def stream_mor_cdc_evolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     waves = _evolve_waves(d)
     final = len(waves) + 1
-    if not os.path.exists(
-        os.path.join(table_dir, f"manifest-v{final}.json")
-    ):
+    if not main_log(table_dir).exists(final):
         base = d.withColumn("version", F.lit(0))
         mor_cdc_init(spark, base, table_dir, "doc_id")
         for i, wave in enumerate(waves):
@@ -2168,9 +2035,7 @@ def _rename_lifecycle(spark: SparkSession, sf_dir: str) -> str:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.col("n_chars").cast("int").alias("n_chars")
     )
-    if not os.path.exists(
-        os.path.join(table_dir, "manifest-v7.json")
-    ):
+    if not main_log(table_dir).exists(7):
         # rerun-safe (the src_cow_rename rule, ADVICE r14): the
         # rename/widen/drop steps resolve the CURRENT head, so a
         # rerun over a crashed partial chain would raise ("no column
@@ -2266,9 +2131,7 @@ def stream_mor_cdc_readd(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").cast("int").alias("n_chars")
     )
-    if not os.path.exists(
-        os.path.join(table_dir, "manifest-v6.json")
-    ):
+    if not main_log(table_dir).exists(6):
         # rerun-safe (the src_cow_readd rule): a crash mid-chain
         # leaves a head whose schema already carries flag/quality, so
         # a rerun's evolution steps (which derive versions and names
@@ -2449,9 +2312,7 @@ def stream_mor_cdc_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     waves = _doc_waves(d)
     final = len(waves) + 2  # +1 base, +1 compaction
-    if not os.path.exists(
-        os.path.join(table_dir, f"manifest-v{final}.json")
-    ):
+    if not main_log(table_dir).exists(final):
         mor_cdc_init(
             spark, d.withColumn("version", F.lit(0)), table_dir,
             "doc_id",
@@ -2462,16 +2323,12 @@ def stream_mor_cdc_rebucket(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, table_dir, 3, n_files=MOR_CDC_FILES * 2
         )
         mor_cdc_commit(spark, waves[2], table_dir, 5)
-    with open(
-        os.path.join(table_dir, f"manifest-v{final}.json")
-    ) as f:
-        m = json.load(f)
+    m = main_log(table_dir).load(final)
     # occupied-bucket count from the compaction's MANIFEST (one entry
     # per occupied bucket) — paths derive from manifests, never from
     # version arithmetic (the compaction stages under a writer-unique
     # v4-{token} name since the r14 maintenance CAS)
-    with open(os.path.join(table_dir, "manifest-v4.json")) as f:
-        n_dirs = len(json.load(f)["files"])
+    n_dirs = len(main_log(table_dir).load(4)["files"])
     return mor_cdc_read(spark, table_dir, final).select(
         "doc_id",
         "lang",
@@ -2518,19 +2375,21 @@ def mor_cdc_vacuum(
         retain = max(retain, latest - int(floor) + 1)
     reachable_data: set[str] = set()
     reachable_dv: set[str] = set()
-    roots = [
-        os.path.join(table_dir, f"manifest-v{v}.json")
-        for v in range(latest - retain + 1, latest + 1)
-    ] + [
-        os.path.join(table_dir, f)
+    log = main_log(table_dir)
+    branches = sorted({
+        f[len("manifest-"):].rsplit("-v", 1)[0]
         for f in os.listdir(table_dir)
-        if f.startswith("manifest-")
-        and f.endswith(".json")
-        and not _re.fullmatch(r"manifest-v\d+\.json", f)
+        if _is_branch_manifest(f)
+    })
+    roots = [
+        log.load(v) for v in range(latest - retain + 1, latest + 1)
+    ] + [
+        blog.load(v)
+        for b in branches
+        for blog in [_branch_log(table_dir, b)]
+        for v in blog.versions()
     ]
-    for mp in roots:
-        with open(mp) as f:
-            m = json.load(f)
+    for m in roots:
         for entries in m["files"].values():
             reachable_data.update(e["path"] for e in entries)
         reachable_dv.update(d["path"] for d in m["dvs"])
@@ -2568,10 +2427,7 @@ def mor_cdc_vacuum(
     rm_dv = sorted(present_dv - reachable_dv)
     for path in rm_data + rm_dv:
         shutil.rmtree(path)
-    for v in range(1, latest - retain + 1):
-        mp = os.path.join(table_dir, f"manifest-v{v}.json")
-        if os.path.exists(mp):
-            os.remove(mp)
+    log.expire(latest - retain + 1)
     return {
         "dirs_before": len(present_data),
         "dirs_removed": len(rm_data),
@@ -2722,15 +2578,11 @@ def _feed_dv_context(
     def _src(path: str) -> int:
         return sources.setdefault(path, len(sources))
 
+    log = main_log(table_dir)
     for version in versions:
-        mpath = os.path.join(table_dir, f"manifest-v{version}.json")
-        prev_mpath = os.path.join(
-            table_dir, f"manifest-v{version - 1}.json"
-        )
-        if not os.path.exists(mpath):
+        if not log.exists(version):
             continue
-        with open(mpath) as f:
-            m = json.load(f)
+        m = log.load(version)
         dv_dir = next(
             (d["path"] for d in m["dvs"] if int(d["v"]) == version),
             os.path.join(table_dir, f"dv-v{version}"),
@@ -2739,7 +2591,7 @@ def _feed_dv_context(
             m.get("compacted_from") is not None or m.get("evolution")
         ) and not os.path.isdir(dv_dir):
             continue  # empty feed by definition
-        if not (os.path.exists(prev_mpath) and os.path.isdir(dv_dir)):
+        if not (log.exists(version - 1) and os.path.isdir(dv_dir)):
             continue  # retention error; change_feed raises it
         prior_ids = [
             _src(d["path"])
@@ -2859,17 +2711,15 @@ def mor_cdc_change_feed(
     the table never made, corrupting any downstream -pre/+post fold;
     pinned by the redelivery leg of
     tests/test_properties.py::test_mor_cdc_feed_reconstructs_history."""
-    mpath = os.path.join(table_dir, f"manifest-v{version}.json")
-    prev_mpath = os.path.join(table_dir, f"manifest-v{version - 1}.json")
-    if not os.path.exists(mpath):
+    log = main_log(table_dir)
+    if not log.exists(version):
         raise ChangeFeedRetentionError(
             f"change feed requested for commit v{version} of "
             f"{table_dir}, but its manifest is not retained (vacuumed "
             "or never committed); feeds are readable only within the "
             "retained window"
         )
-    with open(mpath) as f:
-        m = json.load(f)
+    m = log.load(version)
     key = m["key"]
     # this commit's DV sidecar, located through the MANIFEST (an
     # exclusive commit's sidecar carries a writer-unique suffix, so
@@ -2901,7 +2751,7 @@ def mor_cdc_change_feed(
                 )
             ],
         )
-    if not (os.path.exists(prev_mpath) and os.path.isdir(dv_dir)):
+    if not (log.exists(version - 1) and os.path.isdir(dv_dir)):
         raise ChangeFeedRetentionError(
             f"change feed requested for commit v{version} of "
             f"{table_dir}, but its pre-image manifest "
@@ -2922,6 +2772,14 @@ def mor_cdc_change_feed(
     # except its build sides are ExistingRDDs, not sidecar re-scans.
     if _ctx is None or version not in _ctx:
         _ctx = _feed_dv_context(spark, table_dir, [version])
+    if version not in _ctx:
+        # a vacuum reclaimed the sidecar or pre-image manifest between
+        # the checks above and the context read (ADVICE r16 #4)
+        raise ChangeFeedRetentionError(
+            f"change feed for commit v{version} of {table_dir} lost "
+            "its DV sidecar or pre-image manifest to a concurrent "
+            "vacuum; feeds are readable only within the retained window"
+        )
     dv_agg, churned = _ctx[version]
     ckpts: list[DataFrame] = []
     post_paths = [
@@ -2953,8 +2811,7 @@ def mor_cdc_change_feed(
         # and types CURRENT AT v{N-1}; map them to THIS commit's
         # schema by field id (rename) and cast (widen), so pre/post
         # images line up even when the evolution sits between them
-        with open(prev_mpath) as f:
-            prev_m = json.load(f)
+        prev_m = log.load(version - 1)
         prev_names = {
             f["id"]: f["name"] for f in prev_m.get("schema", [])
         }
@@ -3056,10 +2913,7 @@ def mor_cdc_change_feed_span(
 
     Retention composes per commit: any vacuumed feed in the span
     raises the lane's named `ChangeFeedRetentionError`."""
-    with open(
-        os.path.join(table_dir, f"manifest-v{to_version}.json")
-    ) as f:
-        m_to = json.load(f)
+    m_to = main_log(table_dir).load(to_version)
     schema_to = m_to.get("schema")
     key_to = m_to["key"]
     ckpts = []
@@ -3074,10 +2928,7 @@ def mor_cdc_change_feed_span(
         feed = mor_cdc_change_feed(spark, table_dir, v, _ctx=ctx)
         ckpts += getattr(feed, "_ckpt_intermediates", [])
         if schema_to is not None:
-            with open(
-                os.path.join(table_dir, f"manifest-v{v}.json")
-            ) as f:
-                m_v = json.load(f)
+            m_v = main_log(table_dir).load(v)
             names_v = {
                 fld["id"]: fld["name"]
                 for fld in m_v.get("schema", [])
@@ -3173,9 +3024,7 @@ def stream_mor_cdc_feed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "n_chars"
     )
     final = len(_doc_waves(d)) + 1
-    if not os.path.exists(
-        os.path.join(table_dir, f"manifest-v{final}.json")
-    ):
+    if not main_log(table_dir).exists(final):
         stream_mor_cdc(spark, sf_dir).collect()
     out = None
     ctx = _feed_dv_context(spark, table_dir, list(range(2, final + 1)))
@@ -3243,9 +3092,7 @@ def ivm_stream_feed_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", "n_chars"
     )
     final = len(_doc_waves(d)) + 1
-    if not os.path.exists(
-        os.path.join(table_dir, f"manifest-v{final}.json")
-    ):
+    if not main_log(table_dir).exists(final):
         stream_mor_cdc(spark, sf_dir).collect()
     view1 = (
         mor_cdc_read(spark, table_dir, 1)

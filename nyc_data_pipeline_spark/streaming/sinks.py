@@ -272,7 +272,7 @@ class ZoneMapAppendSink:
             return
         version = (max((int(v) for v in ledger.values()), default=1)) + 1
         _zm_append(self.spark, batch_df, self.table_dir, version)
-        from ..sources.scans import atomic_json_dump
+        from ..manifest_log import atomic_json_dump
 
         ledger[str(epoch_id)] = version
         atomic_json_dump(ledger, self._ledger_path())

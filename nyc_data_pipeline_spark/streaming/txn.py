@@ -11,10 +11,10 @@ level of indirection — a catalog version file
     catalog-v{N}.json = {"tables": {name: {"dir": ..., "version": V}},
                          "committed_at_us": ...}
 
-published by the same link(2) compare-and-swap the table manifests
-use.  Catalog readers resolve EVERY table through one catalog version,
-so the set of visible table versions flips atomically with a single
-pointer swap:
+published by the same compare-and-swap the table manifests use
+(`manifest_log.py`).  Catalog readers resolve EVERY table through one
+catalog version, so the set of visible table versions flips atomically
+with a single pointer swap:
 
 - `txn_commit` publishes the new catalog version; losers of the CAS
   retry from a fresh read (validating their table versions still
@@ -57,58 +57,29 @@ in); this module is the missing consistency layer between them.
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.scans import atomic_json_publish_once
-from .mor_cdc import CommitConflictError, mor_cdc_read
+from ..manifest_log import CommitConflictError, ManifestLog, RetentionError
+from .mor_cdc import main_log, mor_cdc_read
 
 
-def _catalog_path(catalog_dir: str, version: int) -> str:
-    return os.path.join(catalog_dir, f"catalog-v{version}.json")
-
-
-def catalog_latest(catalog_dir: str) -> int:
-    """Highest published catalog version (0 when none)."""
-    if not os.path.isdir(catalog_dir):
-        return 0
-    return max(
-        (
-            int(f[len("catalog-v"):-len(".json")])
-            for f in os.listdir(catalog_dir)
-            if f.startswith("catalog-v") and f.endswith(".json")
-        ),
-        default=0,
-    )
-
-
-class CatalogRetentionError(RuntimeError):
+class CatalogRetentionError(RetentionError):
     """The requested catalog version existed but `catalog_vacuum`
     reclaimed it — the cross-table snapshot is gone and must never be
     silently substituted with a nearby one (the table-side
     TimeTravelRetentionError rule applied to the catalog chain)."""
 
 
+def catalog_log(catalog_dir: str) -> ManifestLog:
+    """The catalog chain (`catalog-v{N}.json`)."""
+    return ManifestLog(catalog_dir, "catalog-v", CatalogRetentionError)
+
+
 def catalog_load(catalog_dir: str, version: int | None = None) -> dict:
     """Load one catalog version (latest when None).  A version the
     catalog never had is a ValueError; one reclaimed by
     `catalog_vacuum` is the named `CatalogRetentionError`."""
-    latest = catalog_latest(catalog_dir)
-    if version is None:
-        version = latest
-    if version < 1 or version > latest:
-        raise ValueError(f"catalog {catalog_dir} has no version {version}")
-    path = _catalog_path(catalog_dir, version)
-    if not os.path.exists(path):
-        raise CatalogRetentionError(
-            f"catalog version {version} of {catalog_dir} was vacuumed "
-            f"(retained floor is higher); earliest retained snapshot "
-            "is the oldest remaining catalog-v*.json"
-        )
-    with open(path) as f:
-        return json.load(f)
+    return catalog_log(catalog_dir).load(version)
 
 
 def catalog_load_as_of(catalog_dir: str, ts_us: int) -> dict:
@@ -118,10 +89,8 @@ def catalog_load_as_of(catalog_dir: str, ts_us: int) -> dict:
     version that was visible AT THAT INSTANT, giving a historically
     consistent multi-table snapshot no per-table resolution could
     reconstruct."""
-    from ..sources.timetravel import resolve_version_as_of
-
-    v = resolve_version_as_of(catalog_dir, ts_us, prefix="catalog-v")
-    return catalog_load(catalog_dir, v)
+    log = catalog_log(catalog_dir)
+    return log.load(log.as_of(ts_us))
 
 
 def catalog_vacuum(catalog_dir: str, retain: int = 1) -> dict:
@@ -133,13 +102,9 @@ def catalog_vacuum(catalog_dir: str, retain: int = 1) -> dict:
         # retain=0 would delete the NEWEST catalog version too,
         # permanently bricking catalog_load/txn_commit (ADVICE r12)
         raise ValueError(f"retain must be >= 1, got {retain}")
-    latest = catalog_latest(catalog_dir)
-    removed = []
-    for v in range(1, latest - retain + 1):
-        p = _catalog_path(catalog_dir, v)
-        if os.path.exists(p):
-            os.remove(p)
-            removed.append(v)
+    log = catalog_log(catalog_dir)
+    latest = log.head()
+    removed = log.expire(latest - retain + 1)
     return {"retained": list(range(max(1, latest - retain + 1), latest + 1)),
             "removed": removed}
 
@@ -149,14 +114,10 @@ def catalog_table_floor(catalog_dir: str, table: str) -> int:
     version references — the floor a per-table vacuum must keep so
     every retained cross-table snapshot stays readable (pass
     `retain >= table_latest - floor + 1` to that table's vacuum)."""
-    latest = catalog_latest(catalog_dir)
+    log = catalog_log(catalog_dir)
     floor = None
-    for v in range(1, latest + 1):
-        p = _catalog_path(catalog_dir, v)
-        if not os.path.exists(p):
-            continue
-        with open(p) as f:
-            tv = json.load(f)["tables"][table]["version"]
+    for v in log.versions():
+        tv = log.load(v)["tables"][table]["version"]
         floor = tv if floor is None else min(floor, tv)
     if floor is None:
         raise ValueError(f"catalog {catalog_dir} has no retained versions")
@@ -235,12 +196,10 @@ def _infer_member_kind(tdir: str, version: int) -> str:
       ivfpq-manifest-v{N}) — reclaim stays with the lane's
       swap/rebuild lifecycle
     """
-    p = os.path.join(tdir, f"manifest-v{int(version)}.json")
-    if not os.path.exists(p):
+    log = main_log(tdir)
+    if not log.exists(version):
         return "artifact"
-    with open(p) as f:
-        m = json.load(f)
-    return "table" if "files" in m else "view"
+    return "table" if "files" in log.load(version) else "view"
 
 
 def txn_catalog_init(
@@ -270,7 +229,7 @@ def txn_catalog_init(
         "tables": members,
         "committed_at_us": commit_wallclock_us(None),
     }
-    atomic_json_publish_once(cat, _catalog_path(catalog_dir, 1))
+    catalog_log(catalog_dir).publish_once(1, cat)
     return cat
 
 
@@ -301,10 +260,11 @@ def txn_commit(
         # last_err=None — an opaque TypeError instead of the named
         # contract error (ADVICE r12)
         raise ValueError(f"retries must be >= 1, got {retries}")
+    log = catalog_log(catalog_dir)
     last_err: Exception | None = None
     for _ in range(retries):
-        latest = catalog_latest(catalog_dir)
-        cat = catalog_load(catalog_dir, latest)
+        latest = log.head()
+        cat = log.load(latest)
         tables = {k: dict(v) for k, v in cat["tables"].items()}
         for name, v in updates.items():
             if name not in tables:
@@ -341,13 +301,11 @@ def txn_commit(
             _before_publish()
             _before_publish = None
         try:
-            atomic_json_publish_once(
-                new, _catalog_path(catalog_dir, latest + 1)
-            )
+            log.publish_once(latest + 1, new)
             return new
-        except FileExistsError:
+        except CommitConflictError as e:
             # lost the CAS: validate our updates against the mover
-            fresh = catalog_load(catalog_dir)
+            fresh = log.load()
             for name, v in updates.items():
                 if fresh["tables"][name]["version"] > int(v):
                     raise CommitConflictError(
@@ -356,9 +314,7 @@ def txn_commit(
                         f"transaction's v{v}; re-stage from the new "
                         "snapshot"
                     ) from None
-            last_err = CommitConflictError(
-                f"catalog {catalog_dir} CAS lost at v{latest + 1}"
-            )
+            last_err = e
             continue  # disjoint-table mover: rebase and retry
     raise last_err  # exhausted retries under sustained contention
 
@@ -397,13 +353,13 @@ def txn_publish_branches(
     some table publishes leaves catalog readers on the old snapshot
     and the rerun completes (already-published tables no-op through
     the `updates`-equal path in `txn_commit`)."""
-    from .mor_cdc import _branch_versions, _latest_main_version, wap_publish
+    from .mor_cdc import _branch_log, _latest_main_version, wap_publish
 
     cat = catalog_load(catalog_dir)
     updates: dict[str, int] = {}
     for name in tables:
         tdir = cat["tables"][name]["dir"]
-        if _branch_versions(tdir, branch):
+        if _branch_log(tdir, branch).head():
             wap_publish(tdir, branch)
         updates[name] = _latest_main_version(tdir)
     return txn_commit(catalog_dir, updates)
@@ -509,22 +465,18 @@ def _register_txn_query():
         cat_dir = scratch_dir("txn_catalog", sf_dir)
         o_dir = scratch_dir("txn_orders", sf_dir)
         c_dir = scratch_dir("txn_cust", sf_dir)
-        if catalog_latest(cat_dir) < 2:
-            if not os.path.exists(
-                os.path.join(o_dir, "manifest-v1.json")
-            ):
+        if catalog_log(cat_dir).head() < 2:
+            if not main_log(o_dir).exists(1):
                 mor_cdc_init(
                     spark, o.withColumn("version", F.lit(0)), o_dir,
                     "o_orderkey",
                 )
-            if not os.path.exists(
-                os.path.join(c_dir, "manifest-v1.json")
-            ):
+            if not main_log(c_dir).exists(1):
                 mor_cdc_init(
                     spark, c.withColumn("version", F.lit(0)), c_dir,
                     "c_custkey",
                 )
-            if catalog_latest(cat_dir) < 1:
+            if catalog_log(cat_dir).head() < 1:
                 txn_catalog_init(
                     cat_dir,
                     {"orders": (o_dir, 1), "customer": (c_dir, 1)},

@@ -37,8 +37,8 @@ from nyc_data_pipeline_spark.catalog import load_table
 from nyc_data_pipeline_spark.session import get_spark
 from nyc_data_pipeline_spark.similarity.cdc_maintain import (
     _emb_cdc_wave,
-    _load_cdcidx_manifest,
     build_cdc_index,
+    cdcidx_log,
     maintain_ivf_pq_from_feed,
 )
 from nyc_data_pipeline_spark.sources.scans import scratch_dir
@@ -103,7 +103,7 @@ def main(ks: list[int]) -> None:
         )
         t_rebuild = time.time() - t0
         assert m2["n_rows"] == mr["n_rows"], (m2["n_rows"], mr["n_rows"])
-        assert _load_cdcidx_manifest(idx_dir)["version"] == 2
+        assert cdcidx_log(idx_dir).load()["version"] == 2
         out.append(
             {
                 "k": k,

@@ -41,6 +41,7 @@ from nyc_data_pipeline_spark.operators.incremental import (
     _ivm_delta_b,
     build_join_view,
     maintain_join_view,
+    view_log,
 )
 from nyc_data_pipeline_spark.session import get_spark
 from nyc_data_pipeline_spark.sources.scans import scratch_dir
@@ -73,8 +74,7 @@ def main(ks):
         a1 = a1.localCheckpoint(eager=True)
         tdir = scratch_dir(f"ivm_probe_k{k}", SF_DIR)
         build_join_view(a1, b1, tdir)
-        with open(os.path.join(tdir, "manifest-v1.json")) as f:
-            m = json.load(f)
+        m = view_log(tdir).load(1)
         seg_v1 = spark.read.parquet(m["seg_view"])
         cust_v1 = spark.read.parquet(m["cust_view"])
 
@@ -230,8 +230,7 @@ def stream_arm(spark, ks):
             mor_cdc_read(spark, b_dir, 1).select("c", "segment"),
             tdir,
         )
-        with open(os.path.join(tdir, "manifest-v1.json")) as f:
-            m1 = json.load(f)
+        m1 = view_log(tdir).load(1)
         seg_v1 = spark.read.parquet(m1["seg_view"])
         cust_v1 = spark.read.parquet(m1["cust_view"])
 

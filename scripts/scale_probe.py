@@ -960,9 +960,8 @@ def probe(spark, k: int) -> dict[str, float]:
         ).filter(F.col("doc_id") % BATCH_MOD == 0)
         idx_dir = _sdir(f"minhash_index_probe_k{k}", SF_DIR)
         build_minhash_index(corpus_k, idx_dir)
-        import json as _json
-        with open(f"{idx_dir}/manifest-v1.json") as fh:
-            _manifest = _json.load(fh)
+        from nyc_data_pipeline_spark.manifest_log import ManifestLog
+        _manifest = ManifestLog(idx_dir).load(1)
         run(
             "dedup_index_probe",
             probe_minhash_index(spark, _manifest, batch_1),

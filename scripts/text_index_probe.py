@@ -35,10 +35,10 @@ from pyspark.sql import functions as F
 
 from nyc_data_pipeline_spark.catalog import load_table
 from nyc_data_pipeline_spark.functions.text_index import (
-    _load_tidx_manifest,
     _text_waves,
     build_text_index,
     maintain_text_index_from_feed,
+    tidx_log,
 )
 from nyc_data_pipeline_spark.session import get_spark
 from nyc_data_pipeline_spark.sources.scans import scratch_dir
@@ -97,7 +97,7 @@ def main(ks: list[int]) -> None:
         )
         t_rebuild = time.time() - t0
         assert (m2["n_docs"], m2["sum_dl"]) == (mr["n_docs"], mr["sum_dl"])
-        assert _load_tidx_manifest(idx_dir)["version"] == 2
+        assert tidx_log(idx_dir).load()["version"] == 2
         out.append(
             {
                 "k": k,

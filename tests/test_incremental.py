@@ -367,7 +367,7 @@ def test_catch_up_join_view_refuses_backward_cursors(spark, tmp_path):
     from nyc_data_pipeline_spark.operators.incremental import (
         catch_up_join_view,
     )
-    from nyc_data_pipeline_spark.sources.scans import atomic_json_dump
+    from nyc_data_pipeline_spark.manifest_log import atomic_json_dump
     from nyc_data_pipeline_spark.streaming.mor_cdc import mor_cdc_init
 
     a_dir = str(tmp_path / "a")
@@ -428,7 +428,7 @@ def test_catch_up_join_view_folds_across_base_table_evolution(
         build_join_view,
         catch_up_join_view,
     )
-    from nyc_data_pipeline_spark.sources.scans import atomic_json_dump
+    from nyc_data_pipeline_spark.manifest_log import atomic_json_dump
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         mor_cdc_commit,
         mor_cdc_init,
@@ -698,7 +698,7 @@ def test_catalog_view_ignores_unflipped_then_consumes_after_flip(
         build_join_view,
         catch_up_view_from_catalog,
     )
-    from nyc_data_pipeline_spark.sources.scans import atomic_json_dump
+    from nyc_data_pipeline_spark.manifest_log import atomic_json_dump
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         mor_cdc_commit,
         mor_cdc_init,
@@ -806,14 +806,14 @@ def test_view_as_catalog_member_never_torn(spark, tmp_path):
         catch_up_join_view,
         refresh_view_txn,
     )
-    from nyc_data_pipeline_spark.sources.scans import atomic_json_dump
+    from nyc_data_pipeline_spark.manifest_log import atomic_json_dump
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         mor_cdc_commit,
         mor_cdc_init,
         mor_cdc_read,
     )
     from nyc_data_pipeline_spark.streaming.txn import (
-        catalog_latest,
+        catalog_log,
         catalog_load,
         txn_catalog_init,
     )
@@ -848,7 +848,7 @@ def test_view_as_catalog_member_never_torn(spark, tmp_path):
         """Every retained catalog version pairs base and view from
         the same snapshot: the catalog view == recompute from the
         catalog-resolved base states."""
-        for v in range(1, catalog_latest(cat) + 1):
+        for v in range(1, catalog_log(cat).head() + 1):
             snap = catalog_load(cat, v)["tables"]
             base = (
                 mor_cdc_read(spark, a_dir, snap["orders"]["version"])
@@ -958,7 +958,7 @@ def test_refresh_view_txn_crosses_base_evolution_one_flip(
         catalog_read_view,
         refresh_view_txn,
     )
-    from nyc_data_pipeline_spark.sources.scans import atomic_json_dump
+    from nyc_data_pipeline_spark.manifest_log import atomic_json_dump
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         mor_cdc_commit,
         mor_cdc_init,
@@ -967,7 +967,7 @@ def test_refresh_view_txn_crosses_base_evolution_one_flip(
         mor_cdc_widen_column,
     )
     from nyc_data_pipeline_spark.streaming.txn import (
-        catalog_latest,
+        catalog_log,
         catalog_load,
         txn_catalog_init,
     )
@@ -999,7 +999,7 @@ def test_refresh_view_txn_crosses_base_evolution_one_flip(
     )
 
     def assert_consistent():
-        for v in range(1, catalog_latest(cat) + 1):
+        for v in range(1, catalog_log(cat).head() + 1):
             snap = catalog_load(cat, v)["tables"]
             a = mor_cdc_read(
                 spark, a_dir, snap["orders"]["version"]
@@ -1086,7 +1086,7 @@ def test_multi_table_wap_then_view_flip_end_to_end(spark, tmp_path):
         catalog_read_view_as_of,
         refresh_view_txn,
     )
-    from nyc_data_pipeline_spark.sources.scans import atomic_json_dump
+    from nyc_data_pipeline_spark.manifest_log import atomic_json_dump
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         mor_cdc_init,
         wap_read,
@@ -1191,7 +1191,7 @@ def test_catalog_member_kind_persisted_and_routes_vacuum(
         build_join_view,
         catalog_read_view,
     )
-    from nyc_data_pipeline_spark.sources.scans import atomic_json_dump
+    from nyc_data_pipeline_spark.manifest_log import atomic_json_dump
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         mor_cdc_commit,
         mor_cdc_init,
@@ -1297,7 +1297,7 @@ def test_catalog_catch_up_crosses_base_table_evolution(
         build_join_view,
         catch_up_view_from_catalog,
     )
-    from nyc_data_pipeline_spark.sources.scans import atomic_json_dump
+    from nyc_data_pipeline_spark.manifest_log import atomic_json_dump
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         _latest_main_version,
         mor_cdc_commit,

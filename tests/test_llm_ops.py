@@ -1429,7 +1429,7 @@ def test_cdc_index_swap_retention_and_o_changes(spark, tmp_path):
     from nyc_data_pipeline_spark.similarity.adc import _micro_rows
     from nyc_data_pipeline_spark.similarity.brute_force import N_QUERIES
     from nyc_data_pipeline_spark.similarity.cdc_maintain import (
-        _load_cdcidx_manifest,
+        cdcidx_log,
         build_cdc_index,
         cdc_index_search,
         maintain_ivf_pq_from_feed,
@@ -1507,7 +1507,7 @@ def test_cdc_index_swap_retention_and_o_changes(spark, tmp_path):
         cdc_index_search(spark, fresh_dir, queries, cur).collect()
     )
     assert got == want
-    assert _load_cdcidx_manifest(idx_dir)["version"] == 3
+    assert cdcidx_log(idx_dir).load()["version"] == 3
     # retention: vacuum past commit 2's artifacts, then a rebuilt
     # index at cursor 1 cannot catch up through the reclaimed feed
     mor_cdc_vacuum(emb_dir, latest=3, retain=1)
@@ -1534,7 +1534,7 @@ def test_dedup_cdc_index_maintain_swap_and_retention(spark, tmp_path, sf_dir):
     from nyc_data_pipeline_spark.catalog import load_table
     from nyc_data_pipeline_spark.dedup.cdc_maintain import (
         _corpus_waves,
-        _load_ddcidx_manifest,
+        ddcidx_log,
         build_dedup_cdc_index,
         dedup_cdc_probe,
         maintain_dedup_index_from_feed,
@@ -1617,7 +1617,7 @@ def test_text_index_cdc_maintain_swap_and_retention(spark, tmp_path, sf_dir):
 
     from nyc_data_pipeline_spark.catalog import load_table
     from nyc_data_pipeline_spark.functions.text_index import (
-        _load_tidx_manifest,
+        tidx_log,
         _text_waves,
         build_text_index,
         maintain_text_index_from_feed,

@@ -1022,7 +1022,7 @@ def test_catch_up_join_view_random_histories(
         build_join_view,
         catch_up_join_view,
     )
-    from nyc_data_pipeline_spark.sources.scans import atomic_json_dump
+    from nyc_data_pipeline_spark.manifest_log import atomic_json_dump
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         mor_cdc_commit,
         mor_cdc_init,
@@ -1169,7 +1169,7 @@ def test_txn_catalog_random_histories_consistent(
         mor_cdc_init,
     )
     from nyc_data_pipeline_spark.streaming.txn import (
-        catalog_latest,
+        catalog_log,
         catalog_load,
         catalog_read,
         txn_catalog_init,
@@ -1236,7 +1236,7 @@ def test_txn_catalog_random_histories_consistent(
         txn_commit(cat, updates)
         model.append(dict(flipped))
     # gapless history matching the model flip-for-flip
-    assert catalog_latest(cat) == len(model)
+    assert catalog_log(cat).head() == len(model)
     for v, want in enumerate(model, start=1):
         got = catalog_load(cat, v)["tables"]
         assert {t: got[t]["version"] for t in want} == want

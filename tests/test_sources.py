@@ -1096,13 +1096,45 @@ def test_atomic_json_dump_replaces_and_leaves_no_temp(tmp_path):
     import json as _json
     import os as _os
 
-    from nyc_data_pipeline_spark.sources.scans import atomic_json_dump
+    from nyc_data_pipeline_spark.manifest_log import atomic_json_dump
 
     p = str(tmp_path / "meta" / "manifest.json")
     atomic_json_dump({"v": 1}, p)
     atomic_json_dump({"v": 2, "files": ["a"]}, p)
     assert _json.load(open(p)) == {"v": 2, "files": ["a"]}
     assert [f for f in _os.listdir(_os.path.dirname(p))] == ["manifest.json"]
+
+
+def test_time_travel_write_is_crash_safe(spark, tmp_path, monkeypatch):
+    """A failure while serializing a version's manifest must leave no
+    (torn or empty) manifest behind: `TIMESTAMP AS OF` lists and parses
+    every manifest of the table, so one empty file would break every
+    as-of read on it."""
+    import json as _json
+    import os as _os
+
+    import pytest
+    from nyc_data_pipeline_spark.sources.timetravel import (
+        read_version,
+        resolve_version_as_of,
+        write_version,
+    )
+
+    table_dir = str(tmp_path / "tt")
+    df = spark.range(8).selectExpr("id AS k", "id % 2 AS pb")
+    m1 = write_version(df, table_dir, 1, [0, 1], None)
+
+    def boom(*args, **kwargs):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(_json, "dump", boom)
+    with pytest.raises(OSError, match="disk full"):
+        write_version(df, table_dir, 2, [0], m1)
+    monkeypatch.undo()
+    assert not _os.path.exists(_os.path.join(table_dir, "manifest-v2.json"))
+    assert not [f for f in _os.listdir(table_dir) if f.endswith(".tmp")]
+    assert resolve_version_as_of(table_dir, 10**18) == 1
+    assert read_version(spark, table_dir, 1).count() == 8
 
 
 def test_timestamp_as_of_resolution_boundaries(tmp_path):
@@ -1116,7 +1148,7 @@ def test_timestamp_as_of_resolution_boundaries(tmp_path):
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    from nyc_data_pipeline_spark.sources.scans import atomic_json_dump
+    from nyc_data_pipeline_spark.manifest_log import atomic_json_dump
     from nyc_data_pipeline_spark.sources.timetravel import (
         TimeTravelRetentionError,
         commit_wallclock_us,
@@ -1185,7 +1217,7 @@ def test_cow_maintenance_cas_names_conflicts(spark, tmp_path):
     import os as _os
 
     import pytest
-    from nyc_data_pipeline_spark.sources import scans
+    from nyc_data_pipeline_spark import manifest_log
     from nyc_data_pipeline_spark.sources.zonemap import (
         _zm_read_version,
         cow_compact,
@@ -1197,7 +1229,7 @@ def test_cow_maintenance_cas_names_conflicts(spark, tmp_path):
     )
 
     table_dir = _cow_evo_table(spark, tmp_path, "cow_cas")  # v1+v2
-    real = scans.atomic_json_publish_once
+    real = manifest_log.atomic_json_publish_once
 
     def inject_once(op):
         state = {"fired": False}
@@ -1210,20 +1242,20 @@ def test_cow_maintenance_cas_names_conflicts(spark, tmp_path):
                 op()
             return real(obj, path)
 
-        scans.atomic_json_publish_once = wrapper
+        manifest_log.atomic_json_publish_once = wrapper
 
     inject_once(lambda: cow_widen_column(table_dir, "cents", "bigint"))
     try:
         with pytest.raises(CommitConflictError, match="concurrent"):
             cow_rename_column(table_dir, "cents", "amount")
     finally:
-        scans.atomic_json_publish_once = real
+        manifest_log.atomic_json_publish_once = real
     cow_rename_column(table_dir, "cents", "amount")  # rebased: v4
     inject_once(lambda: cow_compact(spark, table_dir))
     try:
         adopted = cow_compact(spark, table_dir)  # equivalent pair
     finally:
-        scans.atomic_json_publish_once = real
+        manifest_log.atomic_json_publish_once = real
     assert adopted["version"] == 5 and adopted["compacted_from"] == 4
     assert len([
         d for d in _os.listdir(table_dir)
@@ -1330,9 +1362,9 @@ def test_cow_evolve_append_compact_interleavings_serialize(
     import pytest
     from pyspark.sql import functions as F
 
-    from nyc_data_pipeline_spark.sources import scans
+    from nyc_data_pipeline_spark import manifest_log
     from nyc_data_pipeline_spark.sources.zonemap import (
-        _cow_latest_version,
+        cow_log,
         _zm_append,
         _zm_read_version,
         cow_compact,
@@ -1349,7 +1381,7 @@ def test_cow_evolve_append_compact_interleavings_serialize(
     def batch_now(tag: int):
         # a 5-row batch under the head's CURRENT schema names/types
         with open(_os.path.join(
-            table_dir, f"manifest-v{_cow_latest_version(table_dir)}.json"
+            table_dir, f"manifest-v{cow_log(table_dir).head()}.json"
         )) as f:
             m = _json.load(f)
         names = {f["id"]: (f["name"], f["type"]) for f in m["schema"]}
@@ -1363,7 +1395,7 @@ def test_cow_evolve_append_compact_interleavings_serialize(
     def do_append(tag: int):
         _zm_append(
             spark, batch_now(tag), table_dir,
-            _cow_latest_version(table_dir) + 1, exclusive=True,
+            cow_log(table_dir).head() + 1, exclusive=True,
         )
         appended["n"] += 5
 
@@ -1372,7 +1404,7 @@ def test_cow_evolve_append_compact_interleavings_serialize(
         "rename": lambda: cow_rename_column(table_dir, "cents", "amt"),
         "compact": lambda: cow_compact(spark, table_dir),
     }
-    real = scans.atomic_json_publish_once
+    real = manifest_log.atomic_json_publish_once
 
     def race(first, injected):
         """Run `first`, injecting `injected` immediately before its
@@ -1388,12 +1420,12 @@ def test_cow_evolve_append_compact_interleavings_serialize(
                 injected()
             return real(obj, path)
 
-        scans.atomic_json_publish_once = wrapper
+        manifest_log.atomic_json_publish_once = wrapper
         try:
             with pytest.raises(CommitConflictError):
                 first()
         finally:
-            scans.atomic_json_publish_once = real
+            manifest_log.atomic_json_publish_once = real
         first()  # retry against the new head serializes
 
     race(lambda: do_append(1), ops["widen"])     # append loses evolve
@@ -1402,7 +1434,7 @@ def test_cow_evolve_append_compact_interleavings_serialize(
     race(ops["rename"], lambda: do_append(4))    # evolve loses append
     # no staged loser directories remain (v{N}-{token} with no
     # manifest referencing them beyond the winners')
-    head_v = _cow_latest_version(table_dir)
+    head_v = cow_log(table_dir).head()
     with open(
         _os.path.join(table_dir, f"manifest-v{head_v}.json")
     ) as f:
@@ -1463,7 +1495,7 @@ def test_cow_compact_race_different_cluster_col_not_adopted(
     import os as _os
 
     import pytest
-    from nyc_data_pipeline_spark.sources import scans
+    from nyc_data_pipeline_spark import manifest_log
     from nyc_data_pipeline_spark.sources.zonemap import cow_compact
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         CommitConflictError,
@@ -1479,7 +1511,7 @@ def test_cow_compact_race_different_cluster_col_not_adopted(
             m.pop(k, None)
         with open(mpath, "w") as f:
             _json.dump(m, f)
-    real = scans.atomic_json_publish_once
+    real = manifest_log.atomic_json_publish_once
 
     def inject_once(op):
         state = {"fired": False}
@@ -1492,14 +1524,14 @@ def test_cow_compact_race_different_cluster_col_not_adopted(
                 op()
             return real(obj, path)
 
-        scans.atomic_json_publish_once = wrapper
+        manifest_log.atomic_json_publish_once = wrapper
 
     inject_once(lambda: cow_compact(spark, table_dir, cluster_col="k"))
     try:
         with pytest.raises(CommitConflictError, match="concurrent"):
             cow_compact(spark, table_dir, cluster_col="day")
     finally:
-        scans.atomic_json_publish_once = real
+        manifest_log.atomic_json_publish_once = real
     with open(_os.path.join(table_dir, "manifest-v3.json")) as f:
         m3 = _json.load(f)
     kid = next(f["id"] for f in m3["schema"] if f["name"] == "k")
@@ -1509,7 +1541,7 @@ def test_cow_compact_race_different_cluster_col_not_adopted(
     try:
         adopted = cow_compact(spark, table_dir)
     finally:
-        scans.atomic_json_publish_once = real
+        manifest_log.atomic_json_publish_once = real
     assert adopted["version"] == 4 and adopted["compacted_from"] == 3
 
 
@@ -1668,13 +1700,13 @@ def test_cow_guard_parity_sweep_pins(spark, tmp_path):
        pre-rename stored values never leak into the fresh field;
     2. post-image casts after a widen — covered by the feed test's
        widen leg (types under the TO schema);
-    3. head resolution: `_cow_latest_version` is one fullmatch-parsed
+    3. head resolution: `cow_log(...).head()` is one fullmatch-parsed
        listdir — stray manifest-like names and staged v{N}-{token}
        dirs never leak into the head."""
     import os as _os
 
     from nyc_data_pipeline_spark.sources.zonemap import (
-        _cow_latest_version,
+        cow_log,
         _zm_read_version,
         cow_add_column,
         cow_rename_column,
@@ -1700,7 +1732,7 @@ def test_cow_guard_parity_sweep_pins(spark, tmp_path):
         "{}"
     )
     _os.makedirs(_os.path.join(table_dir, "v9-deadbeef"))
-    assert _cow_latest_version(table_dir) == 4
+    assert cow_log(table_dir).head() == 4
 
 
 def test_vacuum_never_collects_inflight_staged_dirs(spark, tmp_path):

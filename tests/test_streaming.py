@@ -1797,6 +1797,37 @@ def test_change_feed_retention_contract(spark, tmp_path):
             mor_cdc_change_feed(spark, table_dir, past)
 
 
+def test_change_feed_vacuum_race_raises_retention_error(
+    spark, tmp_path, monkeypatch
+):
+    """ADVICE r16 #4: a vacuum that reclaims the commit's sidecar or
+    pre-image manifest between the feed's retention check and its DV
+    context read surfaces as the named ChangeFeedRetentionError, never
+    a bare KeyError."""
+    from nyc_data_pipeline_spark.streaming import mor_cdc
+    from nyc_data_pipeline_spark.streaming.mor_cdc import (
+        ChangeFeedRetentionError,
+        mor_cdc_change_feed,
+        mor_cdc_commit,
+    )
+
+    table_dir = _mk_cdc_table(spark, tmp_path, "cdc_toctou", n_keys=40)
+    wave = spark.range(40).filter(F.col("id") % 3 == 0).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 10 + 1).alias("cents"),
+        F.lit(1).alias("version"),
+        F.lit("u").alias("op"),
+    )
+    mor_cdc_commit(spark, wave, table_dir, 2)
+    # the context read happens after the retention check passed; a
+    # concurrent vacuum makes it come back without this version
+    monkeypatch.setattr(
+        mor_cdc, "_feed_dv_context", lambda spark, table_dir, vs: {}
+    )
+    with pytest.raises(ChangeFeedRetentionError):
+        mor_cdc_change_feed(spark, table_dir, 2)
+
+
 def test_change_feed_stable_under_compaction(spark, tmp_path):
     """VERDICT r10 ask #6: compaction rewrites history files but must
     not disturb the feed — feed(v) byte-identical before/after
@@ -2201,7 +2232,7 @@ def test_wap_discard_reclaims_only_branch_dirs(spark, tmp_path):
     introduced; main's data and manifests are untouched, and a
     half-published branch (crash mid-publish) never loses dirs that a
     main manifest now references."""
-    from nyc_data_pipeline_spark.sources.scans import (
+    from nyc_data_pipeline_spark.manifest_log import (
         atomic_json_publish_once,
     )
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
@@ -2291,7 +2322,7 @@ def test_txn_catalog_snapshot_isolation_and_cas(spark, tmp_path):
         mor_cdc_commit,
     )
     from nyc_data_pipeline_spark.streaming.txn import (
-        catalog_latest,
+        catalog_log,
         catalog_read,
         txn_catalog_init,
         txn_commit,
@@ -2304,15 +2335,15 @@ def test_txn_catalog_snapshot_isolation_and_cas(spark, tmp_path):
 
     # publish-then-flip: A's v2 manifest exists but catalog still at 1
     mor_cdc_commit(spark, _wap_wave(spark, 0, 50, 1, 1), a_dir, 2)
-    assert catalog_latest(cat) == 1
+    assert catalog_log(cat).head() == 1
     assert catalog_read(spark, cat, "a").where("cents % 10 = 1").count() == 0
 
     # flip: A@2 visible, B untouched; rerun is a no-op (idempotent)
     txn_commit(cat, {"a": 2})
-    assert catalog_latest(cat) == 2
+    assert catalog_log(cat).head() == 2
     assert catalog_read(spark, cat, "a").where("cents % 10 = 1").count() == 50
     assert txn_commit(cat, {"a": 2})["version"] == 2
-    assert catalog_latest(cat) == 2
+    assert catalog_log(cat).head() == 2
 
     # disjoint-table race: B's txn loses the CAS to another A txn
     # landed inside its window, rebases, and BOTH land
@@ -2322,7 +2353,7 @@ def test_txn_catalog_snapshot_isolation_and_cas(spark, tmp_path):
         cat, {"b": 2},
         _before_publish=lambda: txn_commit(cat, {"a": 3}),
     )
-    assert catalog_latest(cat) == 4
+    assert catalog_log(cat).head() == 4
     assert catalog_read(spark, cat, "a").where("cents % 10 = 3").count() == 50
     assert catalog_read(spark, cat, "b").where("cents % 10 = 2").count() == 50
 
@@ -2350,7 +2381,7 @@ def test_txn_publish_branches_multi_table_wap(spark, tmp_path):
     on rerun — catalog readers only ever see none-or-all."""
     from nyc_data_pipeline_spark.streaming.mor_cdc import wap_publish, wap_stage
     from nyc_data_pipeline_spark.streaming.txn import (
-        catalog_latest,
+        catalog_log,
         catalog_read,
         txn_catalog_init,
         txn_publish_branches,
@@ -2368,7 +2399,7 @@ def test_txn_publish_branches_multi_table_wap(spark, tmp_path):
     # rerun the multi-table publish: A no-ops (nothing staged), B
     # publishes, ONE catalog flip makes both visible together
     txn_publish_branches(cat, "audit", ["a", "b"])
-    assert catalog_latest(cat) == 2
+    assert catalog_log(cat).head() == 2
     assert catalog_read(spark, cat, "a").where("cents % 10 = 1").count() == 50
     assert catalog_read(spark, cat, "b").where("cents % 10 = 2").count() == 50
 
@@ -2392,7 +2423,7 @@ def test_txn_catalog_as_of_retention_and_floor(spark, tmp_path):
     )
     from nyc_data_pipeline_spark.streaming.txn import (
         CatalogRetentionError,
-        catalog_latest,
+        catalog_log,
         catalog_load,
         catalog_load_as_of,
         catalog_read,
@@ -2424,7 +2455,7 @@ def test_txn_catalog_as_of_retention_and_floor(spark, tmp_path):
             snap["tables"]["b"]["version"]) == (2, 1)
     # retention: keep the newest 2 catalog versions
     stats = catalog_vacuum(cat, retain=2)
-    assert stats["removed"] == [1] and catalog_latest(cat) == 3
+    assert stats["removed"] == [1] and catalog_log(cat).head() == 3
     with pytest.raises(CatalogRetentionError):
         catalog_load(cat, 1)
     with pytest.raises(ValueError):
@@ -2629,7 +2660,7 @@ def test_branch_named_verify_never_breaks_main_listing(spark, tmp_path):
     has staged commits."""
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         _latest_main_version,
-        main_manifest_versions,
+        main_log,
         mor_cdc_commit,
         mor_cdc_read,
         wap_publish,
@@ -2643,7 +2674,7 @@ def test_branch_named_verify_never_breaks_main_listing(spark, tmp_path):
     table_dir = _mk_cdc_table(spark, tmp_path, "vbranch", n_keys=100)
     wap_stage(spark, _wap_wave(spark, 0, 20, 3, 1), table_dir, "verify")
     # main listing, read, and a concurrent main-chain commit all work
-    assert main_manifest_versions(table_dir) == [1]
+    assert main_log(table_dir).versions() == [1]
     assert _latest_main_version(table_dir) == 1
     assert mor_cdc_read(spark, table_dir, 1).count() == 100
     assert wap_read(spark, table_dir, "verify").filter(
@@ -2675,7 +2706,7 @@ def test_wap_publish_is_atomic_for_readers(spark, tmp_path):
     wap_publish RESUMES and flips base -> head in one link."""
     import json as _json
 
-    from nyc_data_pipeline_spark.sources.scans import (
+    from nyc_data_pipeline_spark.manifest_log import (
         atomic_json_publish_once,
     )
     from nyc_data_pipeline_spark.sources.timetravel import (
@@ -2730,7 +2761,7 @@ def test_wap_discard_removes_headless_pendings(spark, tmp_path):
     the fast-path reader head (an unaudited state)."""
     import json as _json
 
-    from nyc_data_pipeline_spark.sources.scans import (
+    from nyc_data_pipeline_spark.manifest_log import (
         atomic_json_publish_once,
     )
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
@@ -2823,7 +2854,7 @@ def test_txn_vacuum_keeps_retained_snapshots_resolvable(spark, tmp_path):
         mor_cdc_commit,
     )
     from nyc_data_pipeline_spark.streaming.txn import (
-        catalog_latest,
+        catalog_log,
         catalog_read,
         catalog_vacuum,
         txn_catalog_init,
@@ -2855,7 +2886,7 @@ def test_txn_vacuum_keeps_retained_snapshots_resolvable(spark, tmp_path):
         else:
             txn_vacuum(cat, retain=rng.randint(1, 3))
         # invariant: every retained catalog version resolves fully
-        latest = catalog_latest(cat)
+        latest = catalog_log(cat).head()
         for v in range(1, latest + 1):
             if not os.path.exists(
                 os.path.join(cat, f"catalog-v{v}.json")
@@ -3561,7 +3592,7 @@ def test_wap_publish_loses_fork_race_cleanly(spark, tmp_path):
 
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         CommitConflictError,
-        _branch_versions,
+        _branch_log,
         _latest_main_version,
         mor_cdc_commit,
         mor_cdc_read,
@@ -3589,7 +3620,7 @@ def test_wap_publish_loses_fork_race_cleanly(spark, tmp_path):
     assert rows[31] == 319 and rows[5] == 50  # writer applied, branch not
     # branch manifests intact: discard reclaims them without touching
     # the writer's commit
-    assert _branch_versions(table_dir, "audit") == [2, 3]
+    assert _branch_log(table_dir, "audit").versions() == [2, 3]
     wap_discard(table_dir, "audit")
     assert mor_cdc_read(spark, table_dir, 2).count() == 60
 
@@ -3603,7 +3634,7 @@ def test_wap_publish_link_conflict_between_two_branches(spark, tmp_path):
     import json as _json
     import pytest
 
-    from nyc_data_pipeline_spark.sources.scans import (
+    from nyc_data_pipeline_spark.manifest_log import (
         atomic_json_publish_once,
     )
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
@@ -3659,7 +3690,7 @@ def test_evolution_algebra_random_sequences(spark, tmp_path, seed):
         mor_cdc_read,
         mor_cdc_rename_column,
         mor_cdc_widen_column,
-        main_manifest_versions,
+        main_log,
     )
 
     rng = random.Random(seed)
@@ -3785,7 +3816,7 @@ def test_evolution_algebra_random_sequences(spark, tmp_path, seed):
         else:  # compact
             mor_cdc_compact(spark, table_dir, cver)
             cver += 1
-        assert main_manifest_versions(table_dir)[-1] == cver
+        assert main_log(table_dir).versions()[-1] == cver
         check()
 
 
@@ -3900,7 +3931,7 @@ def test_maintenance_cas_serializes_evolution_compaction_exclusive(
     readable history."""
     import pytest
 
-    from nyc_data_pipeline_spark.sources import scans
+    from nyc_data_pipeline_spark import manifest_log
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         CommitConflictError,
         _latest_main_version,
@@ -3912,7 +3943,7 @@ def test_maintenance_cas_serializes_evolution_compaction_exclusive(
     )
 
     table_dir = _evo_table(spark, tmp_path, "maint_cas")  # v1
-    real = scans.atomic_json_publish_once
+    real = manifest_log.atomic_json_publish_once
 
     def inject_once(op):
         """Patch the CAS so the NEXT main-manifest publish is beaten
@@ -3928,7 +3959,7 @@ def test_maintenance_cas_serializes_evolution_compaction_exclusive(
                 op()
             return real(obj, path)
 
-        scans.atomic_json_publish_once = wrapper
+        manifest_log.atomic_json_publish_once = wrapper
 
     # --- evolution loses to a concurrent evolution -------------------
     inject_once(lambda: mor_cdc_widen_column(table_dir, "cents", "bigint"))
@@ -3936,7 +3967,7 @@ def test_maintenance_cas_serializes_evolution_compaction_exclusive(
         with pytest.raises(CommitConflictError, match="concurrent"):
             mor_cdc_rename_column(table_dir, "cents", "amount")
     finally:
-        scans.atomic_json_publish_once = real
+        manifest_log.atomic_json_publish_once = real
     assert _latest_main_version(table_dir) == 2  # widen won, alone
     mor_cdc_rename_column(table_dir, "cents", "amount")  # rebased: v3
 
@@ -3948,7 +3979,7 @@ def test_maintenance_cas_serializes_evolution_compaction_exclusive(
         with pytest.raises(CommitConflictError, match="concurrent"):
             mor_cdc_compact(spark, table_dir, 3)
     finally:
-        scans.atomic_json_publish_once = real
+        manifest_log.atomic_json_publish_once = real
     # the loser cleaned its writer-unique staged dirs
     assert not [
         d for d in os.listdir(table_dir)
@@ -3977,7 +4008,7 @@ def test_maintenance_cas_serializes_evolution_compaction_exclusive(
     try:
         adopted = mor_cdc_compact(spark, table_dir, 6)
     finally:
-        scans.atomic_json_publish_once = real
+        manifest_log.atomic_json_publish_once = real
     assert adopted["version"] == 7
     assert adopted["compacted_from"] == 6
     with open(os.path.join(table_dir, "manifest-v7.json")) as f:
