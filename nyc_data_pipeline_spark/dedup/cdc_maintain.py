@@ -145,7 +145,6 @@ def maintain_dedup_index_from_feed(
     from ..streaming.mor_cdc import (
         mor_cdc_change_feed,
         mor_cdc_read,
-        release_local_checkpoints,
     )
 
     prev = ddcidx_log(index_dir).load()
@@ -162,9 +161,6 @@ def maintain_dedup_index_from_feed(
     n_tomb = int(prev.get("n_tombstoned", 0)) + n_upd + n_del
     n_rows = int(prev["n_rows"]) + n_ins - n_del
     if n_rows > 0 and n_tomb / n_rows >= swap_fraction:
-        release_local_checkpoints(
-            getattr(feed, "_ckpt_intermediates", [])
-        )
         cur = mor_cdc_read(spark, table_dir, table_commit).select(
             "doc_id", "text"
         )
@@ -208,7 +204,6 @@ def maintain_dedup_index_from_feed(
         "n_tombstoned": n_tomb,
     }
     ddcidx_log(index_dir).publish(vnew, manifest)
-    release_local_checkpoints(getattr(feed, "_ckpt_intermediates", []))
     return manifest
 
 

@@ -129,14 +129,12 @@ def maintain_text_index_from_feed(
     from ..streaming.mor_cdc import (
         mor_cdc_change_feed,
         mor_cdc_read,
-        release_local_checkpoints,
     )
 
     prev = tidx_log(index_dir).load()
     table_commit = int(prev["table_commit"]) + 1
     vnew = int(prev["version"]) + 1
     feed = mor_cdc_change_feed(spark, table_dir, table_commit)
-    ckpts = getattr(feed, "_ckpt_intermediates", [])
     pre = (
         feed.filter(F.col("change") != "insert")
         .selectExpr(
@@ -172,7 +170,6 @@ def maintain_text_index_from_feed(
     n_delta = int(
         prev["n_delta_rows"]
     ) + spark.read.parquet(delta_path).count()
-    release_local_checkpoints(ckpts)
     if (
         prev["n_base_terms"] > 0
         and n_delta / prev["n_base_terms"] >= swap_fraction

@@ -1033,9 +1033,6 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the feed's artifact reads run a single time per epoch.
         feed_a1 = mor_cdc_change_feed(spark, a_dir, 2)
         da1 = _feed_to_signed_a(feed_a1).localCheckpoint(eager=True)
-        release_local_checkpoints(
-            getattr(feed_a1, "_ckpt_intermediates", [])
-        )
         b_v1 = mor_cdc_read(spark, b_dir, 1).select("c", "segment")
         db_empty = b_v1.limit(0).withColumn("w", F.lit(1))
         seg_v2 = maintain_join_view(
@@ -1066,9 +1063,6 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
         m2 = view.load(2)
         feed_a2 = mor_cdc_change_feed(spark, a_dir, 3)
         da2 = _feed_to_signed_a(feed_a2).localCheckpoint(eager=True)
-        release_local_checkpoints(
-            getattr(feed_a2, "_ckpt_intermediates", [])
-        )
         feed_b = mor_cdc_change_feed(spark, b_dir, 2)
         db = _feed_to_signed_b(feed_b)
         b2 = mor_cdc_read(spark, b_dir, 2).select("c", "segment")
@@ -1094,11 +1088,8 @@ def ivm_stream_join_view(spark: SparkSession, sf_dir: str) -> DataFrame:
             "a_version": 3,
             "b_version": 2,
         })
-        # v3 artifacts written: the lazy B feed's sidecars and the
-        # frozen signed deltas have no remaining consumers
-        release_local_checkpoints(
-            getattr(feed_b, "_ckpt_intermediates", [])
-        )
+        # v3 artifacts written: the frozen signed deltas have no
+        # remaining consumers
         release_local_checkpoints([da1, da2])
     return spark.read.parquet(view.load(3)["seg_view"]).select(
         "segment", "n_rows", "sum_cents"
@@ -1254,18 +1245,16 @@ def catch_up_join_view(
     b_fields, b_names = _resolve_view_fields(
         b_dir, b_latest, m.get("b_fields"), ("c", "segment")
     )
-    da, a_ckpts = None, []
+    da = None
     if a_latest > a_from:
         # ONE evolution-crossing span per side (mor_cdc_change_feed_
         # span unions the per-commit feeds id-projected under the
         # TO-version schema) instead of the old per-version feed loop
         raw = mor_cdc_change_feed_span(spark, a_dir, a_from, a_latest)
-        a_ckpts = list(getattr(raw, "_ckpt_intermediates", []))
         da = _feed_to_signed_a(_span_to_canonical(raw, a_names))
-    db, b_ckpts = None, []
+    db = None
     if b_latest > b_from:
         raw = mor_cdc_change_feed_span(spark, b_dir, b_from, b_latest)
-        b_ckpts = list(getattr(raw, "_ckpt_intermediates", []))
         db = _feed_to_signed_b(_span_to_canonical(raw, b_names))
     b_now = mor_cdc_read(spark, b_dir, b_latest).select(
         F.col(b_names["c"]).alias("c"),
@@ -1283,9 +1272,6 @@ def catch_up_join_view(
         )
     else:
         da = da.localCheckpoint(eager=True)  # feeds both folds below
-        # the signed delta is frozen: the A feeds' checkpointed
-        # sidecars are no longer referenced by any live plan
-        release_local_checkpoints(a_ckpts)
     if db is None:
         db = b_now.limit(0).withColumn("w", F.lit(1))
     seg_new = maintain_join_view(
@@ -1316,11 +1302,9 @@ def catch_up_join_view(
     if b_fields is not None:
         manifest["b_fields"] = b_fields
     view_log(view_dir).publish(cur + 1, manifest)
-    # both view artifacts are written: the lazy B feeds' checkpointed
-    # sidecars (and the frozen ΔA) have no remaining consumers —
-    # release them now rather than at driver GC (ADVICE r11: a
-    # long-lived catch-up loop otherwise accumulates storage blocks)
-    release_local_checkpoints(b_ckpts)
+    # both view artifacts are written: the frozen ΔA has no remaining
+    # consumers — release it now rather than at driver GC (ADVICE r11:
+    # a long-lived catch-up loop otherwise accumulates storage blocks)
     release_local_checkpoints([da])
     return manifest
 

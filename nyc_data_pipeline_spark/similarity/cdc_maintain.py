@@ -184,7 +184,6 @@ def maintain_ivf_pq_from_feed(
     from ..streaming.mor_cdc import (
         mor_cdc_change_feed,
         mor_cdc_read,
-        release_local_checkpoints,
     )
 
     prev = cdcidx_log(index_dir).load()
@@ -206,9 +205,6 @@ def maintain_ivf_pq_from_feed(
         # maintenance debt crossed the threshold: retrain-as-swap from
         # the table's CURRENT state — one corpus pass, fresh
         # artifacts, shadow debt cleared (the compaction analog)
-        release_local_checkpoints(
-            getattr(feed, "_ckpt_intermediates", [])
-        )
         cur = mor_cdc_read(spark, emb_dir, table_commit).select(
             "vec_id", "embedding", "label"
         )
@@ -264,7 +260,6 @@ def maintain_ivf_pq_from_feed(
         "params": prev["params"],
     }
     cdcidx_log(index_dir).publish(vnew, manifest)
-    release_local_checkpoints(getattr(feed, "_ckpt_intermediates", []))
     return manifest
 
 

@@ -1957,12 +1957,10 @@ def test_feed_accumulates_no_checkpoint_blocks(spark, tmp_path):
     r16 successor to the ADVICE-r11 release contract): the DV context
     now arrives as a collected local relation instead of eagerly
     checkpointed sidecar scans, so a catch-up loop accumulates zero
-    blocks by construction — `_ckpt_intermediates` is empty and
-    `release_local_checkpoints` on it is a harmless no-op."""
+    blocks by construction."""
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         mor_cdc_change_feed,
         mor_cdc_commit,
-        release_local_checkpoints,
     )
 
     table_dir = _mk_cdc_table(spark, tmp_path, "cdc_release")
@@ -1979,8 +1977,297 @@ def test_feed_accumulates_no_checkpoint_blocks(spark, tmp_path):
     assert feed.count() == 60
     after = {r.id() for r in jsc.getRDDStorageInfo()}
     assert after <= before, (before, after)  # no new storage blocks
-    assert feed._ckpt_intermediates == []
-    release_local_checkpoints(feed._ckpt_intermediates)  # no-op
+
+
+def _mk_floor_table(spark, tmp_path, name):
+    """A MOR CDC table whose head sits two commits past a compaction:
+    v2, v3 data commits, v4 the compaction (its `dv_floor` freezes the
+    v2/v3 vectors), v5 and v6 data commits with upserts and deletes."""
+    from nyc_data_pipeline_spark.streaming.mor_cdc import (
+        mor_cdc_commit,
+        mor_cdc_compact,
+    )
+
+    table_dir = _mk_cdc_table(spark, tmp_path, name)
+
+    def wave(v, mod):
+        return spark.range(400).filter(F.col("id") % mod == 0).select(
+            F.col("id").alias("k"),
+            (F.col("id") * 10 + v).alias("cents"),
+            F.lit(v).alias("version"),
+            F.when(F.col("id") % (2 * mod) == 0, "d")
+            .otherwise("u")
+            .alias("op"),
+        )
+
+    mor_cdc_commit(spark, wave(1, 3), table_dir, 2)
+    mor_cdc_commit(spark, wave(2, 5), table_dir, 3)
+    mor_cdc_compact(spark, table_dir, 3)
+    mor_cdc_commit(spark, wave(3, 7), table_dir, 5)
+    mor_cdc_commit(spark, wave(4, 2), table_dir, 6)
+    return table_dir
+
+
+def _strip_file_schemas(table_dir):
+    """Rewrite every manifest of the main chain without its recorded
+    file schemas — the shape of a chain written before they existed."""
+    from nyc_data_pipeline_spark.streaming.mor_cdc import main_log
+
+    log = main_log(table_dir)
+    for v in log.versions():
+        m = log.load(v)
+        m.pop("file_schemas", None)
+        log.publish(v, m)
+
+
+def _table_snapshot(spark, table_dir, versions):
+    """Per version: the read's dtypes and sorted rows, and the change
+    feed's dtypes and sorted rows (commit 1 has no feed)."""
+    from nyc_data_pipeline_spark.streaming.mor_cdc import (
+        mor_cdc_change_feed,
+        mor_cdc_read,
+    )
+
+    out = {}
+    for v in versions:
+        read = mor_cdc_read(spark, table_dir, v)
+        snap = [read.dtypes, sorted(map(tuple, read.collect()))]
+        if v > 1:
+            feed = mor_cdc_change_feed(spark, table_dir, v)
+            snap += [
+                feed.dtypes,
+                sorted(map(tuple, feed.collect()), key=repr),
+            ]
+        out[v] = snap
+    return out
+
+
+def test_mor_read_and_feed_build_launch_no_spark_jobs(spark, tmp_path):
+    """Building a MOR read or change feed is metadata work only: the
+    recorded file schemas spare the footer-inference job per commit
+    directory, and the feed's DV context (sidecars + compaction floor)
+    is parsed on the driver — so the build launches 0 Spark jobs,
+    counted through a job group.  Collecting still runs jobs in the
+    same probe, so the count is not vacuous."""
+    import uuid
+
+    from nyc_data_pipeline_spark.streaming.mor_cdc import (
+        mor_cdc_change_feed,
+        mor_cdc_change_feed_span,
+        mor_cdc_read,
+    )
+
+    table_dir = _mk_floor_table(spark, tmp_path, "cdc_no_jobs")
+    sc = spark.sparkContext
+
+    def jobs_of(fn):
+        group = f"mor-build-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "MOR build probe")
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    built, n_build = jobs_of(lambda: [
+        mor_cdc_read(spark, table_dir, 6),
+        mor_cdc_read(spark, table_dir, 6, key_range=(0, 99)),
+        mor_cdc_change_feed(spark, table_dir, 6),
+        mor_cdc_change_feed(spark, table_dir, 5),  # floor as prior
+        mor_cdc_change_feed(spark, table_dir, 4),  # compaction: empty
+        mor_cdc_change_feed_span(spark, table_dir, 1, 6),
+    ])
+    assert n_build == 0
+    _, n_collect = jobs_of(lambda: [df.count() for df in built])
+    assert n_collect > 0
+
+
+def test_feed_context_reads_each_shadow_source_once(
+    spark, tmp_path, monkeypatch
+):
+    """The span's ceilings fold in ascending version order with one
+    running per-key ceiling: every sidecar and the compaction floor
+    is read exactly once for the whole span, and a compaction resets
+    the ceiling to its floor instead of carrying older vectors."""
+    from nyc_data_pipeline_spark.streaming import mor_cdc
+
+    table_dir = _mk_floor_table(spark, tmp_path, "cdc_fold_once")
+    reads = []
+    real_sidecar, real_shadow = mor_cdc._sidecar_keys, mor_cdc._shadow_pairs
+
+    def sidecar(path):
+        reads.append(path)
+        return real_sidecar(path)
+
+    def shadow(path, floor):
+        if floor:
+            reads.append(path)
+        return real_shadow(path, floor)
+
+    monkeypatch.setattr(mor_cdc, "_sidecar_keys", sidecar)
+    monkeypatch.setattr(mor_cdc, "_shadow_pairs", shadow)
+    ctx = mor_cdc._feed_dv_context(spark, table_dir, [6, 5, 4, 3, 2])
+    assert sorted(ctx) == [2, 3, 5, 6]  # v4 (compaction) feeds empty
+    assert len(reads) == len(set(reads)) == 5  # 4 sidecars + 1 floor
+    # the v6 key table is cut against v5's sidecar + the floor only
+    monkeypatch.undo()
+    alone = mor_cdc._feed_dv_context(spark, table_dir, [6])
+    assert sorted(map(tuple, ctx[6][0].collect())) == sorted(
+        map(tuple, alone[6][0].collect())
+    )
+    assert ctx[6][1] == alone[6][1]
+
+
+def test_zb_stats_from_footers_match_spark_aggregate(spark, tmp_path):
+    """The manifest zone stats, now read from the parquet footers on
+    the driver, equal a Spark min/max/count over each listed file —
+    at init, at a data commit and at a compaction.  A bucket whose
+    footers carry no statistics keeps its row count and leaves out
+    klo/khi (readers keep such entries)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nyc_data_pipeline_spark.streaming.mor_cdc import (
+        _zb_stats,
+        main_log,
+    )
+
+    table_dir = _mk_floor_table(spark, tmp_path, "cdc_footer_stats")
+    log = main_log(table_dir)
+    checked = 0
+    for v in (1, 2, 4, 6):
+        for entries in log.load(v)["files"].values():
+            for e in entries:
+                if e["v"] != v:
+                    continue
+                r = spark.read.parquet(e["path"]).agg(
+                    F.min("k"), F.max("k"), F.count("*")
+                ).collect()[0]
+                assert (e["klo"], e["khi"], e["rows"]) == tuple(r), e
+                checked += 1
+    assert checked > 8
+    bare = tmp_path / "bare" / "zb=3"
+    bare.mkdir(parents=True)
+    pq.write_table(
+        pa.table({"k": [5, 9, 7]}), bare / "part-0.parquet",
+        write_statistics=False,
+    )
+    (bare / "_SUCCESS").write_text("")
+    assert _zb_stats(str(tmp_path / "bare"), "k") == {"3": {"rows": 3}}
+
+
+def test_manifest_without_file_schemas_reads_and_feeds_as_before(
+    spark, tmp_path
+):
+    """A chain written before file schemas were recorded (the map
+    removed from every manifest) falls back to footer inference and
+    reads and feeds exactly what the recorded-schema chain does, at
+    every version across the compaction floor."""
+    table_dir = _mk_floor_table(spark, tmp_path, "cdc_no_file_schemas")
+    recorded = _table_snapshot(spark, table_dir, range(1, 7))
+    _strip_file_schemas(table_dir)
+    assert _table_snapshot(spark, table_dir, range(1, 7)) == recorded
+
+
+def test_recorded_file_schemas_across_rename_widen_add(spark, tmp_path):
+    """Rename, widen and add across commits: each commit's files are
+    read under the schema recorded when they were written, and every
+    version reads and feeds back exactly as under footer inference —
+    the renamed column keeps its values, the widened one reads bigint
+    for old int files, the added one reads its default before the add
+    and its values after."""
+    from nyc_data_pipeline_spark.streaming.mor_cdc import (
+        main_log,
+        mor_cdc_add_column,
+        mor_cdc_commit,
+        mor_cdc_init,
+        mor_cdc_rename_column,
+        mor_cdc_widen_column,
+    )
+
+    table_dir = str(tmp_path / "cdc_evolve_schemas")
+    mor_cdc_init(
+        spark,
+        spark.range(200).select(
+            F.col("id").alias("k"),
+            (F.col("id") * 10).cast("int").alias("cents"),
+            F.lit(0).alias("version"),
+        ),
+        table_dir, "k",
+    )
+
+    def wave(v, mod, cols):
+        return spark.range(200).filter(F.col("id") % mod == 0).select(
+            F.col("id").alias("k"), *cols,
+            F.lit(v).alias("version"), F.lit("u").alias("op"),
+        )
+
+    mor_cdc_commit(spark, wave(1, 3, [
+        (F.col("id") * 10 + 1).cast("int").alias("cents"),
+    ]), table_dir, 2)
+    mor_cdc_rename_column(table_dir, "cents", "amount")  # v3
+    mor_cdc_commit(spark, wave(2, 4, [
+        (F.col("id") * 10 + 2).cast("int").alias("amount"),
+    ]), table_dir, 4)
+    mor_cdc_widen_column(table_dir, "amount", "bigint")  # v5
+    mor_cdc_add_column(table_dir, "tag", "string", default="old")  # v6
+    mor_cdc_commit(spark, wave(3, 5, [
+        (F.col("id") * 10 + 3).alias("amount"),
+        F.lit("new").alias("tag"),
+    ]), table_dir, 7)
+    m = main_log(table_dir).load(7)
+    assert sorted(m["file_schemas"]) == ["1", "2", "4", "7"]
+    assert m["file_schemas"]["1"] == [
+        ["k", "bigint"], ["cents", "int"], ["version", "int"],
+    ]
+    recorded = _table_snapshot(spark, table_dir, range(1, 8))
+    assert recorded[7][0] == [
+        ("k", "bigint"), ("amount", "bigint"), ("version", "int"),
+        ("tag", "string"),
+    ]
+    by_k = {r[0]: r for r in recorded[7][1]}
+    assert by_k[1] == (1, 10, 0, "old")
+    assert by_k[3] == (3, 31, 1, "old")
+    assert by_k[8] == (8, 82, 2, "old")
+    assert by_k[5] == (5, 53, 3, "new")
+    assert len(by_k) == 200
+    _strip_file_schemas(table_dir)
+    assert _table_snapshot(spark, table_dir, range(1, 8)) == recorded
+
+
+def test_feed_rejects_sidecar_routing_one_key_to_two_buckets(
+    spark, tmp_path
+):
+    """zb is a function of the key (frozen-bounds routing), and the
+    feed prunes pre-images to the buckets a sidecar names.  A sidecar
+    that routes one key to two buckets is a broken dependency: the
+    feed raises the named `BucketDependencyError` (a ValueError)
+    instead of silently picking one bucket and dropping pre-images."""
+    from nyc_data_pipeline_spark.streaming.mor_cdc import (
+        BucketDependencyError,
+        main_log,
+        mor_cdc_change_feed,
+        mor_cdc_commit,
+    )
+
+    table_dir = _mk_cdc_table(spark, tmp_path, "cdc_zb_conflict")
+    wave = spark.range(0, 400, 50).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 10 + 1).alias("cents"),
+        F.lit(1).alias("version"),
+        F.lit("u").alias("op"),
+    )
+    mor_cdc_commit(spark, wave, table_dir, 2)
+    assert mor_cdc_change_feed(spark, table_dir, 2).count() == 8
+    dv_dir = main_log(table_dir).load(2)["dvs"][-1]["path"]
+    for name in os.listdir(dv_dir):
+        os.remove(os.path.join(dv_dir, name))
+    with open(os.path.join(dv_dir, "part-00000.json"), "w") as f:
+        f.write('{"zb":0,"k":50,"v":1}\n{"zb":0,"k":0,"v":1}\n')
+        f.write('{"zb":5,"k":50,"v":1}\n')
+    with pytest.raises(BucketDependencyError, match="key 50"):
+        mor_cdc_change_feed(spark, table_dir, 2)
+    assert issubclass(BucketDependencyError, ValueError)
 
 
 def test_mor_cdc_concurrent_writers_serialize_or_raise(spark, tmp_path):
