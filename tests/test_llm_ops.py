@@ -11,7 +11,10 @@ from nyc_data_pipeline_spark.multimodal.binary_ops import (
     decode_media,
     fake_decode_features,
 )
+from nyc_data_pipeline_spark.functions.vectors import spark_sq_norm
 from nyc_data_pipeline_spark.registry import QUERIES, load_all
+from nyc_data_pipeline_spark.similarity.brute_force import N_QUERIES, cosine_topk
+from nyc_data_pipeline_spark.similarity.pandas_path import cosine_topk_pandas
 
 load_all()
 
@@ -48,6 +51,42 @@ def test_lsh_topk_is_subset_quality(spark, sf_dir):
     for r in lsh_rows:
         if (r.query_id, r.neighbor_id) in bf:
             assert r.cosine == pytest.approx(bf[(r.query_id, r.neighbor_id)], abs=1e-12)
+
+
+def _topk_inputs(spark, sf_dir):
+    e = load_table(spark, sf_dir, "embeddings")
+    v = e.selectExpr("vec_id", "embedding", f"{spark_sq_norm('embedding')} AS sq")
+    q = v.filter(F.col("vec_id") < N_QUERIES).selectExpr(
+        "vec_id AS query_id", "embedding AS q_emb", "sq AS q_sq"
+    )
+    return q, v
+
+
+def test_pandas_topk_bit_identical_across_batches_and_partitions(spark, sf_dir):
+    """The mapInPandas path scores batch by batch.  With 7-row Arrow
+    batches, five candidate partitions, and a candidate set small
+    enough to leave partitions empty, it still equals the JVM fold row
+    for row, cosines compared with ==."""
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    q, v = _topk_inputs(spark, sf_dir)
+    bf = sorted(QUERIES["sim_topk_bruteforce"](spark, sf_dir).collect())
+    spark.conf.set(key, "7")
+    try:
+        assert sorted(QUERIES["sim_topk_pandas_udf"](spark, sf_dir).collect()) == bf
+        assert sorted(cosine_topk_pandas(q, v.repartition(5)).collect()) == bf
+        few = v.filter(F.col("vec_id") < 3).repartition(5)
+        got = sorted(cosine_topk_pandas(q, few).collect())
+        assert got and got == sorted(cosine_topk(q, few).collect())
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_pandas_topk_empty_query_block(spark, sf_dir):
+    q, v = _topk_inputs(spark, sf_dir)
+    out = cosine_topk_pandas(q.filter(F.lit(False)), v)
+    assert out.columns == ["query_id", "neighbor_id", "cosine", "rank"]
+    assert out.collect() == []
 
 
 def test_exact_dedup_collapses_recrawl(spark, sf_dir):

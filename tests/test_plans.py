@@ -4,6 +4,8 @@ columns pruned, no cartesian products where an index join was intended.
 These are the checks the .explain iteration loop settled on; they keep
 regressions from silently reintroducing shuffles."""
 
+import re
+
 import pytest
 
 from nyc_data_pipeline_spark.registry import QUERIES, load_all
@@ -191,11 +193,32 @@ def test_ols_stats_form_has_no_python(spark, sf_dir):
     assert "WindowExec" in p or "Window" in p
 
 
+def read_columns(p: str) -> list[list[str]]:
+    """Column names of each scan's ReadSchema, in plan order."""
+    return [
+        [f.split(":")[0] for f in s.split(",")]
+        for s in re.findall(r"ReadSchema: struct<(.*)>", p)
+    ]
+
+
 def test_ols_per_user_is_grouped_map(spark, sf_dir):
     """The per-user twin IS the applyInPandas surface (U2) — grouped-map
-    Arrow exec on the high-cardinality key."""
+    Arrow exec on the high-cardinality key.  The events scan under it
+    reads only the four columns the fit uses: nothing else crosses
+    into Python."""
     p = plan_str(QUERIES["grouped_ols_per_user"](spark, sf_dir))
     assert "FlatMapGroupsInPandas" in p
+    assert read_columns(p) == [["event_id", "ts", "user_id", "value"]]
+
+
+def test_pandas_topk_crosses_arrow_once_per_candidate(spark, sf_dir):
+    """sim_topk_pandas_udf is one MapInPandas over the embeddings scan,
+    then the window: no per-pair query broadcast into an Arrow eval."""
+    p = plan_str(QUERIES["sim_topk_pandas_udf"](spark, sf_dir))
+    assert p.count("MapInPandas (") == 1
+    assert "ArrowEvalPython" not in p
+    assert "BroadcastNestedLoopJoin" not in p
+    assert read_columns(p) == [["vec_id", "embedding"]]
 
 
 def test_scalar_joins_broadcast_one_row_sides(spark, sf_dir):
