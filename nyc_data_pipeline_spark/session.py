@@ -14,6 +14,8 @@ else).  Here the session is a single factory with scale-aware defaults:
   transfer, not per-row pickling.
 - Session timezone pinned to UTC so timestamp semantics match the
   DuckDB oracle (naive-UTC) and are stable across machines.
+- The package's directory on the Python workers' path, so UDF bodies
+  pickled by reference import wherever the driver was started.
 """
 
 from __future__ import annotations
@@ -23,6 +25,10 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_APP_NAME = "nyc_data_pipeline_spark"
+
+# The directory holding the package: Python workers import it to
+# unpickle UDF bodies defined at module level.
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _default_driver_memory() -> str:
@@ -102,6 +108,12 @@ def get_spark(
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # Workers unpickle module-level UDF bodies (mapInPandas batch
+        # functions) by importing the package; a driver started outside
+        # the repository without PYTHONPATH would otherwise fail inside
+        # the worker.  Spark merges this with its own and the environment's
+        # PYTHONPATH.
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
     if extra_conf:
         for k, v in extra_conf.items():

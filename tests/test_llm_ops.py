@@ -101,6 +101,41 @@ def test_exact_dedup_collapses_recrawl(spark, sf_dir):
     assert all(r.keep_id < 1000000 for r in rows)
 
 
+def test_module_level_udf_runs_from_a_driver_outside_the_repo(tmp_path):
+    """Python workers unpickle module-level UDF bodies (here
+    `binary_ops._fake_feature_batches`) by importing the package, so
+    the session puts the package on the workers' path: a driver
+    started from another directory, with no PYTHONPATH, still runs
+    them.  Runs in a fresh interpreter and JVM, since the worker
+    environment is fixed when the SparkContext starts."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "driver.py"
+    script.write_text(
+        "import sys\n"
+        f"sys.path.insert(0, {repo!r})\n"
+        "import pyspark.sql.functions as F\n"
+        "from nyc_data_pipeline_spark.multimodal.binary_ops import (\n"
+        "    attach_binary_payload, fake_decode_features)\n"
+        "from nyc_data_pipeline_spark.session import get_spark\n"
+        "spark = get_spark(app_name='outside-repo', cpus=1)\n"
+        "docs = spark.range(3).select(F.col('id').alias('doc_id'),\n"
+        "    F.repeat(F.lit('ab'), F.col('id').cast('int') + 1).alias('text'))\n"
+        "rows = fake_decode_features(attach_binary_payload(docs))\n"
+        "print('N_BYTES', sorted(r.n_bytes for r in rows.collect()))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEMORY"] = "1g"
+    run = subprocess.run(
+        [sys.executable, str(script)], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=300,
+    )
+    assert "N_BYTES [2, 4, 6]" in run.stdout, run.stderr[-3000:]
+
+
 def test_multimodal_decode_deterministic_and_schema_stable(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").limit(50)
     b = attach_binary_payload(d)

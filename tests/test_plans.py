@@ -626,6 +626,40 @@ def test_mor_read_grouped_version_scans(spark, sf_dir):
     assert ",zb#" in p or "[zb#" in p  # zb is a recovered partition column
 
 
+def test_mor_feed_shadow_is_driver_local(spark, sf_dir):
+    """The streaming MOR change feed resolves its pre-image shadow on
+    the driver: no sidecar JSON scan, no max(struct) shadow aggregate,
+    no Python-pickled ExistingRDD; each commit's DV key table is a
+    LocalTableScan broadcast into the pre- and post-image joins.
+    Building the feeds over the query's table launches no Spark job."""
+    import uuid
+
+    from nyc_data_pipeline_spark.sources.scans import scratch_dir
+    from nyc_data_pipeline_spark.streaming import mor_cdc
+
+    p = plan_str(QUERIES["stream_mor_cdc_feed"](spark, sf_dir))
+    assert "Scan json" not in p
+    assert "max(struct" not in p
+    assert "ExistingRDD" not in p
+    assert "LeftSemi" not in p
+    tree = p.split("\n\n")[0].splitlines()
+    local = [i for i, line in enumerate(tree) if "LocalTableScan (" in line]
+    # three commits' pre-images + the post-images of the two upserts
+    assert len(local) == 5, p[:3000]
+    assert all("BroadcastExchange (" in tree[i - 1] for i in local)
+    table_dir = scratch_dir("mor_cdc", sf_dir)
+    sc = spark.sparkContext
+    group = f"mor-feed-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "MOR feed build probe")
+    try:
+        ctx = mor_cdc._feed_dv_context(spark, table_dir, [2, 3, 4])
+        for v in (2, 3, 4):
+            mor_cdc.mor_cdc_change_feed(spark, table_dir, v, _ctx=ctx)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
+
+
 def test_bpe_apply_reads_frozen_artifact(spark, sf_dir):
     """Train-once/apply-everywhere (VERDICT r9 ask #3): once the
     tokenizer artifact exists, the apply plan reads the committed

@@ -2099,10 +2099,10 @@ def test_feed_context_reads_each_shadow_source_once(
         reads.append(path)
         return real_sidecar(path)
 
-    def shadow(path, floor):
-        if floor:
+    def shadow(path, commit):
+        if commit is None:  # the floor; sidecars count in _sidecar_keys
             reads.append(path)
-        return real_shadow(path, floor)
+        return real_shadow(path, commit)
 
     monkeypatch.setattr(mor_cdc, "_sidecar_keys", sidecar)
     monkeypatch.setattr(mor_cdc, "_shadow_pairs", shadow)
@@ -2116,6 +2116,146 @@ def test_feed_context_reads_each_shadow_source_once(
         map(tuple, alone[6][0].collect())
     )
     assert ctx[6][1] == alone[6][1]
+
+
+def _feed_by_old_derivation(spark, table_dir, v):
+    """Commit v's feed rows derived in Spark alone, the reference for
+    the driver-resolved shadow: the change keys are the keys whose max
+    version in v's sidecar exceeds their max over the prior sidecars
+    and the floor (Spark aggregates over the manifest-listed files),
+    the pre-image is the full `mor_cdc_read(v-1)` semi-joined to them,
+    the post-image `mor_cdc_read(v)` semi-joined to them, and the two
+    are full-outer-joined."""
+    from functools import reduce
+
+    from nyc_data_pipeline_spark.streaming.mor_cdc import (
+        DV_SIDECAR_SCHEMA,
+        main_log,
+        mor_cdc_read,
+    )
+
+    m = main_log(table_dir).load(v)
+
+    def sidecar(path):
+        return spark.read.schema(DV_SIDECAR_SCHEMA).json(path).select(
+            "k", "v"
+        )
+
+    own = next(d["path"] for d in m["dvs"] if d["v"] == v)
+    keys = sidecar(own).groupBy("k").agg(F.max("v").alias("v"))
+    priors = [sidecar(d["path"]) for d in m["dvs"] if d["v"] < v]
+    if m.get("dv_floor"):
+        priors.append(spark.read.parquet(m["dv_floor"]).select("k", "v"))
+    if priors:
+        ceiling = reduce(lambda a, b: a.unionByName(b), priors).groupBy(
+            "k"
+        ).agg(F.max("v").alias("cv"))
+        keys = keys.join(ceiling, "k", "left").filter(
+            F.col("cv").isNull() | (F.col("v") > F.col("cv"))
+        )
+    keys = keys.select("k")
+    pre = mor_cdc_read(spark, table_dir, v - 1).join(keys, "k", "left_semi")
+    post = mor_cdc_read(spark, table_dir, v).join(keys, "k", "left_semi")
+    both = pre.select(
+        "k", F.lit(1).alias("_pre"), F.col("cents").alias("pre_cents")
+    ).join(
+        post.select(
+            "k", F.lit(1).alias("_post"), F.col("cents").alias("post_cents")
+        ),
+        "k",
+        "full_outer",
+    )
+    return sorted(
+        (
+            v,
+            r["k"],
+            "delete" if r["_post"] is None
+            else "insert" if r["_pre"] is None
+            else "update",
+            r["pre_cents"],
+            r["post_cents"],
+        )
+        for r in both.collect()
+    )
+
+
+def test_feed_matches_full_read_derivation_across_commit_kinds(
+    spark, tmp_path
+):
+    """The feed's driver-resolved pre-image shadow gives, row for row,
+    what the full v{N-1} read semi-joined to the ceiling-filtered keys
+    gives, across every way a DV commit number enters the chain: an
+    exclusive commit (`dv-v{N}-{token}`), a WAP-published commit
+    (`dv-v{N}-{branch}-{token}`), a stale wave redelivered under a new
+    epoch id (two copies at one change version: the commit tie-break
+    keeps the later), a compaction floor (its `_commit` as the shadow's
+    commit), and all-stale commits (empty key tables).  The shadow's
+    commit comes from the manifest's `dvs[].v`, so the directory name
+    plays no part."""
+    from nyc_data_pipeline_spark.streaming import mor_cdc
+    from nyc_data_pipeline_spark.streaming.mor_cdc import (
+        main_log,
+        mor_cdc_change_feed,
+        mor_cdc_change_feed_span,
+        mor_cdc_commit,
+        mor_cdc_compact,
+        wap_publish,
+        wap_stage,
+    )
+
+    table_dir = _mk_cdc_table(
+        spark, tmp_path, "cdc_feed_equiv", n_keys=120, n_files=4
+    )
+
+    def wave(ver, mod, del_mod):
+        return spark.range(120).filter(F.col("id") % mod == 0).select(
+            F.col("id").alias("k"),
+            (F.col("id") * 10 + ver).alias("cents"),
+            F.lit(ver).alias("version"),
+            F.when(F.col("id") % del_mod == 0, "d").otherwise("u")
+            .alias("op"),
+        )
+
+    mor_cdc_commit(spark, wave(1, 3, 9), table_dir, 2, exclusive=True)
+    wap_stage(spark, wave(2, 4, 16), table_dir, "audit")
+    wap_publish(table_dir, "audit")  # v3
+    mor_cdc_commit(spark, wave(1, 3, 9), table_dir, 4)  # v2 redelivered
+    mor_cdc_commit(spark, wave(3, 5, 25), table_dir, 5, exclusive=True)
+    mor_cdc_compact(spark, table_dir, 5)  # v6: the floor
+    mor_cdc_commit(spark, wave(3, 5, 25), table_dir, 7)  # v5 redelivered
+    mor_cdc_commit(spark, wave(4, 3, 6), table_dir, 8, exclusive=True)
+
+    log = main_log(table_dir)
+    dvs = {d["v"]: os.path.basename(d["path"]) for d in log.load(8)["dvs"]}
+    assert dvs[7] == "dv-v7" and dvs[8].startswith("dv-v8-")
+    named = {
+        d["v"]: os.path.basename(d["path"]) for d in log.load(5)["dvs"]
+    }
+    assert named[2].startswith("dv-v2-") and named[3].startswith(
+        "dv-v3-audit-"
+    )
+    assert log.load(8)["dv_floor"]
+
+    ctx = mor_cdc._feed_dv_context(spark, table_dir, list(range(2, 9)))
+    assert sorted(ctx) == [2, 3, 4, 5, 7, 8]  # v6 (compaction) is empty
+    assert ctx[4][0].count() == 0 and ctx[7][0].count() == 0  # all stale
+    assert ctx[8][0].filter(F.col("_sc") == 6).count() > 0  # floor shadow
+    assert ctx[5][0].filter(F.col("_sc") == 4).count() > 0  # tie-break
+    want_all = []
+    for v in (2, 3, 4, 5, 7, 8):
+        want = _feed_by_old_derivation(spark, table_dir, v)
+        got = sorted(
+            tuple(r) for r in mor_cdc_change_feed(spark, table_dir, v)
+            .select("commit", "k", "change", "pre_cents", "post_cents")
+            .collect()
+        )
+        assert got == want, v
+        assert bool(got) == (v not in (4, 7)), v
+        want_all += want
+    span = mor_cdc_change_feed_span(spark, table_dir, 1, 8).select(
+        "commit", "k", "change", "pre_cents", "post_cents"
+    )
+    assert sorted(tuple(r) for r in span.collect()) == sorted(want_all)
 
 
 def test_zb_stats_from_footers_match_spark_aggregate(spark, tmp_path):
