@@ -54,10 +54,6 @@ def ts_us(col: Column | str) -> Column:
 
 # ---- matching DuckDB SQL fragments -------------------------------------
 
-def sql_dec(expr: str) -> str:
-    return f"CAST({expr} AS DECIMAL(18,6))"
-
-
 def sql_d2d(expr: str) -> str:
     """Decimal → double via VARCHAR.
 

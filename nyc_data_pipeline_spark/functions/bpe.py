@@ -382,15 +382,6 @@ def _learn_merges(d: DataFrame, k: int, need_final_syms: bool = True):
     return merges, syms
 
 
-def bpe_vocab_k(d: DataFrame, k: int = K_MERGES) -> DataFrame:
-    """Learn the first `k` BPE merges over the corpus — the merge
-    table (step, left_sym, right_sym, pair_cnt), K metadata rows."""
-    merges, _ = _learn_merges(d, k, need_final_syms=False)
-    return d.sparkSession.createDataFrame(
-        merges, "step int, left_sym string, right_sym string, pair_cnt bigint"
-    )
-
-
 _MERGES_SCHEMA = "step int, left_sym string, right_sym string, pair_cnt bigint"
 
 

@@ -94,23 +94,6 @@ def duck_ngram_hashes(hashes_col: str, n: int) -> str:
     )
 
 
-# --- generic word n-grams -------------------------------------------------
-
-def spark_ngrams(tokens_expr: str, n: int) -> str:
-    """Word n-grams (space-joined); caller must guard size >= n."""
-    return (
-        f"transform(sequence(1, size({tokens_expr}) - {n - 1}), "
-        f"i -> array_join(slice({tokens_expr}, i, {n}), ' '))"
-    )
-
-
-def duck_ngrams(tokens_expr: str, n: int) -> str:
-    return (
-        f"list_transform(generate_series(1, len({tokens_expr}) - {n - 1}), "
-        f"i -> array_to_string(list_slice({tokens_expr}, i, i + {n - 1}), ' '))"
-    )
-
-
 # --- normalization --------------------------------------------------------
 
 def spark_norm_text(col: str) -> str:

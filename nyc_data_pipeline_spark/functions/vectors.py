@@ -37,9 +37,3 @@ def spark_sq_norm(a: str) -> str:
 
 def duck_sq_norm(a: str) -> str:
     return duck_dot(a, a)
-
-
-# cosine given precomputed squared norms (identical formula text both
-# sides so the division/multiplication order matches):
-def cosine_from(dot: str, sq_a: str, sq_b: str) -> str:
-    return f"{dot} / (sqrt({sq_a}) * sqrt({sq_b}))"

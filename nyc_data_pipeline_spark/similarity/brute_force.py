@@ -32,7 +32,9 @@ def cosine_topk(
     queries: DataFrame, candidates: DataFrame, k: int = TOP_K
 ) -> DataFrame:
     """Reusable operator: (query_id, q_emb, q_sq) × (vec_id, embedding,
-    sq) → top-k per query by cosine desc, vec_id asc."""
+    sq) → top-k per query by cosine desc, vec_id asc.  A zero-norm
+    vector's cosine is NULL (`try_divide`; ANSI `/` raises), as in
+    DuckDB and the mapInPandas path, and ranks last."""
     scored = (
         candidates.join(
             F.broadcast(queries), F.col("query_id") != F.col("vec_id")
@@ -40,7 +42,7 @@ def cosine_topk(
         .selectExpr(
             "query_id",
             "vec_id AS neighbor_id",
-            f"{spark_dot('q_emb', 'embedding')} / (sqrt(q_sq) * sqrt(sq)) AS cosine",
+            f"try_divide({spark_dot('q_emb', 'embedding')}, sqrt(q_sq) * sqrt(sq)) AS cosine",
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))

@@ -36,7 +36,7 @@ keeps its order, ``dot / (sqrt(q_sq) * sqrt(sq))`` with both squared
 norms computed by Spark.  Cosines are bit-identical to
 sim_topk_bruteforce and the DuckDB oracle.  A zero-norm vector's 0/0
 is NaN in numpy, which the Arrow conversion sends back as null (the
-oracle's value); the JVM fold's ANSI divide raises there instead.
+oracle's value); the JVM fold's `try_divide` gives the same null.
 """
 
 from __future__ import annotations

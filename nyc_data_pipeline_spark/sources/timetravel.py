@@ -117,16 +117,6 @@ def read_version(spark: SparkSession, table_dir: str, version: int) -> DataFrame
     return parts
 
 
-def read_as_of(
-    spark: SparkSession, table_dir: str, ts_us: int
-) -> DataFrame:
-    """`TIMESTAMP AS OF` read: resolve the timestamp to the latest
-    commit at-or-before it, then the ordinary manifest read."""
-    return read_version(
-        spark, table_dir, resolve_version_as_of(table_dir, ts_us)
-    )
-
-
 @register(
     "src_time_travel",
     oracle=f"""

@@ -31,7 +31,7 @@ records (key, change version, commit); every stored row carries its
 version column (base rows are version 0) and the commit that wrote
 it (recovered from the manifest, never stored in the data).  A stored
 row survives iff `(row.version, row.commit) >= (v, c)` for every DV
-(v, c) on its key — lexicographic, one max-struct aggregate.  An
+(v, c) on its key — lexicographic, one per-key max.  An
 epoch's own upsert survives its own shadow vector (equal version,
 equal commit), a later change's DV shadows every older copy of the
 key, a delete is a DV with no matching append, and a
@@ -56,25 +56,28 @@ batch (repartition on the frozen-bounds bucket id — the shared
 plans/two_phase.bucket_expr rule, clamped at both ends) plus an
 O(batch-keys) sidecar write; no data file is ever read or rewritten on
 the write path.  The read is one scan per commit-version directory
-(zb recovered as a partition column, file lists from the manifest),
-one aggregate over the DV table (max version per key), and one join —
-at 100 TB the DV table is the churn rate, not the corpus, and
-compaction (src_mor_compaction's OPTIMIZE) bounds its growth.
+(zb recovered as a partition column, file lists from the manifest)
+and one broadcast join to the shadow ceiling: per key, the
+lexicographic max `(v, commit)` over every DV sidecar and the
+compaction floor.  The ceiling is O(distinct keys churned since the
+table began) — at 100 TB the churn rate, not the corpus — and the
+change feed already folds exactly that map on the driver, so the
+read, the feed and compaction share one fold instead of each keeping
+a Spark-side aggregate.
 
 Metadata stays on the driver; Spark jobs carry data only.  Every
 commit records the schema of the files it wrote (`file_schemas`, keyed
 like `commit_cols`), so scans are built with an explicit schema and no
 footer-inference job; the per-bucket zone stats come from the footers
-of the files just written (`_zb_stats`); and the change feed's whole
-DV context — change keys, churned buckets, and each change key's
-pre-image shadow `(v, commit)` — is parsed from the sidecar JSON and
-floor parquet by the driver (`_feed_dv_context`) and handed to Spark
-as an Arrow-built local relation.  Building a read or a change feed
-launches no Spark job; a commit launches only its routing checkpoint
-and its two writes.  The read and compaction keep their shadow
-aggregate in Spark: it covers every churned key of the table and can
-outgrow the driver, while the feed's is O(commit churn) by
-construction.
+of the files just written (`_zb_stats`); and every shadow — the read's
+ceiling (`_shadow_ceiling`), the feed's per-commit key tables
+(`_feed_dv_context`) and compaction's floor — is parsed from the
+sidecar JSON and floor parquet by the driver, each sidecar's commit
+taken from the manifest's `dvs[].v`.  Spark receives a shadow as an
+Arrow-built local relation (a `LocalTableScan`), and compaction writes
+its floor with pyarrow.  Building a read or a change feed launches no
+Spark job; a commit launches only its routing checkpoint and its two
+writes, and a compaction only its rewrite.
 
 Reference parity: this solves the reference's at-least-once JDBC
 duplication end to end at the STORAGE layer — kafka_producer.py:27-29
@@ -121,15 +124,13 @@ from ..sources.scans import field_id_hwm, scratch_dir
 MOR_CDC_FILES = 8  # bucket fan-out of the fixture table
 
 # DV sidecars are always (bucket, key, change-version) over an integral
-# clustering key (range_buckets arithmetic requires one), so every read
-# passes the schema explicitly: schema inference is a full extra pass
-# over every sidecar file PLUS one Spark job per read site — profiled
-# as a visible slice of the per-commit feed cost at sf0.1, pure waste
-# at any scale.
+# clustering key (range_buckets arithmetic requires one).  The engine
+# parses them on the driver (`_sidecar_keys`); this schema is for the
+# Spark scan of `stream_mor_cdc_compact`'s per-bucket bookkeeping,
+# which hands it over explicitly so the scan infers nothing.  (The
+# compaction floor is `k bigint, v bigint, _commit bigint`, one row per
+# ever-churned key — see mor_cdc_compact.)
 DV_SIDECAR_SCHEMA = "zb bigint, k bigint, v bigint"
-# The compaction-frozen shadow floor (`mor_cdc_compact`): one row per
-# ever-churned key, its max change version and the compaction's commit.
-DV_FLOOR_SCHEMA = "k bigint, v bigint, _commit bigint"
 
 
 class ChangeFeedRetentionError(RetentionError):
@@ -557,7 +558,11 @@ def mor_cdc_read(
     row at the same change version, and its own DV (same version,
     later commit) shadows every EARLIER copy, leaving exactly one.
     One scan per commit directory (manifest-listed paths, zb recovered
-    as a partition column), one DV aggregate, one join.
+    as a partition column) and one broadcast left join to the shadow
+    ceiling, folded on the driver from the manifest's sidecars and
+    floor (`_shadow_ceiling`) — no DV scan or aggregate in Spark.  A
+    sidecar that routes one key to two buckets raises
+    `BucketDependencyError`.
 
     `zb_filter` restricts the read to the named buckets BEFORE any
     scan is built: manifest `files` entries for other buckets never
@@ -586,20 +591,23 @@ def _read_manifest(
     spark: SparkSession, m: dict, zb_filter: set[str] | None = None,
     key_range: tuple[int, int] | None = None,
     shadow: DataFrame | None = None,
+    ceiling: dict | None = None,
 ) -> DataFrame:
     """`mor_cdc_read`'s body over an already-loaded manifest dict — the
     shared read path for main-chain versions AND WAP branch heads (a
     branch manifest is shaped exactly like a main one; only its file
     NAME differs, so the reader never cares which chain it came from).
 
-    `shadow` is a driver-resolved shadow over a KEY SUBSET: a small
-    relation `(key, _sv, _sc, ...)` holding, per key, the lexicographic
-    max `(v, commit)` of this manifest's DV sources (NULLs when the key
-    has none).  It replaces the sidecar scan and aggregate: the data
-    scans are broadcast-inner-joined to it and filtered by the same
-    survival rule, so the result is the read restricted to the
-    relation's keys (the change feed's pre-image, `_feed_dv_context`).
-    The relation's other columns ride along."""
+    Every read applies one survival rule against a driver-resolved
+    shadow relation `(key, _sv, _sc, ...)`: per key, the lexicographic
+    max `(v, commit)` of this manifest's DV sources, NULLs when the key
+    has none.  With no `shadow`, the relation is the full ceiling
+    (`ceiling`, folded from `m` by `_shadow_ceiling` unless the caller
+    already holds it) and the data scans are broadcast-LEFT-joined to
+    it.  A `shadow` covers a KEY SUBSET and is broadcast-INNER-joined,
+    so the result is the read restricted to its keys (the change
+    feed's pre-image, `_feed_dv_context`); its other columns ride
+    along."""
     version = m["version"]
     key = m["key"]
     by_commit: dict[int, list[str]] = {}
@@ -714,67 +722,25 @@ def _read_manifest(
         rows = rows.filter(
             F.col(key).between(int(key_range[0]), int(key_range[1]))
         )
-    if shadow is not None:
-        ver, sv = F.col("version").cast("long"), F.col("_sv")
-        return (
-            rows.join(F.broadcast(shadow), key)
-            .filter(
-                sv.isNull()
-                | (ver > sv)
-                | ((ver == sv) & (F.col("_commit") >= F.col("_sc")))
-            )
-            .drop("_sv", "_sc", "zb", "_commit")
+    how = "left" if shadow is None else "inner"
+    if shadow is None:
+        if ceiling is None:
+            ceiling = _shadow_ceiling(m)
+        if not ceiling:
+            return rows.drop("zb", "_commit")
+        shadow = _local_relation(
+            spark, [key, "_sv", "_sc"],
+            [(k, v, c) for k, (v, c) in ceiling.items()],
         )
-    dv = None
-    if m["dvs"]:
-        # ONE multi-path scan over every sidecar, the commit recovered
-        # from the directory name — not a union branch per commit (the
-        # _grouped_manifest_scan rule applied to the DV side: a
-        # 100-commit span between compactions plans 1 scan, not 100)
-        dv = spark.read.schema(DV_SIDECAR_SCHEMA).json(
-            [d["path"] for d in m["dvs"]]
-        ).select(
-            "k",
-            F.col("v").cast("long").alias("v"),
-            # leading digits only: exclusive commits suffix the dir
-            # with a writer token (dv-v7-3fa9c1d2), which must not
-            # bleed into the recovered commit number
-            F.regexp_extract(
-                F.input_file_name(), r"dv-v(\d+)[-/]", 1
-            )
-            .cast("long")
-            .alias("_commit"),
-        )
-    if m.get("dv_floor"):
-        # the compaction-frozen shadow history (one row per ever-
-        # churned key, max DV version at compaction time, commit = the
-        # compaction's) — see mor_cdc_compact
-        piece = spark.read.schema(DV_FLOOR_SCHEMA).parquet(
-            m["dv_floor"]
-        ).select(
-            "k",
-            F.col("v").cast("long").alias("v"),
-            F.col("_commit").cast("long").alias("_commit"),
-        )
-        dv = piece if dv is None else dv.unionByName(piece)
-    if dv is None:
-        return rows.drop("zb", "_commit")
-    shadow = dv.groupBy(F.col("k").alias(key)).agg(
-        F.max(F.struct("v", "_commit")).alias("_max_dv")
-    )
+    ver, sv = F.col("version").cast("long"), F.col("_sv")
     return (
-        rows.join(shadow, key, "left")
+        rows.join(F.broadcast(shadow), key, how)
         .filter(
-            F.col("_max_dv").isNull()
-            | (
-                F.col("_max_dv")
-                <= F.struct(
-                    F.col("version").cast("long").alias("v"),
-                    F.col("_commit").cast("long").alias("_commit"),
-                )
-            )
+            sv.isNull()
+            | (ver > sv)
+            | ((ver == sv) & (F.col("_commit") >= F.col("_sc")))
         )
-        .drop("_max_dv", "zb", "_commit")
+        .drop("_sv", "_sc", "zb", "_commit")
     )
 
 
@@ -1652,15 +1618,21 @@ def mor_cdc_compact(
 
     The vectors are not simply dropped: their per-key MAX change
     version is frozen into a `dv_floor` sidecar (one row per
-    ever-churned key, commit = this compaction's).  Without it,
-    compaction would erase the shadow history and a stale wave
-    redelivered under a NEW epoch id AFTERWARDS could resurrect
-    superseded rows — the floor keeps shadowing them, so the fold law
-    survives compaction (Iceberg keeps equality-delete sequence floors
-    for the same reason).  The floor is O(churned keys) and is
-    CARRIED (re-frozen, folded with any newer vectors) by later
-    compactions; deployments whose source bounds redelivery (e.g.
-    log retention) may vacuum it past that horizon.
+    ever-churned key, commit = this compaction's; schema `k bigint,
+    v bigint, _commit bigint`).  Without it, compaction would erase
+    the shadow history and a stale wave redelivered under a NEW epoch
+    id AFTERWARDS could resurrect superseded rows — the floor keeps
+    shadowing them, so the fold law survives compaction (Iceberg keeps
+    equality-delete sequence floors for the same reason).  The floor
+    is O(churned keys) and is CARRIED (re-frozen, folded with any
+    newer vectors) by later compactions; deployments whose source
+    bounds redelivery (e.g. log retention) may vacuum it past that
+    horizon.
+
+    The shadow ceiling is folded ONCE on the driver (`_shadow_ceiling`)
+    and serves both the live read and the floor, which pyarrow writes
+    into the staged floor directory: the rewrite is the only Spark
+    work.
 
     Concurrency (VERDICT r13 ask #6): artifacts stage under
     writer-unique directory names and the manifest publishes through the
@@ -1676,7 +1648,8 @@ def mor_cdc_compact(
 
     m = main_log(table_dir).load(version)
     key = m["key"]
-    live = mor_cdc_read(spark, table_dir, version)
+    ceiling = _shadow_ceiling(m)
+    live = _read_manifest(spark, m, ceiling=ceiling)
     if n_files is None:
         # keep the chain's spec (pre-spec manifests: the default)
         n_files = int(m.get("n_files", MOR_CDC_FILES))
@@ -1741,30 +1714,20 @@ def mor_cdc_compact(
         ]
         for z in zdirs
     }
-    dv = None
-    if m["dvs"]:
-        # one multi-path scan (the mor_cdc_read rule; compaction folds
-        # the whole vector history, so the branch count matters most
-        # here)
-        dv = spark.read.schema(DV_SIDECAR_SCHEMA).json(
-            [d["path"] for d in m["dvs"]]
-        ).select("k", F.col("v").cast("long").alias("v"))
-    if m.get("dv_floor"):
-        piece = spark.read.schema(DV_FLOOR_SCHEMA).parquet(
-            m["dv_floor"]
-        ).select("k", F.col("v").cast("long").alias("v"))
-        dv = piece if dv is None else dv.unionByName(piece)
     floor_path = None
-    if dv is not None:
+    if ceiling:
+        import pyarrow.parquet as pq
+
         floor_path = os.path.join(
             table_dir, f"dv-floor-v{vnew}-{token}"
         )
-        (
-            dv.groupBy("k")
-            .agg(F.max("v").alias("v"))
-            .withColumn("_commit", F.lit(int(vnew)).cast("long"))
-            .write.mode("overwrite")
-            .parquet(floor_path)
+        os.makedirs(floor_path)
+        pq.write_table(
+            _int64_table(
+                ["k", "v", "_commit"],
+                [(k, v, vnew) for k, (v, _c) in ceiling.items()],
+            ),
+            os.path.join(floor_path, "part-00000.parquet"),
         )
     from ..sources.timetravel import commit_wallclock_us
 
@@ -2678,6 +2641,44 @@ def _raise_ceiling(ceiling: dict, pairs) -> None:
             ceiling[k] = vc
 
 
+def _shadow_sources(m: dict) -> dict[str, int | None]:
+    """Manifest `m`'s shadow sources: each DV sidecar path -> the
+    commit that wrote it (its `dvs[].v`), the compaction floor ->
+    None (its rows carry their own `_commit`)."""
+    out: dict[str, int | None] = {d["path"]: int(d["v"]) for d in m["dvs"]}
+    if m.get("dv_floor"):
+        out[m["dv_floor"]] = None
+    return out
+
+
+def _shadow_ceiling(m: dict) -> dict:
+    """Manifest `m`'s full shadow ceiling, folded on the driver: key ->
+    the lexicographic max `(v, commit)` over every shadow source.  The
+    read's survival threshold and the source of compaction's floor."""
+    ceiling: dict = {}
+    for path, commit in _shadow_sources(m).items():
+        _raise_ceiling(ceiling, _shadow_pairs(path, commit))
+    return ceiling
+
+
+def _int64_table(names: list[str], rows: list[tuple]):
+    """`rows` as a `pyarrow.Table` of nullable int64 columns `names`."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) if rows else [()] * len(names)
+    return pa.table([pa.array(c, pa.int64()) for c in cols], names=names)
+
+
+def _local_relation(
+    spark: SparkSession, names: list[str], rows: list[tuple]
+) -> DataFrame:
+    """`rows` as a driver-local bigint relation: built from a
+    `pyarrow.Table`, so Spark sees a `LocalRelation` (a
+    `LocalTableScan` in the plan) and starts no Python worker to
+    broadcast it."""
+    return spark.createDataFrame(_int64_table(names, rows))
+
+
 def _feed_dv_context(
     spark: SparkSession, table_dir: str, versions: list[int]
 ) -> dict[int, tuple[DataFrame, set[str]]]:
@@ -2704,17 +2705,13 @@ def _feed_dv_context(
     key table is cut (the next commit's priors list it).  When a
     commit's priors do not cover what the ceiling already holds (a
     compaction replaced the sidecars by its floor), the ceiling is
-    rebuilt from that commit's priors.  Each key table is built from
-    a `pyarrow.Table`, so Spark sees a driver-local `LocalRelation`
-    (a `LocalTableScan` in the plan) and starts no Python worker to
-    broadcast it.
+    rebuilt from that commit's priors.  Each key table is a
+    `_local_relation`.
 
     Versions whose manifest is missing, whose feed the compaction/
     evolution rule makes empty, or whose artifacts were vacuumed are
     SKIPPED (no dict entry): `mor_cdc_change_feed` owns those branches
     and their error messages."""
-    import pyarrow as pa
-
     log = main_log(table_dir)
     ceiling: dict = {}
     folded: set[str] = set()
@@ -2733,11 +2730,11 @@ def _feed_dv_context(
             continue  # empty feed by definition
         if not (log.exists(version - 1) and os.path.isdir(dv_dir)):
             continue  # retention error; change_feed raises it
-        prior: dict[str, int | None] = {
-            d["path"]: int(d["v"]) for d in m["dvs"] if int(d["v"]) < version
+        prior = {
+            path: commit
+            for path, commit in _shadow_sources(m).items()
+            if commit is None or commit < version
         }
-        if m.get("dv_floor"):
-            prior[m["dv_floor"]] = None
         if not folded <= prior.keys():
             ceiling, folded = {}, set()
         for path, commit in prior.items():
@@ -2751,12 +2748,8 @@ def _feed_dv_context(
             # stale redelivery compares the change version only
             if k not in ceiling or v > ceiling[k][0]
         ]
-        keys = pa.table(
-            [pa.array([r[i] for r in rows], pa.int64()) for i in range(4)],
-            names=[m["key"], "_dv_v", "_sv", "_sc"],
-        )
         out[version] = (
-            spark.createDataFrame(keys),
+            _local_relation(spark, [m["key"], "_dv_v", "_sv", "_sc"], rows),
             {str(zb) for _v, zb in cur.values()},
         )
         _raise_ceiling(
@@ -2844,8 +2837,9 @@ def mor_cdc_change_feed(
         # OPTIMIZE commit: files rewritten, no logical row changes —
         # the feed is empty by definition (Delta CDF semantics for
         # compaction commits).  Typed via a limit(0) read of the
-        # compacted version itself, so downstream unions line up.
-        empty = mor_cdc_read(spark, table_dir, version).limit(0)
+        # compacted version itself, so downstream unions line up; an
+        # empty frame needs no shadow, so none is folded.
+        empty = _read_manifest(spark, m, ceiling={}).limit(0)
         data_cols = [c for c in m.get("columns", []) if c != "version"]
         return empty.select(
             F.lit(int(version)).cast("int").alias("commit"),
@@ -2896,14 +2890,19 @@ def mor_cdc_change_feed(
     data_cols = [c for c in m.get("columns", []) if c != "version"]
     if post_paths:
         # net post-image: the appended copy at the key's max change
-        # version this commit (absent when that change is a delete)
+        # version this commit (absent when that change is a delete).
+        # `>=` selects the same rows as `==` — `_dv_v` is the key's max
+        # version in this commit's sidecar, which lists every appended
+        # row's version — but an equality would become a second join
+        # key, and the broadcast build side a generic two-key hashed
+        # relation instead of a one-long-key one.
         post, post_cols = _commit_scan(
             spark, m, version, sorted(post_paths)
         )
         post = (
             post.drop("zb")
             .join(F.broadcast(dv_keys), key)
-            .filter(F.col("version").cast("long") == F.col("_dv_v"))
+            .filter(F.col("version").cast("long") >= F.col("_dv_v"))
         )
     else:  # delete-only commit: no appended files
         post = None

@@ -82,6 +82,46 @@ def test_pandas_topk_bit_identical_across_batches_and_partitions(spark, sf_dir):
         spark.conf.set(key, old)
 
 
+def test_zero_norm_cosine_is_null_on_both_paths(spark, sf_dir, tmp_path):
+    """A zero-norm vector's cosine is NULL on the JVM fold (`try_divide`;
+    ANSI `/` would raise) and on the mapInPandas path (numpy NaN sent
+    back as null), which is the DuckDB oracle's value.  On a 24-row
+    embeddings table whose vec_id 3 (a query) is all zeros, both
+    queries equal each other and the oracle SQL run on that table, and
+    the zero vector's five neighbours are NULL-cosine rows."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nyc_data_pipeline_spark.catalog import TABLES, table_path
+    from nyc_data_pipeline_spark.registry import ORACLE
+    from nyc_data_pipeline_spark.testing import compare_frames, run_oracle
+
+    t = pq.read_table(os.path.join(sf_dir, "embeddings.parquet")).slice(0, 24)
+    dims = len(t.column("embedding")[0].as_py())
+    emb = t.column("embedding").to_pylist()
+    emb[t.column("vec_id").to_pylist().index(3)] = [0.0] * dims
+    t = t.set_column(
+        t.schema.get_field_index("embedding"),
+        t.schema.field("embedding"),
+        pa.array(emb, t.schema.field("embedding").type),
+    )
+    small = str(tmp_path / "sf_zero_norm")
+    os.makedirs(small)
+    pq.write_table(t, os.path.join(small, "embeddings.parquet"))
+    for name in TABLES:  # the oracle connection views every table
+        if name != "embeddings":
+            os.symlink(table_path(sf_dir, name), table_path(small, name))
+    bf = QUERIES["sim_topk_bruteforce"](spark, small).toPandas()
+    pd_path = QUERIES["sim_topk_pandas_udf"](spark, small).toPandas()
+    assert compare_frames(bf, pd_path) == []
+    assert compare_frames(bf, run_oracle(ORACLE["sim_topk_bruteforce"], small)) == []
+    zero = bf[bf["query_id"] == 3]
+    assert len(zero) == 5 and zero["cosine"].isna().all()
+    assert bf[bf["query_id"] != 3]["cosine"].notna().all()
+
+
 def test_pandas_topk_empty_query_block(spark, sf_dir):
     q, v = _topk_inputs(spark, sf_dir)
     out = cosine_topk_pandas(q.filter(F.lit(False)), v)

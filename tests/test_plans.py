@@ -630,8 +630,9 @@ def test_mor_feed_shadow_is_driver_local(spark, sf_dir):
     """The streaming MOR change feed resolves its pre-image shadow on
     the driver: no sidecar JSON scan, no max(struct) shadow aggregate,
     no Python-pickled ExistingRDD; each commit's DV key table is a
-    LocalTableScan broadcast into the pre- and post-image joins.
-    Building the feeds over the query's table launches no Spark job."""
+    LocalTableScan broadcast into the pre- and post-image joins, each
+    broadcast hashed on the single key column.  Building the feeds over
+    the query's table launches no Spark job."""
     import uuid
 
     from nyc_data_pipeline_spark.sources.scans import scratch_dir
@@ -647,6 +648,10 @@ def test_mor_feed_shadow_is_driver_local(spark, sf_dir):
     # three commits' pre-images + the post-images of the two upserts
     assert len(local) == 5, p[:3000]
     assert all("BroadcastExchange (" in tree[i - 1] for i in local)
+    # every build side is keyed on the one long key: the post-image's
+    # version check is not an equality that becomes a second join key
+    modes = re.findall(r"HashedRelationBroadcastMode\(List\((.*?)\),", p)
+    assert modes and all(m.count("input[") == 1 for m in modes), modes
     table_dir = scratch_dir("mor_cdc", sf_dir)
     sc = spark.sparkContext
     group = f"mor-feed-build-{uuid.uuid4().hex}"

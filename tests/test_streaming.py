@@ -1886,12 +1886,12 @@ def test_change_feed_stable_under_compaction(spark, tmp_path):
 
 
 def test_mor_cdc_read_single_dv_scan(spark, tmp_path):
-    """The CDC read must plan ONE json FileScan over ALL delete-vector
-    sidecars (commit recovered from the directory name), not a union
-    branch per commit — the `_grouped_manifest_scan` rule applied to
-    the DV side, so a 100-commit span between compactions plans 1
-    scan.  Values are re-asserted so the path-derived commit column
-    provably drives the tie-break."""
+    """The CDC read plans NO scan of the delete-vector sidecars: their
+    shadow ceiling is folded on the driver and enters the plan as ONE
+    LocalTableScan over all three commits' vectors, not a scan or union
+    branch per commit — so a 100-commit span between compactions still
+    plans 1 shadow leaf.  Values are re-asserted so the commit taken
+    from the manifest provably drives the tie-break."""
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         mor_cdc_commit,
         mor_cdc_read,
@@ -1916,7 +1916,8 @@ def test_mor_cdc_read_single_dv_scan(spark, tmp_path):
             "simple"
         )
     )
-    assert plan.count("FileScan json") == 1, plan[:2000]
+    assert "FileScan json" not in plan, plan[:2000]
+    assert plan.count("LocalTableScan") == 1, plan[:2000]
     rows = {r["k"]: (r["cents"], r["version"]) for r in df.collect()}
     assert len(rows) == 400
     # keep-latest: k=12 hit by all three waves -> wave 3 wins
@@ -2118,23 +2119,91 @@ def test_feed_context_reads_each_shadow_source_once(
     assert ctx[6][1] == alone[6][1]
 
 
+def _read_by_spark_derivation(spark, m):
+    """Manifest `m`'s table state derived in Spark alone, the reference
+    for the driver-folded shadow ceiling: every manifest-listed data
+    directory tagged with the commit that wrote it, ONE json scan over
+    every DV sidecar with the commit recovered from the directory name
+    (`dv-v{N}`, `dv-v{N}-{token}`, `dv-v{N}-{branch}-{token}`), the
+    compaction floor's rows, a per-key `max(struct(v, _commit))`
+    aggregate, and a left join keeping each row at or above it."""
+    from functools import reduce
+
+    from nyc_data_pipeline_spark.streaming.mor_cdc import DV_SIDECAR_SCHEMA
+
+    by_commit = {}
+    for entries in m["files"].values():
+        for e in entries:
+            by_commit.setdefault(e["v"], []).append(e["path"])
+    rows = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [
+            spark.read.parquet(*paths).withColumn(
+                "_commit", F.lit(v).cast("long")
+            )
+            for v, paths in sorted(by_commit.items())
+        ],
+    )
+    dv = []
+    if m["dvs"]:
+        dv.append(
+            spark.read.schema(DV_SIDECAR_SCHEMA)
+            .json([d["path"] for d in m["dvs"]])
+            .select(
+                "k",
+                F.col("v").cast("long").alias("v"),
+                F.regexp_extract(F.input_file_name(), r"dv-v(\d+)[-/]", 1)
+                .cast("long")
+                .alias("_commit"),
+            )
+        )
+    if m.get("dv_floor"):
+        dv.append(
+            spark.read.parquet(m["dv_floor"]).select(
+                "k",
+                F.col("v").cast("long").alias("v"),
+                F.col("_commit").cast("long").alias("_commit"),
+            )
+        )
+    if not dv:
+        return rows.drop("_commit")
+    shadow = reduce(lambda a, b: a.unionByName(b), dv).groupBy("k").agg(
+        F.max(F.struct("v", "_commit")).alias("_max_dv")
+    )
+    return (
+        rows.join(shadow, "k", "left")
+        .filter(
+            F.col("_max_dv").isNull()
+            | (
+                F.col("_max_dv")
+                <= F.struct(
+                    F.col("version").cast("long").alias("v"),
+                    F.col("_commit"),
+                )
+            )
+        )
+        .drop("_max_dv", "_commit")
+    )
+
+
 def _feed_by_old_derivation(spark, table_dir, v):
     """Commit v's feed rows derived in Spark alone, the reference for
     the driver-resolved shadow: the change keys are the keys whose max
     version in v's sidecar exceeds their max over the prior sidecars
     and the floor (Spark aggregates over the manifest-listed files),
-    the pre-image is the full `mor_cdc_read(v-1)` semi-joined to them,
-    the post-image `mor_cdc_read(v)` semi-joined to them, and the two
-    are full-outer-joined."""
+    the pre-image is the Spark-derived v-1 read
+    (`_read_by_spark_derivation`) semi-joined to them, the post-image
+    the Spark-derived v read semi-joined to them, and the two are
+    full-outer-joined."""
     from functools import reduce
 
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         DV_SIDECAR_SCHEMA,
         main_log,
-        mor_cdc_read,
     )
 
-    m = main_log(table_dir).load(v)
+    log = main_log(table_dir)
+    m = log.load(v)
 
     def sidecar(path):
         return spark.read.schema(DV_SIDECAR_SCHEMA).json(path).select(
@@ -2154,8 +2223,10 @@ def _feed_by_old_derivation(spark, table_dir, v):
             F.col("cv").isNull() | (F.col("v") > F.col("cv"))
         )
     keys = keys.select("k")
-    pre = mor_cdc_read(spark, table_dir, v - 1).join(keys, "k", "left_semi")
-    post = mor_cdc_read(spark, table_dir, v).join(keys, "k", "left_semi")
+    pre = _read_by_spark_derivation(spark, log.load(v - 1)).join(
+        keys, "k", "left_semi"
+    )
+    post = _read_by_spark_derivation(spark, m).join(keys, "k", "left_semi")
     both = pre.select(
         "k", F.lit(1).alias("_pre"), F.col("cents").alias("pre_cents")
     ).join(
@@ -2191,7 +2262,10 @@ def test_feed_matches_full_read_derivation_across_commit_kinds(
     keeps the later), a compaction floor (its `_commit` as the shadow's
     commit), and all-stale commits (empty key tables).  The shadow's
     commit comes from the manifest's `dvs[].v`, so the directory name
-    plays no part."""
+    plays no part.  The same holds for the full read: `mor_cdc_read`
+    at every version, and `wap_read` of a staged branch head, equal the
+    Spark-only derivation that recovers each commit from its sidecar's
+    directory name (`_read_by_spark_derivation`)."""
     from nyc_data_pipeline_spark.streaming import mor_cdc
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         main_log,
@@ -2199,7 +2273,9 @@ def test_feed_matches_full_read_derivation_across_commit_kinds(
         mor_cdc_change_feed_span,
         mor_cdc_commit,
         mor_cdc_compact,
+        mor_cdc_read,
         wap_publish,
+        wap_read,
         wap_stage,
     )
 
@@ -2235,6 +2311,18 @@ def test_feed_matches_full_read_derivation_across_commit_kinds(
         "dv-v3-audit-"
     )
     assert log.load(8)["dv_floor"]
+
+    def rows_of(df):
+        return sorted(map(tuple, df.select("k", "cents", "version").collect()))
+
+    for v in range(1, 9):
+        want = rows_of(_read_by_spark_derivation(spark, log.load(v)))
+        assert rows_of(mor_cdc_read(spark, table_dir, v)) == want, v
+    wap_stage(spark, wave(5, 7, 14), table_dir, "head")  # branch v9
+    staged = mor_cdc._branch_log(table_dir, "head").load()
+    assert rows_of(wap_read(spark, table_dir, "head")) == rows_of(
+        _read_by_spark_derivation(spark, staged)
+    )
 
     ctx = mor_cdc._feed_dv_context(spark, table_dir, list(range(2, 9)))
     assert sorted(ctx) == [2, 3, 4, 5, 7, 8]  # v6 (compaction) is empty
@@ -2382,12 +2470,14 @@ def test_feed_rejects_sidecar_routing_one_key_to_two_buckets(
     feed prunes pre-images to the buckets a sidecar names.  A sidecar
     that routes one key to two buckets is a broken dependency: the
     feed raises the named `BucketDependencyError` (a ValueError)
-    instead of silently picking one bucket and dropping pre-images."""
+    instead of silently picking one bucket and dropping pre-images.
+    The read folds the same sidecars on the driver and raises it too."""
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         BucketDependencyError,
         main_log,
         mor_cdc_change_feed,
         mor_cdc_commit,
+        mor_cdc_read,
     )
 
     table_dir = _mk_cdc_table(spark, tmp_path, "cdc_zb_conflict")
@@ -2407,7 +2497,71 @@ def test_feed_rejects_sidecar_routing_one_key_to_two_buckets(
         f.write('{"zb":5,"k":50,"v":1}\n')
     with pytest.raises(BucketDependencyError, match="key 50"):
         mor_cdc_change_feed(spark, table_dir, 2)
+    with pytest.raises(BucketDependencyError, match="key 50"):
+        mor_cdc_read(spark, table_dir, 2)
     assert issubclass(BucketDependencyError, ValueError)
+
+
+def test_compaction_floor_written_on_driver_reads_like_spark_floor(
+    spark, tmp_path
+):
+    """Compaction folds the shadow ceiling once on the driver: it feeds
+    the live read and the floor, which pyarrow writes, so the rewrite
+    is the compaction's only Spark work.  Compacting this table's head
+    (two sidecars over an earlier floor) launched 6 jobs when the floor
+    was a Spark sidecar scan, aggregate and write (4 cores, 4 shuffle
+    partitions); it must launch fewer.  The floor keeps its on-disk schema, and a floor written by
+    that Spark writer (reproduced here) reads and feeds exactly the
+    same at every version, and a later compaction carries it."""
+    import shutil
+    import uuid
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nyc_data_pipeline_spark.streaming.mor_cdc import (
+        DV_SIDECAR_SCHEMA,
+        main_log,
+        mor_cdc_compact,
+        mor_cdc_read,
+    )
+
+    def floor_schema(v):
+        t = pq.read_table(log.load(v)["dv_floor"])
+        return [(f.name, f.type) for f in t.schema]
+
+    table_dir = _mk_floor_table(spark, tmp_path, "cdc_floor_writer")
+    log = main_log(table_dir)
+    assert floor_schema(4) == [
+        (c, pa.int64()) for c in ("k", "v", "_commit")
+    ]
+    before = _table_snapshot(spark, table_dir, range(1, 7))
+    # the v4 floor as the Spark writer made it: max(v) per key over the
+    # v2/v3 sidecars, the compaction's commit as `_commit`
+    floor = log.load(4)["dv_floor"]
+    shutil.rmtree(floor)
+    (
+        spark.read.schema(DV_SIDECAR_SCHEMA)
+        .json([d["path"] for d in log.load(3)["dvs"]])
+        .groupBy("k")
+        .agg(F.max("v").alias("v"))
+        .withColumn("_commit", F.lit(4).cast("long"))
+        .write.parquet(floor)
+    )
+    assert _table_snapshot(spark, table_dir, range(1, 7)) == before
+    sc = spark.sparkContext
+    group = f"mor-compact-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "MOR compaction probe")
+    try:
+        mor_cdc_compact(spark, table_dir, 6)  # v7 carries the floor
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert 0 < n_jobs < 6, n_jobs
+    assert floor_schema(7) == floor_schema(4)
+    assert before[6][1] == sorted(
+        map(tuple, mor_cdc_read(spark, table_dir, 7).collect())
+    )
 
 
 def test_mor_cdc_concurrent_writers_serialize_or_raise(spark, tmp_path):
