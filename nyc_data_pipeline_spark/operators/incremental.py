@@ -1125,12 +1125,23 @@ def view_vacuum(view_dir: str, retain: int = 1) -> dict:
     file ops, O(#refreshes); the materialized pairs are never read.
     Reads of reclaimed refreshes afterwards raise the named
     `ViewRetentionError` (see load_view_manifest); the LATEST refresh
-    — cursors included — is untouched, so catch-up keeps working."""
+    — cursors included — is untouched, so catch-up keeps working.
+
+    A directory `v{N}` newer than the head is never collected (the
+    mor_cdc_vacuum rule): a refresh writes `v{head+1}/` before it
+    publishes the manifest naming it, and sweeping it in that window
+    would publish a refresh whose artifacts are gone."""
     import os as _os
+    import re as _re
     import shutil as _shutil
 
+    if retain < 1:
+        # retain=0 would reclaim the head refresh itself
+        raise ValueError(f"retain must be >= 1, got {retain}")
     log = view_log(view_dir)
-    keep = log.versions()[-retain:]
+    versions = log.versions()
+    keep = versions[-retain:]
+    head = versions[-1] if versions else 0
     reachable: set[str] = set()
     for v in keep:
         m = log.load(v)
@@ -1140,7 +1151,8 @@ def view_vacuum(view_dir: str, retain: int = 1) -> dict:
     for d in _os.listdir(view_dir):
         full = _os.path.abspath(_os.path.join(view_dir, d))
         if (
-            d.startswith("v")
+            (vm := _re.fullmatch(r"v(\d+)", d))
+            and int(vm.group(1)) <= head
             and _os.path.isdir(full)
             and full not in reachable
         ):

@@ -72,28 +72,6 @@ def scratch_dir(kind: str, sf_dir: str) -> str:
     )
 
 
-def field_id_hwm(manifest: dict) -> int:
-    """Highest field id a manifest chain has EVER issued — Iceberg's
-    `last-column-id` rule (iceberg spec §Schemas), shared by both
-    evolution lanes (sources/zonemap.py COW, streaming/mor_cdc.py MOR).
-
-    New-field allocation MUST come from this high-water mark, never
-    from max(live schema ids)+1: after dropping the highest-id field a
-    re-add that reused its id would be resolved BY ID onto the dropped
-    column's stored values in every pre-drop file — silent
-    resurrection of dropped data (VERDICT r14's confirmed bug).
-
-    Reads the persisted `last_field_id` when the chain carries one;
-    manifests written before the mark existed derive it from every id
-    on record — the live schema plus the full `commit_cols` history
-    (each version's id->name map still lists dropped ids)."""
-    ids = [int(f["id"]) for f in manifest.get("schema") or []]
-    for cols in (manifest.get("commit_cols") or {}).values():
-        ids.extend(int(i) for i in cols)
-    ids.append(int(manifest.get("last_field_id") or 0))
-    return max(ids, default=0)
-
-
 DOCUMENTS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

@@ -47,6 +47,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import field_ids
 from ..catalog import load_table
 from ..manifest_log import (
     CommitConflictError,
@@ -56,7 +57,7 @@ from ..manifest_log import (
 )
 from ..plans.two_phase import bucket_expr, range_buckets
 from ..registry import register
-from .scans import field_id_hwm, scratch_dir
+from .scans import scratch_dir
 
 
 def cow_log(table_dir: str) -> ManifestLog:
@@ -571,13 +572,11 @@ def _zm_versioned_write(
     manifest lists files that exist, so `files_total` is the real file
     count and readers never chase a dangling path.
 
-    FIELD IDS (VERDICT r13 ask #3 — the COW lane joins the MOR
-    chain's evolution story): a fresh chain stamps `schema` (stable
-    ids at birth, mor_cdc_init's rule) and a per-commit name map
-    (`commit_cols`), so `cow_rename_column` / `cow_widen_column` are
-    metadata-only and reads resolve every version directory's files by
-    id.  A chain whose v1 predates ids stays legacy (by-name) until
-    `cow_compact` re-manifests it.  When `cluster_col` is given, the
+    FIELD IDS: a fresh chain is born with ids and every commit is
+    stamped (see field_ids), so evolution is metadata-only and reads
+    resolve every version directory's files by id.  A chain whose v1
+    predates ids stays legacy (by-name) until `cow_compact`
+    re-manifests it.  When `cluster_col` is given, the
     commit also records per-FILE min/max stats of the cluster column
     (`file_stats`, path-keyed) plus the column's field id
     (`cluster_field`) — zone-map file skipping that survives renaming
@@ -608,10 +607,7 @@ def _zm_versioned_write(
     }
     dtypes = {c: t for c, t in b.dtypes if c != "zb"}
     if prev is None:
-        schema = [
-            {"id": i + 1, "name": c, "type": t}
-            for i, (c, t) in enumerate(dtypes.items())
-        ]
+        schema = field_ids.fresh_fields(dtypes.items())
     else:
         schema = prev.get("schema")  # None = legacy chain, stays so
         if schema is not None:
@@ -628,19 +624,7 @@ def _zm_versioned_write(
                     "via cow_add_column)"
                 )
     if schema is not None:
-
-        manifest["schema"] = schema
-        # id high-water mark: stamped at birth, carried (never
-        # lowered) on every later commit — see field_id_hwm
-        manifest["last_field_id"] = (
-            max((f["id"] for f in schema), default=0)
-            if prev is None
-            else field_id_hwm(prev)
-        )
-        manifest["commit_cols"] = {
-            **(prev or {}).get("commit_cols", {}),
-            str(version): {str(f["id"]): f["name"] for f in schema},
-        }
+        field_ids.stamp(manifest, prev, schema, version)
         if cluster_col is not None and prev is None:
             manifest["cluster_field"] = next(
                 f["id"] for f in schema if f["name"] == cluster_col
@@ -730,43 +714,25 @@ def _grouped_manifest_scan(
         for p in path if isinstance(path, list) else [path]:
             by_vdir.setdefault(os.path.dirname(p), []).append(p)
     schema = (manifest or {}).get("schema")
-    commit_cols = (manifest or {}).get("commit_cols", {})
     out = None
     for vdir, paths in sorted(by_vdir.items()):
         piece = spark.read.option("basePath", vdir).parquet(*sorted(paths))
         if schema is not None:
-            # FIELD-ID resolution (the mor_cdc_read rule on the COW
-            # lane): files are read under the name each field had
-            # when their version directory was written (commit_cols,
-            # keyed by the v{N} dir name), then aliased/cast to the
-            # schema's CURRENT name/type — renames and widens are
-            # metadata-only here too
-            # version dirs are v{N} or the writer-unique v{N}-{token}
-            # a CAS'd compaction stages under — both parse to N
+            # field-id resolution (see field_ids) under the commit of
+            # the version directory: v{N}, or the writer-unique
+            # v{N}-{token} a CAS'd compaction stages under
             import re as _re
 
             mm = _re.fullmatch(
                 r"v(\d+)(?:-[0-9a-f]+)?", os.path.basename(vdir)
             )
-            stored = commit_cols.get(mm.group(1)) if mm else None
-            cols = []
-            for fld in schema:
-                sn = (
-                    stored.get(str(fld["id"]))
-                    if stored is not None
-                    else fld["name"]
-                )
-                if sn is not None and sn in piece.columns:
-                    cols.append(
-                        F.col(sn).cast(fld["type"]).alias(fld["name"])
-                    )
-                else:
-                    cols.append(
-                        F.lit(fld.get("default"))
-                        .cast(fld["type"])
-                        .alias(fld["name"])
-                    )
-            piece = piece.select(*cols, F.col("zb"))
+            stored = (
+                field_ids.commit_names(manifest, mm.group(1)) if mm else None
+            )
+            piece = piece.select(
+                *field_ids.project(schema, stored, piece.columns),
+                F.col("zb"),
+            )
         out = piece if out is None else out.unionByName(piece)
     return out.withColumn("zb", F.col("zb").cast("int"))
 
@@ -1039,26 +1005,12 @@ def change_feed_from(
         drop-by-omission — the span projection rule."""
         if df is None or schema_to is None:
             return df
-        names_from = {
-            f["id"]: f["name"] for f in m1.get("schema", [])
-        }
-        return df.select(
-            *[
-                (
-                    F.col(sn).cast(f["type"])
-                    if (
-                        sn := (
-                            names_from.get(f["id"], f["name"])
-                            if m1.get("schema") is not None
-                            else f["name"]
-                        )
-                    )
-                    in df.columns
-                    else F.lit(f.get("default")).cast(f["type"])
-                ).alias(f["name"])
-                for f in schema_to
-            ]
+        stored = (
+            field_ids.id_names(m1["schema"])
+            if m1.get("schema") is not None
+            else None
         )
+        return df.select(*field_ids.project(schema_to, stored, df.columns))
 
     a, c = to_current(side(m1)), side(m2)
     if a is None and c is None:
@@ -1236,17 +1188,8 @@ def _zm_append(
         ),
     }
     if prev.get("schema") is not None:
-
-        # appends write the full current schema: carry ids, stamp
-        # this commit's name map (the _zm_versioned_write rule)
-        manifest["schema"] = prev["schema"]
-        manifest["last_field_id"] = field_id_hwm(prev)
-        manifest["commit_cols"] = {
-            **prev.get("commit_cols", {}),
-            str(version): {
-                str(f["id"]): f["name"] for f in prev["schema"]
-            },
-        }
+        # appends write the full current schema
+        field_ids.stamp(manifest, prev, prev["schema"], version)
         if prev.get("cluster_field") is not None:
             manifest["cluster_field"] = prev["cluster_field"]
     if prev.get("file_stats") is not None:
@@ -2099,115 +2042,43 @@ def ivm_change_feed_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --- Field-id schema evolution on the COW lane (VERDICT r13 ask #3) ---------
+# --- Field-id schema evolution on the COW lane ------------------------------
 #
-# The MOR chain (streaming/mor_cdc.py) evolves by stable field ids;
-# until r14 this lane's manifests matched columns BY NAME, so a rename
-# would have needed file rewrites.  The same rule now applies here:
-# `_zm_versioned_write` stamps ids at chain birth, the ops below
-# publish metadata-only evolution commits (files/bounds/stats carried
-# byte-identical — at 100 TB a rename is one JSON write), and
-# `_grouped_manifest_scan` resolves every version directory's files by
-# id.  Per-file zone-map stats key on the cluster column's FIELD ID
-# (`cluster_field`), so file skipping survives renaming the cluster
-# column itself.  Legacy chains (pre-id manifests) adopt ids through
-# `cow_compact` — a re-manifesting compaction, the mor_cdc_compact
-# precedent — which also pays down per-bucket file-list growth from
-# appends.
+# The rule and the four ops live in field_ids; this lane supplies its
+# head, its log and its protected column.  Per-file zone-map stats key
+# on the cluster column's FIELD ID (`cluster_field`), so file skipping
+# survives renaming it; legacy chains adopt ids through `cow_compact`.
 
-_COW_WIDENINGS = {("int", "bigint"), ("float", "double")}
-
-
-def _cow_evolve(table_dir: str, mutate, evolution: dict) -> dict:
-    """Shared metadata-commit shell for the COW lane (the
-    `_evolve_schema_commit` twin): load the head manifest, let
-    `mutate(schema, manifest)` edit the schema in place, publish the
-    next version with files/bounds/file_stats carried untouched.
-    The publish is the log's CAS (VERDICT r13 ask #6): a concurrent
-    evolution/compaction targeting the same next version loses with
-    the named `CommitConflictError`, never a silent clobber."""
-    log = cow_log(table_dir)
-    version = log.head()
-    m = log.load(version)
-    if m.get("schema") is None:
-        raise ValueError(
-            f"{table_dir} predates field-id schemas; rename/widen "
-            "need a compaction rewrite to adopt them (cow_compact "
-            "re-manifests under the current schema)"
-        )
-    schema = [dict(f) for f in m["schema"]]
-    mutate(schema, m)
-    from .timetravel import commit_wallclock_us
-
-    vnew = version + 1
-    manifest = {
-        **m,
-        "version": vnew,
-        "schema": schema,
-        "evolution": evolution,
-        "commit_cols": {
-            **m.get("commit_cols", {}),
-            str(vnew): {str(f["id"]): f["name"] for f in schema},
-        },
-        "committed_at_us": commit_wallclock_us(
-            m.get("committed_at_us")
-        ),
-    }
-    manifest.pop("appended_buckets", None)
-    manifest.pop("compacted_from", None)
-    # the id high-water mark ratchets (the _evolve_schema_commit
-    # rule): an add's fresh id raises it, a drop never lowers it
-
-    manifest["last_field_id"] = max(
-        field_id_hwm(m),
-        max((int(f["id"]) for f in schema), default=0),
-    )
-
-    log.publish_once(vnew, manifest)
-    return manifest
+_LANE = field_ids.Lane(
+    log=cow_log,
+    head=lambda table_dir: cow_log(table_dir).head(),
+    compactor="cow_compact",
+    pinned=lambda m: {_cluster_col_now(m): "cluster column"},
+)
 
 
 def cow_rename_column(table_dir: str, old: str, new: str) -> dict:
-    """Metadata-only rename on the COW chain: the field keeps its id,
-    every already-written file keeps its stored name, reads alias by
-    id.  Renaming the CLUSTER column is fine — stats and append
-    routing resolve it through `cluster_field`."""
-
-    def mutate(schema: list, m: dict) -> None:
-        names = {f["name"] for f in schema}
-        if new in names:
-            raise ValueError(f"column {new!r} already exists")
-        for f in schema:
-            if f["name"] == old:
-                f["name"] = new
-                return
-        raise ValueError(f"no column {old!r} in {table_dir}")
-
-    return _cow_evolve(
-        table_dir, mutate, {"op": "rename", "from": old, "to": new}
-    )
+    """`field_ids.rename_column` on the COW chain; renaming the cluster
+    column is fine (stats and append routing resolve it by id)."""
+    return field_ids.rename_column(_LANE, table_dir, old, new)
 
 
 def cow_widen_column(table_dir: str, name: str, to_type: str) -> dict:
-    """Metadata-only type widen (int->bigint, float->double): files
-    keep their narrow values; reads cast to the schema's current
-    type."""
+    """`field_ids.widen_column` on the COW chain."""
+    return field_ids.widen_column(_LANE, table_dir, name, to_type)
 
-    def mutate(schema: list, m: dict) -> None:
-        for f in schema:
-            if f["name"] == name:
-                if (f["type"], to_type) not in _COW_WIDENINGS:
-                    raise ValueError(
-                        f"cannot widen {name!r} {f['type']} -> "
-                        f"{to_type}; allowed: {sorted(_COW_WIDENINGS)}"
-                    )
-                f["type"] = to_type
-                return
-        raise ValueError(f"no column {name!r} in {table_dir}")
 
-    return _cow_evolve(
-        table_dir, mutate, {"op": "widen", "col": name, "to": to_type}
-    )
+def cow_add_column(
+    table_dir: str, name: str, col_type: str, default=None,
+) -> dict:
+    """`field_ids.add_column` on the COW chain."""
+    return field_ids.add_column(_LANE, table_dir, name, col_type, default)
+
+
+def cow_drop_column(table_dir: str, name: str) -> dict:
+    """`field_ids.drop_column` on the COW chain; the cluster column
+    cannot be dropped."""
+    return field_ids.drop_column(_LANE, table_dir, name)
 
 
 def cow_compact(
@@ -2261,30 +2132,17 @@ def cow_compact(
     if m.get("schema") is not None:
         schema = m["schema"]
         manifest["cluster_field"] = m.get("cluster_field")
-        # pin the id high-water mark: this commit resets commit_cols
-        # (the derive-from-history fallback), so without the persisted
-        # mark a post-compaction drop/re-add could re-issue a
-        # pre-compaction dropped id (the mor_cdc_compact rule)
-        manifest["last_field_id"] = field_id_hwm(m)
     else:
         # LEGACY FIELD-ID ADOPTION: fresh ids from the rewritten
         # frame's materialized names/types
         dtypes = {c: t for c, t in live.dtypes if c != "zb"}
-        schema = [
-            {"id": i + 1, "name": c, "type": t}
-            for i, (c, t) in enumerate(dtypes.items())
-        ]
+        schema = field_ids.fresh_fields(dtypes.items())
         if cluster_col in dtypes:
             manifest["cluster_field"] = next(
                 f["id"] for f in schema if f["name"] == cluster_col
             )
-        manifest["last_field_id"] = max(
-            (f["id"] for f in schema), default=0
-        )
-    manifest["schema"] = schema
-    manifest["commit_cols"] = {
-        str(vnew): {str(f["id"]): f["name"] for f in schema}
-    }
+    # one commit now holds every row (the mor_cdc_compact reset)
+    field_ids.stamp(manifest, m, schema, vnew, reset=True)
     cf = _cluster_col_now(manifest) or (
         cluster_col if cluster_col in dict(live.dtypes) else None
     )
@@ -2550,57 +2408,3 @@ def src_cow_readd(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-
-def cow_add_column(
-    table_dir: str, name: str, col_type: str, default=None,
-) -> dict:
-    """Add a column metadata-only (the mor_cdc_add_column twin): a
-    fresh field id with an optional `default`; rows written before
-    the add read the default (a projection-time literal — no file
-    carries it)."""
-
-    def mutate(schema: list, m: dict) -> None:
-
-        if any(f["name"] == name for f in schema):
-            raise ValueError(f"cannot add {name!r}: name in use")
-        fld = {
-            # allocate past every id EVER issued, not max(live)+1 —
-            # re-adding after dropping the max-id field must mint a
-            # fresh id or _grouped_manifest_scan resolves the new
-            # field onto the dropped column's data in pre-drop files
-            "id": field_id_hwm(m) + 1,
-            "name": name,
-            "type": col_type,
-        }
-        if default is not None:
-            fld["default"] = default
-        schema.append(fld)
-
-    return _cow_evolve(
-        table_dir, mutate,
-        {"op": "add", "column": name, "type": col_type,
-         "default": default},
-    )
-
-
-def cow_drop_column(table_dir: str, name: str) -> dict:
-    """Drop a column metadata-only: the id leaves the schema, files
-    stay, time travel to pre-drop versions still reads it, a later
-    re-add of the NAME is a fresh id (the Iceberg drop/re-add rule).
-    The cluster column cannot be dropped — stats and append routing
-    resolve through its field id."""
-
-    def mutate(schema: list, m: dict) -> None:
-        for f in schema:
-            if f["name"] == name:
-                if m.get("cluster_field") == f["id"]:
-                    raise ValueError(
-                        f"cannot drop the cluster column {name!r}"
-                    )
-                schema.remove(f)
-                return
-        raise ValueError(f"no column {name!r} in {table_dir}")
-
-    return _cow_evolve(
-        table_dir, mutate, {"op": "drop", "column": name}
-    )

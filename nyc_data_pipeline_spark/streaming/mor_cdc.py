@@ -110,6 +110,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import field_ids
 from ..catalog import load_table
 from ..manifest_log import (
     CommitConflictError,
@@ -119,7 +120,7 @@ from ..manifest_log import (
 )
 from ..plans.two_phase import bucket_expr, range_buckets
 from ..registry import register
-from ..sources.scans import field_id_hwm, scratch_dir
+from ..sources.scans import scratch_dir
 
 MOR_CDC_FILES = 8  # bucket fan-out of the fixture table
 
@@ -282,18 +283,9 @@ def mor_cdc_init(
     }
     from ..sources.timetravel import commit_wallclock_us
 
-    # Stable FIELD IDS (Iceberg's rule, VERDICT r12 ask #4): every
-    # column gets an id at birth; reads resolve columns BY ID through
-    # the per-commit name map (`commit_cols`), so a rename is
-    # metadata-only (files keep their written names forever), a drop
-    # stops projecting without rewrites, and int->long / float->double
-    # widen on read via the schema's current type.
+    # stable field ids from birth (see field_ids)
     dtypes = dict(b.dtypes)
     cols = [c for c in b.columns if c != "zb"]
-    schema = [
-        {"id": i + 1, "name": c, "type": dtypes[c]}
-        for i, c in enumerate(cols)
-    ]
     manifest = {
         "key": key,
         "bounds": [int(lo), int(hi)],
@@ -302,12 +294,13 @@ def mor_cdc_init(
         "files": files,
         "dvs": [],
         "columns": cols,
-        "schema": schema,
-        "last_field_id": max((f["id"] for f in schema), default=0),
-        "commit_cols": {"1": {str(f["id"]): f["name"] for f in schema}},
         "file_schemas": {"1": _file_schema(b)},
         "committed_at_us": commit_wallclock_us(None),
     }
+    field_ids.stamp(
+        manifest, None,
+        field_ids.fresh_fields((c, dtypes[c]) for c in cols), 1,
+    )
     main_log(table_dir).publish(1, manifest)
     return manifest
 
@@ -417,7 +410,8 @@ def mor_cdc_commit(
             {"path": os.path.join(vdir, f"zb={z}"), "v": version, **st}
         )
     # the written file schema, recorded once per commit that wrote
-    # files (carried like commit_cols; a delete-only commit adds none)
+    # files (carried like the id->name maps; a delete-only commit adds
+    # none)
     file_schemas = dict(prev.get("file_schemas", {}))
     if stats:
         file_schemas[str(version)] = _file_schema(upserts)
@@ -461,26 +455,10 @@ def mor_cdc_commit(
             # values into a new field while the renamed field reads
             # NULL for its rows — fail loudly instead.  (A DROPPED
             # field's old name is legitimately reusable: re-add gets
-            # a fresh id.)  Only each live field's MOST RECENT
-            # pre-rename name is guarded (ADVICE r13): scanning every
-            # historical name map would block a name forever once ANY
-            # live field ever carried it — after a->b->c, a fresh add
-            # of 'a' is legitimate (the name freed two renames ago),
-            # while 'b' is still the signature of a producer exactly
-            # one schema behind.
+            # a fresh id, and only the most recent pre-rename name is
+            # guarded — see field_ids.pre_rename_names.)
             live = {f["id"]: f["name"] for f in schema}
-            guarded: dict[int, str] = {}
-            for v in sorted(
-                prev.get("commit_cols", {}), key=int, reverse=True
-            ):
-                for fid, name in prev["commit_cols"][v].items():
-                    ifid = int(fid)
-                    if (
-                        ifid in live
-                        and ifid not in guarded
-                        and name != live[ifid]
-                    ):
-                        guarded[ifid] = name
+            guarded = field_ids.pre_rename_names(prev)
             for c in added:
                 for fid, old_name in guarded.items():
                     if old_name == c:
@@ -491,22 +469,11 @@ def mor_cdc_commit(
                             "writing a stale schema — update it or "
                             "rename the field back"
                         )
-        # fresh ids come from the persisted high-water mark, NOT
-        # max(live ids)+1 — a dropped max-id field's id must never be
-        # re-issued (field_id_hwm's docstring has the failure mode)
-
-        next_id = field_id_hwm(prev) + 1
-        for c in added:
-            schema.append(
-                {"id": next_id, "name": c, "type": dtypes.get(c, "string")}
-            )
-            next_id += 1
-        manifest["last_field_id"] = next_id - 1
-        manifest["schema"] = schema
-        manifest["commit_cols"] = {
-            **prev.get("commit_cols", {}),
-            str(version): {str(f["id"]): f["name"] for f in schema},
-        }
+        schema += field_ids.fresh_fields(
+            ((c, dtypes.get(c, "string")) for c in added),
+            field_ids.field_id_hwm(prev),
+        )
+        field_ids.stamp(manifest, prev, schema, version)
     if added and prev_cols:
         manifest["columns_added"] = added
     if branch is not None:
@@ -647,66 +614,26 @@ def _read_manifest(
         empty, names = _commit_scan(spark, m, best["v"], [best["path"]])
         empty = empty.limit(0).drop("zb")
         if m.get("schema") is not None:
-            # project the typed empty frame under the CURRENT schema
-            # (id-resolved names/types), same rule as the scan path
-            stored = m.get("commit_cols", {}).get(str(int(best["v"])))
-            empty = empty.select(
-                *[
-                    (
-                        F.col(sn).cast(f["type"])
-                        if (
-                            sn := (
-                                stored.get(str(f["id"]))
-                                if stored is not None
-                                else f["name"]
-                            )
-                        )
-                        is not None
-                        and sn in names
-                        else F.lit(f.get("default")).cast(f["type"])
-                    ).alias(f["name"])
-                    for f in m["schema"]
-                ]
-            )
+            # the typed empty frame under the CURRENT schema, same
+            # rule as the scan path
+            empty = empty.select(*field_ids.project(
+                m["schema"], field_ids.commit_names(m, best["v"]), names
+            ))
         return empty
     schema = m.get("schema")
-    commit_cols = m.get("commit_cols", {})
     rows = None
     for v, paths in sorted(by_commit.items()):
         piece, names = _commit_scan(spark, m, v, paths)
         piece = piece.withColumn("_commit", F.lit(int(v)))
         if schema is not None:
-            # FIELD-ID resolution (VERDICT r12 ask #4): each commit's
-            # files are read under the NAME each field had when that
-            # commit wrote them (`commit_cols`), then aliased to the
-            # schema's CURRENT name and cast to its CURRENT type — a
-            # rename is pure metadata, a dropped field just stops
-            # being projected, and int->long / float->double widening
-            # happens here on read.  Fields younger than the commit
-            # (or written under a name the commit never had) surface
-            # as typed NULLs — the add-column rule, now id-keyed.
-            stored = commit_cols.get(str(int(v)))
-            sel = [F.col("zb"), F.col("_commit")]
-            for fld in schema:
-                sn = (
-                    stored.get(str(fld["id"]))
-                    if stored is not None
-                    else fld["name"]
-                )
-                if sn is not None and sn in names:
-                    sel.append(
-                        F.col(sn).cast(fld["type"]).alias(fld["name"])
-                    )
-                else:
-                    # field younger than the commit: the schema's
-                    # default (mor_cdc_add_column, Iceberg-v3 rule)
-                    # or the NULL backfill
-                    sel.append(
-                        F.lit(fld.get("default"))
-                        .cast(fld["type"])
-                        .alias(fld["name"])
-                    )
-            piece = piece.select(*sel)
+            # each commit's files under current names/types, resolved
+            # by field id (see field_ids)
+            piece = piece.select(
+                F.col("zb"), F.col("_commit"),
+                *field_ids.project(
+                    schema, field_ids.commit_names(m, v), names
+                ),
+            )
         # allowMissingColumns: a schema-evolution commit (column added
         # mid-stream) widens later files; rows from pre-evolution
         # commits read the added column as NULL — Iceberg/Delta
@@ -744,196 +671,42 @@ def _read_manifest(
     )
 
 
-# ---------------------------------------------------------------------------
-# Metadata-only schema evolution (VERDICT r12 ask #4).  The manifest's
-# `schema` carries stable field ids; each of these ops publishes a new
-# manifest version that changes ONLY the schema — zero data files are
-# read, moved, or rewritten, so at 100 TB a rename/drop/widen is one
-# JSON write.  Reads resolve every commit's files by id through
-# `commit_cols` (see _read_manifest), change feeds of these commits are
-# empty by definition (no row changed), and time travel BEFORE the
-# evolution sees the old names/types exactly as they were.
-# ---------------------------------------------------------------------------
-
-_WIDENINGS = {("int", "bigint"), ("float", "double")}
-_RESERVED_FIELDS = {"version"}  # the CDC change-version carrier
-
-
-def _evolve_schema_commit(
-    table_dir: str, mutate, evolution: dict
-) -> dict:
-    """Shared metadata-commit shell: load the head manifest, let
-    `mutate(schema, manifest)` edit the schema list in place, publish
-    the next version with files/dvs carried over untouched.
-
-    Concurrency (VERDICT r13 ask #6 — the single-operator contract is
-    now MECHANIZED, not a docstring): the publish routes through the
-    same `ManifestLog.publish_once` CAS as exclusive data commits, so a
-    concurrent evolution, compaction, or exclusive writer targeting the
-    same next version loses with the named `CommitConflictError` instead
-    of silently clobbering. An evolution is ONE atomic JSON publish (no
-    data files), so there is no crash window between doing and
-    publishing; a rerun after success targets the NEW head and fails
-    loudly in the mutator (e.g. "no column <old>") rather than
-    double-applying."""
-    version = _latest_main_version(table_dir)
-    m = main_log(table_dir).load(version)
-    if m.get("schema") is None:
-        raise ValueError(
-            f"{table_dir} predates field-id schemas; rename/drop/widen "
-            "need a compaction rewrite to adopt them (mor_cdc_compact "
-            "re-manifests under the current schema)"
-        )
-    schema = [dict(f) for f in m["schema"]]
-    mutate(schema, m)
-    from ..sources.timetravel import commit_wallclock_us
-
-    vnew = version + 1
-    manifest = {
-        **m,
-        "version": vnew,
-        "schema": schema,
-        "columns": [f["name"] for f in schema],
-        "evolution": evolution,
-        "committed_at_us": commit_wallclock_us(
-            m.get("committed_at_us")
-        ),
-    }
-    manifest.pop("columns_added", None)
-    manifest.pop("compacted_from", None)
-    # the id high-water mark ratchets: an add's fresh id (now the max
-    # of the post-mutate schema) raises it, a drop never lowers it —
-    # that is exactly what makes a later re-add allocate a FRESH id
-
-    manifest["last_field_id"] = max(
-        field_id_hwm(m),
-        max((int(f["id"]) for f in schema), default=0),
-    )
-    # commits after this one write under the NEW names/types
-    manifest["commit_cols"] = {
-        **m.get("commit_cols", {}),
-        str(vnew): {str(f["id"]): f["name"] for f in schema},
-    }
-
-    main_log(table_dir).publish_once(vnew, manifest)
-    return manifest
-
-
-def _field_by_name(schema: list[dict], name: str) -> dict:
-    for f in schema:
-        if f["name"] == name:
-            return f
-    raise ValueError(
-        f"no column {name!r} in current schema "
-        f"{[f['name'] for f in schema]}"
-    )
+# Metadata-only schema evolution: the field-id rule and the four ops
+# live in field_ids; this lane supplies its head, its log and its
+# protected columns.
+_LANE = field_ids.Lane(
+    log=main_log,
+    head=lambda table_dir: _latest_main_version(table_dir),
+    compactor="mor_cdc_compact",
+    pinned=lambda m: {m["key"]: "clustering key"},
+    reserved={"version": "the CDC change-version carrier"},
+)
 
 
 def mor_cdc_add_column(
     table_dir: str, name: str, col_type: str, default=None,
 ) -> dict:
-    """Add a column as a METADATA-ONLY commit (the Iceberg-v3
-    default-value rule): the new field gets a fresh id and an optional
-    `default`, and every row written BEFORE the add reads back the
-    default (a literal injected at projection time — no file carries
-    it) while rows written after carry their own values.  With no
-    default this is the NULL-backfill add the commit path already
-    supports, made explicit and schema-first instead of inferred from
-    a batch."""
-
-    def mutate(schema: list[dict], m: dict) -> None:
-
-        if any(f["name"] == name for f in schema):
-            raise ValueError(f"cannot add {name!r}: name in use")
-        fld = {
-            # allocate past every id EVER issued (the chain's
-            # high-water mark), not max(live)+1 — re-adding after
-            # dropping the max-id field must mint a fresh id or
-            # id-resolved reads resurrect the dropped column's data
-            "id": field_id_hwm(m) + 1,
-            "name": name,
-            "type": col_type,
-        }
-        if default is not None:
-            fld["default"] = default
-        schema.append(fld)
-
-    return _evolve_schema_commit(
-        table_dir, mutate,
-        {"op": "add", "column": name, "type": col_type,
-         "default": default},
-    )
+    """`field_ids.add_column` on the MOR chain."""
+    return field_ids.add_column(_LANE, table_dir, name, col_type, default)
 
 
 def mor_cdc_rename_column(table_dir: str, old: str, new: str) -> dict:
-    """Rename a column: the field keeps its id, every file keeps its
-    written name, reads alias id->new name.  Renaming the clustering
-    key also moves `manifest['key']` (routing bounds and per-file
-    key stats are name-free, so skipping survives the rename)."""
-
-    def mutate(schema: list[dict], m: dict) -> None:
-        if old in _RESERVED_FIELDS or new in _RESERVED_FIELDS:
-            raise ValueError(
-                f"'version' is the CDC change-version carrier and "
-                f"cannot be renamed (got {old!r} -> {new!r})"
-            )
-        if any(f["name"] == new for f in schema):
-            raise ValueError(
-                f"cannot rename {old!r} -> {new!r}: name in use"
-            )
-        _field_by_name(schema, old)["name"] = new
-        if m["key"] == old:
-            m["key"] = new
-
-    return _evolve_schema_commit(
-        table_dir, mutate, {"op": "rename", "from": old, "to": new}
-    )
+    """`field_ids.rename_column` on the MOR chain; renaming the
+    clustering key moves `manifest['key']` (routing bounds and per-file
+    key stats are name-free, so skipping survives)."""
+    return field_ids.rename_column(_LANE, table_dir, old, new)
 
 
 def mor_cdc_drop_column(table_dir: str, name: str) -> dict:
-    """Drop a column: its field id leaves the schema, so no commit's
-    copy of it is ever projected again — the files are untouched and
-    time travel to pre-drop versions still reads it.  A later re-add
-    of the same NAME is a fresh id and never resurrects old values
-    (the Iceberg drop/re-add rule)."""
-
-    def mutate(schema: list[dict], m: dict) -> None:
-        if name in _RESERVED_FIELDS:
-            raise ValueError("'version' cannot be dropped")
-        if m["key"] == name:
-            raise ValueError(
-                f"cannot drop the clustering key {name!r}"
-            )
-        schema.remove(_field_by_name(schema, name))
-
-    return _evolve_schema_commit(
-        table_dir, mutate, {"op": "drop", "column": name}
-    )
+    """`field_ids.drop_column` on the MOR chain."""
+    return field_ids.drop_column(_LANE, table_dir, name)
 
 
 def mor_cdc_widen_column(
     table_dir: str, name: str, new_type: str
 ) -> dict:
-    """Widen a column's type (int->bigint/long, float->double): reads
-    cast every commit's copy up to the new type; no file is
-    rewritten.  Narrowing or cross-family changes are rejected — they
-    would need a rewrite to be loss-free."""
-
-    def mutate(schema: list[dict], m: dict) -> None:
-        f = _field_by_name(schema, name)
-        canon = {"long": "bigint"}
-        cur = canon.get(f["type"], f["type"])
-        tgt = canon.get(new_type, new_type)
-        if (cur, tgt) not in _WIDENINGS:
-            raise ValueError(
-                f"cannot widen {name!r} {f['type']} -> {new_type}: only "
-                f"int->bigint and float->double are loss-free on read"
-            )
-        f["type"] = new_type
-
-    return _evolve_schema_commit(
-        table_dir, mutate, {"op": "widen", "column": name, "to": new_type}
-    )
+    """`field_ids.widen_column` on the MOR chain."""
+    return field_ids.widen_column(_LANE, table_dir, name, new_type)
 
 
 class MorCdcSink:
@@ -1741,7 +1514,7 @@ def mor_cdc_compact(
         "dv_floor": floor_path,
         "columns": m.get("columns", []),
         # the rewrite is one commit: schemas of older commits go with
-        # their files (the commit_cols reset below)
+        # their files (the id->name map reset below)
         "file_schemas": {str(vnew): _file_schema(routed)},
         "compacted_from": version,
         "committed_at_us": commit_wallclock_us(
@@ -1749,43 +1522,18 @@ def mor_cdc_compact(
         ),
     }
 
-    if m.get("schema") is not None:
-        # the rewrite materialized CURRENT names/types: keep the field
-        # ids but reset the per-commit name maps to this one commit —
-        # compaction is what bounds commit_cols growth.  The id
-        # high-water mark MUST be pinned here: resetting commit_cols
-        # destroys the derive-from-history fallback, so without the
-        # persisted mark a post-compaction drop/re-add could re-issue
-        # a pre-compaction dropped id.
-        manifest["schema"] = m["schema"]
-        manifest["last_field_id"] = field_id_hwm(m)
-        manifest["commit_cols"] = {
-            str(vnew): {
-                str(f["id"]): f["name"] for f in m["schema"]
-            }
-        }
-    else:
-        # LEGACY FIELD-ID ADOPTION (ADVICE r13): chains that predate
-        # field-id schemas can only evolve after a rewrite
-        # materializes the current names/types — which is exactly
-        # what this compaction just did.  Synthesize fresh ids from
-        # the rewritten frame so _evolve_schema_commit's remediation
-        # ("a compaction rewrite adopts field-id schemas") is real,
-        # not a dead end.
+    schema = m.get("schema")
+    if schema is None:
+        # LEGACY FIELD-ID ADOPTION (ADVICE r13): the rewrite just
+        # materialized current names/types, so a pre-id chain is born
+        # here and can evolve from now on
         dtypes = dict(live.dtypes)
-        adopted = [
-            {"id": i + 1, "name": c, "type": dtypes[c]}
-            for i, c in enumerate(
-                c for c in manifest["columns"] if c in dtypes
-            )
-        ]
-        manifest["schema"] = adopted
-        manifest["last_field_id"] = max(
-            (f["id"] for f in adopted), default=0
+        schema = field_ids.fresh_fields(
+            (c, dtypes[c]) for c in manifest["columns"] if c in dtypes
         )
-        manifest["commit_cols"] = {
-            str(vnew): {str(f["id"]): f["name"] for f in adopted}
-        }
+    # one commit now holds every row: its id->name map replaces the
+    # history (compaction is what bounds that growth)
+    field_ids.stamp(manifest, m, schema, vnew, reset=True)
 
     try:
         main_log(table_dir).publish_once(vnew, manifest)
@@ -3028,38 +2776,21 @@ def mor_cdc_change_feed_span(
         feed = mor_cdc_change_feed(spark, table_dir, v, _ctx=ctx)
         if schema_to is not None:
             m_v = main_log(table_dir).load(v)
-            names_v = {
-                fld["id"]: fld["name"]
-                for fld in m_v.get("schema", [])
-            }
-            key_v = m_v["key"]
-            sel = [
+            names_v = field_ids.id_names(m_v.get("schema", []))
+            piece = feed.select(
                 F.col("commit"),
-                F.col(key_v).alias(key_to),
+                F.col(m_v["key"]).alias(key_to),
                 F.col("change"),
-            ]
-            for fld in schema_to:
-                name = fld["name"]
-                if name in (key_to, "version"):
-                    continue
-                old = names_v.get(fld["id"])
-                for side in ("pre", "post"):
-                    src = f"{side}_{old}" if old is not None else None
-                    if src is not None and src in feed.columns:
-                        sel.append(
-                            F.col(src)
-                            .cast(fld["type"])
-                            .alias(f"{side}_{name}")
-                        )
-                    else:
-                        # field younger than this commit: its default
-                        # (add-with-default) or NULL, typed
-                        sel.append(
-                            F.lit(fld.get("default"))
-                            .cast(fld["type"])
-                            .alias(f"{side}_{name}")
-                        )
-            piece = feed.select(*sel)
+                *[
+                    c
+                    for fld in schema_to
+                    if fld["name"] not in (key_to, "version")
+                    for side in ("pre_", "post_")
+                    for c in field_ids.project(
+                        [fld], names_v, feed.columns, side
+                    )
+                ],
+            )
         else:
             piece = feed
         out = piece if out is None else out.unionByName(piece)

@@ -680,6 +680,45 @@ def test_view_vacuum_retains_latest_and_raises_past_floor(
     assert (m2["a_version"], m2["b_version"]) == (5, 3)
 
 
+def test_view_vacuum_spares_a_refresh_still_being_staged(tmp_path):
+    """A refresh writes `v{head+1}/` before it publishes the manifest
+    naming it: a vacuum landing in that window must leave the staged
+    directory alone (the mor_cdc_vacuum rule), or the refresh then
+    publishes a manifest pointing at nothing.  retain < 1 would reclaim
+    the head refresh and is a ValueError."""
+    import pytest
+
+    from nyc_data_pipeline_spark.operators.incremental import (
+        view_log,
+        view_vacuum,
+    )
+
+    view_dir = tmp_path / "view"
+
+    def stage(v: int) -> dict:
+        paths = {}
+        for k in ("seg_view", "cust_view"):
+            d = view_dir / f"v{v}" / k
+            d.mkdir(parents=True)
+            (d / "part-00000.parquet").write_bytes(b"")
+            paths[k] = str(d)
+        return paths
+
+    log = view_log(str(view_dir))
+    for v in (1, 2):
+        log.publish(v, {"version": v, **stage(v)})
+    stage(3)  # refresh 3 staged, its manifest not yet published
+    stats = view_vacuum(str(view_dir), retain=1)
+    assert stats["retained"] == [2]
+    assert stats["dirs_removed"] == 1
+    assert not (view_dir / "v1").exists()
+    assert (view_dir / "v2" / "seg_view").is_dir()
+    assert (view_dir / "v3" / "seg_view").is_dir()
+    assert (view_dir / "v3" / "cust_view").is_dir()
+    with pytest.raises(ValueError, match="retain"):
+        view_vacuum(str(view_dir), retain=0)
+
+
 def test_catalog_view_ignores_unflipped_then_consumes_after_flip(
     spark, tmp_path
 ):

@@ -122,8 +122,8 @@ def _text(node) -> str:
     return node.value
 
 
-def _violations(tree: ast.AST) -> list[str]:
-    docstrings = {
+def _docstrings(tree: ast.AST) -> set[int]:
+    return {
         id(n.body[0].value)
         for n in ast.walk(tree)
         if isinstance(
@@ -133,6 +133,10 @@ def _violations(tree: ast.AST) -> list[str]:
         and n.body and isinstance(n.body[0], ast.Expr)
         and isinstance(n.body[0].value, ast.Constant)
     }
+
+
+def _violations(tree: ast.AST) -> list[str]:
+    docstrings = _docstrings(tree)
     out = []
     for n in ast.walk(tree):
         if isinstance(n, ast.JoinedStr) or (
@@ -183,3 +187,45 @@ PAT = re.compile(r"manifest-v(\\d+)\\.json")
 OLD = "manifest-v3.json"
 '''
     assert len(_violations(ast.parse(src))) == 5
+
+
+# --- guard: one module knows the field-id manifest keys ----------------
+
+_FIELD_ID_KEYS = {"commit_cols", "last_field_id"}
+
+
+def _field_id_key_uses(tree: ast.AST) -> list[str]:
+    docstrings = _docstrings(tree)
+    return [
+        f"line {n.lineno}: {n.value!r}"
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Constant) and n.value in _FIELD_ID_KEYS
+        and id(n) not in docstrings
+    ]
+
+
+def test_field_id_keys_only_in_field_ids():
+    """Only field_ids.py may read or write a manifest's `commit_cols`
+    or `last_field_id`: every lane births, stamps and projects field
+    ids through it."""
+    bad = {}
+    for path in sorted(_PKG.rglob("*.py")):
+        if path.name == "field_ids.py":
+            continue
+        v = _field_id_key_uses(ast.parse(path.read_text()))
+        if v:
+            bad[str(path.relative_to(_PKG))] = v
+    assert not bad, bad
+
+
+def test_field_id_guard_catches_hand_written_stamp():
+    src = '''
+def commit(manifest, prev, schema, version):
+    """Stamps commit_cols and last_field_id by hand."""
+    manifest["last_field_id"] = max(f["id"] for f in schema)
+    manifest["commit_cols"] = {
+        **prev.get("commit_cols", {}),
+        str(version): {str(f["id"]): f["name"] for f in schema},
+    }
+'''
+    assert len(_field_id_key_uses(ast.parse(src))) == 3

@@ -1690,6 +1690,42 @@ def test_cow_change_feed_composes_across_evolution(spark, tmp_path):
     assert s["post_amount"] - s["pre_amount"] == 1000
 
 
+def test_cow_change_feed_across_readd_reads_fresh_field_as_null(
+    spark, tmp_path
+):
+    """A feed spanning a drop/re-add of the same NAME projects the
+    FROM side by field id: the re-added field is a fresh id the from
+    version never stored, so its pre-image is NULL, not the dropped
+    column's values — untouched rows in the appended buckets must not
+    surface as updates."""
+    import pyspark.sql.functions as F
+    from nyc_data_pipeline_spark.sources.zonemap import (
+        _zm_append,
+        change_feed_from,
+        cow_add_column,
+        cow_drop_column,
+    )
+
+    table_dir = _cow_evo_table(spark, tmp_path, "cow_feed_readd")
+    cow_drop_column(table_dir, "cents")                  # v3
+    cow_add_column(table_dir, "cents", "int")            # v4: fresh id
+    batch = spark.range(5).select(
+        (F.col("id") + 5000).alias("k"),
+        (F.col("id") * 7).cast("int").alias("cents"),
+        (F.col("id") + 100).alias("day"),
+    )
+    _zm_append(spark, batch, table_dir, 5)
+    rows = {r["k"]: r for r in change_feed_from(
+        spark, table_dir, 2, 5
+    ).collect()}
+    assert set(rows) == set(range(5000, 5005))
+    assert all(
+        r["change"] == "insert" and r["pre_cents"] is None
+        and r["post_cents"] == (k - 5000) * 7
+        for k, r in rows.items()
+    )
+
+
 def test_cow_guard_parity_sweep_pins(spark, tmp_path):
     """VERDICT r14 ask #6 — the three r13 MOR-lane ADVICE hazards
     audited on the COW lane, each pinned:

@@ -3627,15 +3627,24 @@ def test_evolution_drop_max_id_then_add_column_reads_null(
 def test_field_ids_never_reissued_under_random_evolution(
     spark, tmp_path
 ):
-    """Property pin for the last_field_id ratchet: under seeded-random
-    sequences of add/drop/rename (drops biased toward the CURRENT
-    max-id field — the r14 failure shape), every id ever issued is
-    distinct, renames never change an id, and the persisted mark
-    equals the running maximum."""
+    """Property pin for the last_field_id ratchet, on both table
+    lanes (MOR chain and COW chain): under seeded-random sequences of
+    add/drop/rename (drops biased toward the CURRENT max-id field — the
+    r14 failure shape), every id ever issued is distinct, renames never
+    change an id, and the persisted mark equals the running maximum."""
     import json as _json
     import os as _os
     import random
 
+    from nyc_data_pipeline_spark.plans.two_phase import range_buckets
+    from nyc_data_pipeline_spark.sources.zonemap import (
+        _cluster_col_now,
+        _zm_versioned_write,
+        cow_add_column,
+        cow_drop_column,
+        cow_log,
+        cow_rename_column,
+    )
     from nyc_data_pipeline_spark.streaming.mor_cdc import (
         _latest_main_version,
         mor_cdc_add_column,
@@ -3644,60 +3653,86 @@ def test_field_ids_never_reissued_under_random_evolution(
         mor_cdc_rename_column,
     )
 
-    for seed in (1, 2, 3):
-        rng = random.Random(seed)
+    def mor_chain(table_dir):
         base = spark.range(20).select(
             F.col("id").alias("k"),
             F.lit(0).alias("version"),
             (F.col("id") * 10).cast("int").alias("cents"),
         )
-        table_dir = str(tmp_path / f"evo_prop_{seed}")
         mor_cdc_init(spark, base, table_dir, "k", n_files=2)
-        issued = {1, 2, 3}
-        n_allocated = 3
-        for step in range(15):
-            v = _latest_main_version(table_dir)
-            with open(_os.path.join(
-                table_dir, f"manifest-v{v}.json"
-            )) as f:
-                m = _json.load(f)
-            live = {f["name"]: f["id"] for f in m["schema"]}
-            droppable = [
-                n for n in live
-                if n not in ("version",) and n != m["key"]
-            ]
-            op = rng.choice(["add", "add", "drop", "rename"])
-            if op == "add":
-                mm = mor_cdc_add_column(
-                    table_dir, f"c{seed}_{step}", "int"
-                )
-                nid = next(
-                    f["id"] for f in mm["schema"]
-                    if f["name"] == f"c{seed}_{step}"
-                )
-                assert nid not in issued  # NEVER re-issued
-                issued.add(nid)
-                n_allocated += 1
-                assert mm["last_field_id"] == max(issued)
-            elif op == "drop" and droppable:
-                # bias toward the max-id field: the r14 failure shape
-                target = max(droppable, key=lambda n: live[n])
-                if rng.random() < 0.3:
-                    target = rng.choice(droppable)
-                mor_cdc_drop_column(table_dir, target)
-            elif op == "rename" and droppable:
-                src = rng.choice(droppable)
-                mm = mor_cdc_rename_column(
-                    table_dir, src, f"r{seed}_{step}"
-                )
-                assert (
-                    next(
+
+    def cow_chain(table_dir):
+        base = spark.range(20).select(
+            F.col("id").alias("k"),
+            (F.col("id") * 10).cast("int").alias("cents"),
+            (F.col("id") + 100).alias("day"),
+        )
+        b1 = range_buckets(base, "day", 2).withColumnRenamed(
+            "bucket", "zb"
+        ).drop("lo", "hi")
+        _zm_versioned_write(
+            b1, table_dir, 1, ["0", "1"], None, (100, 119),
+            cluster_col="day",
+        )
+
+    lanes = {
+        # chain builder, head, ops, columns never dropped or renamed
+        "mor": (
+            mor_chain, _latest_main_version,
+            (mor_cdc_add_column, mor_cdc_drop_column,
+             mor_cdc_rename_column),
+            lambda m: {"version", m["key"]},
+        ),
+        "cow": (
+            cow_chain, lambda d: cow_log(d).head(),
+            (cow_add_column, cow_drop_column, cow_rename_column),
+            lambda m: {_cluster_col_now(m)},
+        ),
+    }
+    for lane, (chain, head, ops, protected) in lanes.items():
+        add_column, drop_column, rename_column = ops
+        for seed in (1, 2, 3):
+            rng = random.Random(seed)
+            table_dir = str(tmp_path / f"evo_prop_{lane}_{seed}")
+            chain(table_dir)
+            issued = {1, 2, 3}
+            n_allocated = 3
+            for step in range(15):
+                v = head(table_dir)
+                with open(_os.path.join(
+                    table_dir, f"manifest-v{v}.json"
+                )) as f:
+                    m = _json.load(f)
+                live = {f["name"]: f["id"] for f in m["schema"]}
+                droppable = [n for n in live if n not in protected(m)]
+                op = rng.choice(["add", "add", "drop", "rename"])
+                if op == "add":
+                    mm = add_column(table_dir, f"c{seed}_{step}", "int")
+                    nid = next(
                         f["id"] for f in mm["schema"]
-                        if f["name"] == f"r{seed}_{step}"
+                        if f["name"] == f"c{seed}_{step}"
                     )
-                    == live[src]
-                )  # renames keep their id
-        assert len(issued) == n_allocated  # bag of ids stayed a set
+                    assert nid not in issued  # NEVER re-issued
+                    issued.add(nid)
+                    n_allocated += 1
+                    assert mm["last_field_id"] == max(issued)
+                elif op == "drop" and droppable:
+                    # bias toward the max-id field: the r14 failure shape
+                    target = max(droppable, key=lambda n: live[n])
+                    if rng.random() < 0.3:
+                        target = rng.choice(droppable)
+                    drop_column(table_dir, target)
+                elif op == "rename" and droppable:
+                    src = rng.choice(droppable)
+                    mm = rename_column(table_dir, src, f"r{seed}_{step}")
+                    assert (
+                        next(
+                            f["id"] for f in mm["schema"]
+                            if f["name"] == f"r{seed}_{step}"
+                        )
+                        == live[src]
+                    )  # renames keep their id
+            assert len(issued) == n_allocated  # bag of ids stayed a set
 
 
 def test_evolution_key_rename_keeps_skipping(spark, tmp_path):
